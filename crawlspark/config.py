@@ -231,32 +231,20 @@ class CrawlConfig:
     # engine-side knobs (no semantic effect):
     shuffle_partitions: int | None = None
     bloom_prefilter_min_ledger: int = 100_000
-    # TOTAL filter bits. bloom_shards=0 keeps the driver-held bitmap
-    # (fine while bits fit driver memory; it self-monitors fill and
-    # auto-disables on saturation). bloom_shards=N (power of two >= 2)
-    # switches to the sharded DISTRIBUTED filter — per-shard bitmaps
-    # of bloom_bits/N bits living in a dim frame, cogroup-applied
-    # co-partitioned with candidates — the shape that sizes to 10^10
-    # URLs (~12 GB of bitmap) without a driver array.
-    # 2^24 bits = 2 MB of driver array ≈ 0.33 fill at 1.7M URLs (k=4)
-    # — covers multi-million-URL crawls without mid-run saturation
-    # (the r4 default 2^22 auto-disabled at ~1.7M ledger rows on the
-    # bench site); still trivially driver-safe. Size up or shard for
-    # bigger frontiers.
+    # bits of the driver-held URL-seen Bloom bitmap (a power of two
+    # >= 64; bloom_bits/8 bytes on the driver whatever the crawl size).
+    # 2^24 bits = 2 MB ≈ 0.33 fill at 1.7M URLs (k=4). Past that the
+    # filter auto-disables on saturation and the exact anti-join runs
+    # alone, so an undersized bitmap costs speed, never correctness.
     bloom_bits: int = 1 << 24
-    bloom_shards: int = 0
-    # URL-seen prefilter flavor — the north rule names BOTH shapes
-    # ("partitioned Bloom/cuckoo filters"). "bloom" (default) probes
-    # k bit positions; "cuckoo" (requires bloom_shards > 0) stores
-    # 16-bit fingerprints in 4-slot buckets — slightly more memory per
-    # key at low fill, but supports delete_df (recrawl eviction) and a
-    # lower false-'maybe' rate near capacity. Both are PREfilters: the
-    # exact anti-join always decides the real URL-seen set, so the
-    # flavor has no semantic effect. bloom_bits is interpreted as the
-    # TOTAL table bits either way (cuckoo: 64 bits per bucket).
-    urlseen_filter: str = "bloom"
     image_w: int = 32
     image_h: int = 32
+
+
+def bloom_bits_ok(bits) -> bool:
+    """The Bloom bitmap is whole uint64 words addressed by a bit mask,
+    so its size must be a power of two of at least 64 bits."""
+    return isinstance(bits, int) and bits >= 64 and bits & (bits - 1) == 0
 
 
 def validate(cfg: CrawlConfig) -> list[str]:
@@ -301,16 +289,9 @@ def validate(cfg: CrawlConfig) -> list[str]:
             errs.append(f"delay_patterns: negative delay {d}")
     if cfg.orphan_strategy not in ("PROCESS", "DELETE", "IGNORE"):
         errs.append(f"orphan_strategy: unknown {cfg.orphan_strategy!r}")
-    if cfg.urlseen_filter not in ("bloom", "cuckoo"):
+    if not bloom_bits_ok(cfg.bloom_bits):
         errs.append(
-            f"urlseen_filter must be 'bloom' or 'cuckoo', "
-            f"got {cfg.urlseen_filter!r}"
-        )
-    elif cfg.urlseen_filter == "cuckoo" and cfg.bloom_shards <= 0:
-        errs.append(
-            "urlseen_filter='cuckoo' requires bloom_shards > 0 "
-            "(the cuckoo filter is distributed-only; no driver-held "
-            "variant exists)"
+            f"bloom_bits must be a power of two >= 64, got {cfg.bloom_bits!r}"
         )
     for outcome, strat in cfg.spoiled_strategies:
         if strat not in ("DELETE", "GRACE_ONCE", "IGNORE"):

@@ -114,8 +114,15 @@ def render_text_png(text: str) -> bytes:
 
 
 def ocr_image(img: np.ndarray) -> str:
-    """(h, w, 3) uint8 raster -> text by fixed-pitch template match.
-    Unmatched glyph cells read as '?' (never silently dropped)."""
+    """(h, w, channels) or (h, w) grayscale uint8 raster -> text by
+    fixed-pitch template match. Unmatched glyph cells read as '?'
+    (never silently dropped)."""
+    if img.ndim == 2:
+        img = np.stack([img] * 3, axis=2)
+    elif img.ndim != 3:
+        raise ValueError(
+            f"ocr_image expects a 2-D or 3-D raster, got {img.ndim}-D"
+        )
     h, w = img.shape[0], img.shape[1]
     if h < 2 * PAD + FONT_H:
         return ""

@@ -11,13 +11,15 @@
   (DedupService.java:88-99 "first reference wins", made deterministic
   by ordering on (parent_seq, out_pos) instead of thread arrival).
 
-* ``BloomPrefilter`` — the partitioned URL-seen Bloom filter from the
-  north rule: per-partition bitmaps built executor-side over
-  ``xxhash64(url)``, OR-reduced, broadcast, then applied as a
+* ``BloomPrefilter`` — the crawl's one URL-seen prefilter: a single
+  driver-held bitmap of ``bloom_bits/8`` bytes, whatever the crawl
+  size. Per-partition bitmaps are built executor-side over
+  ``xxhash64(url)``, OR-reduced into it, broadcast, then applied as a
   vectorized membership test. A Bloom hit is only *probable*, so the
   exact ledger anti-join (CrawlerEntryLedger.java:361 exact-key dedup)
   always runs after it on the survivors — the filter only shrinks the
-  anti-join's probe side.
+  anti-join's probe side. When the bitmap saturates the filter
+  disables itself and the anti-join runs alone.
 """
 
 from __future__ import annotations
@@ -28,6 +30,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..config import bloom_bits_ok
 
 
 def first_wins(
@@ -307,7 +311,10 @@ class BloomPrefilter:
     DISABLE_FILL = 0.75
 
     def __init__(self, bits: int = 1 << 22):
-        assert bits & (bits - 1) == 0, "bits must be a power of two"
+        if not bloom_bits_ok(bits):
+            raise ValueError(
+                f"bloom_bits must be a power of two >= 64, got {bits!r}"
+            )
         self.bits = bits
         self.words = np.zeros(bits // 64, dtype=np.uint64)
         self.n_keys = 0  # inserts seen (duplicates counted once-ish)
@@ -330,8 +337,7 @@ class BloomPrefilter:
                 f"{self.DISABLE_FILL}, ~{self.n_keys} keys into "
                 f"{self.bits} bits): auto-disabled — candidates now "
                 f"flow straight to the exact anti-join. Size "
-                f"bloom_bits for the expected URL count or switch to "
-                f"the sharded distributed filter (bloom_shards > 0).",
+                f"bloom_bits for the expected URL count.",
                 RuntimeWarning,
                 stacklevel=3,
             )
@@ -341,8 +347,7 @@ class BloomPrefilter:
                 f"BloomPrefilter filling up (fill={fill:.2f} >= "
                 f"{self.WARN_FILL}, ~{self.n_keys} keys into "
                 f"{self.bits} bits): false-'maybe' rate ~"
-                f"{fill ** self.K:.2f} and climbing. Raise bloom_bits "
-                f"or use bloom_shards for a distributed filter.",
+                f"{fill ** self.K:.2f} and climbing. Raise bloom_bits.",
                 RuntimeWarning,
                 stacklevel=3,
             )
@@ -393,7 +398,7 @@ class BloomPrefilter:
         self._check_saturation()
 
     def filter_candidates(
-        self, df: DataFrame, key_col: str = "seen_key", caches: list | None = None
+        self, df: DataFrame, key_col: str = "seen_key"
     ) -> tuple[DataFrame, DataFrame]:
         """Split candidates into (maybe_seen, definitely_new)."""
         if not self.enabled:
@@ -425,633 +430,6 @@ class BloomPrefilter:
             flagged.filter(F.col("__maybe")).drop("__maybe"),
             flagged.filter(~F.col("__maybe")).drop("__maybe"),
         )
-
-
-class ShardedBloomPrefilter:
-    """Distributed, sharded URL-seen Bloom filter — the north rule's
-    "partitioned Bloom filter" with NOTHING living on the driver.
-
-    The 64-bit seen-key's TOP ``log2(n_shards)`` bits pick a shard;
-    each shard owns an independent ``bits_per_shard`` bitmap stored as
-    one binary row of a distributed dim frame ``(shard, words,
-    set_bits)``. Probe positions use only the key's LOW bits
-    (``_probe_positions`` masks to ``bits_per_shard``), so shard
-    routing and probing never share entropy.
-
-    * build/merge: keys → groupBy(shard) → per-shard bitmap OR-fold —
-      one keyed shuffle, executor memory O(bits_per_shard).
-    * apply: candidates cogrouped with the dim on shard via
-      ``applyInPandas`` — co-partitioned, each task holds exactly one
-      shard bitmap + its candidate rows. No broadcast, no driver
-      array: total filter memory is bits/8 bytes SPREAD over the
-      cluster, so sizing for 10^10 keys (~12 GB at 10 bits/key) is a
-      per-executor cost of bits/(8·n_shards), not a driver OOM.
-    * saturation: exact per-shard popcounts ride the dim; the merge
-      returns the worst shard's fill ratio, and past DISABLE_FILL the
-      filter auto-disables with a loud warning (the exact anti-join
-      downstream keeps correctness; the filter only shrinks its probe
-      side — same contract as BloomPrefilter).
-
-    Reference parity: the single-array BloomPrefilter and this one
-    admit identical "definitely new" verdicts for the same (bits,
-    keys) only probabilistically — both are PREfilters; the engine's
-    fetch order and URL-seen set are decided by the exact anti-join
-    either way (CrawlerEntryLedger.java:361 exact-key dedup).
-    """
-
-    K = BloomPrefilter.K
-    WARN_FILL = BloomPrefilter.WARN_FILL
-    DISABLE_FILL = BloomPrefilter.DISABLE_FILL
-
-    def __init__(self, bits_per_shard: int = 1 << 16,
-                 n_shards: int = 64):
-        assert bits_per_shard & (bits_per_shard - 1) == 0, (
-            "bits_per_shard must be a power of two"
-        )
-        assert n_shards >= 2 and n_shards & (n_shards - 1) == 0, (
-            "n_shards must be a power of two >= 2"
-        )
-        self.bits = bits_per_shard
-        self.n_shards = n_shards
-        self.shard_shift = 64 - n_shards.bit_length() + 1  # 64-log2(n)
-        self.dim: DataFrame | None = None  # (shard, words, set_bits)
-        self.n_keys = 0
-        self.enabled = True
-        self._warned = False
-
-    _DIM_SCHEMA = "shard int, words binary, set_bits long, n_keys long"
-
-    def _shard_col(self, key_col: str):
-        return F.shiftrightunsigned(
-            F.col(key_col), self.shard_shift
-        ).cast("int")
-
-    def _delta_dim(self, df: DataFrame, key_col: str) -> DataFrame:
-        bits = self.bits
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            words = np.zeros(bits // 64, dtype=np.uint64)
-            keys = pdf["__k"].to_numpy()
-            for pos in BloomPrefilter._probe_positions(keys, bits):
-                np.bitwise_or.at(
-                    words, pos // 64,
-                    np.uint64(1) << (pos % 64).astype(np.uint64),
-                )
-            return pd.DataFrame({
-                "shard": [int(pdf["__shard"].iloc[0])],
-                "words": [words.tobytes()],
-                "set_bits": [int(
-                    np.unpackbits(words.view(np.uint8)).sum()
-                )],
-                "n_keys": [len(pdf)],
-            })
-
-        return (
-            df.select(
-                F.col(key_col).alias("__k"),
-                self._shard_col(key_col).alias("__shard"),
-            )
-            .groupBy("__shard")
-            .applyInPandas(build, schema=self._DIM_SCHEMA)
-        )
-
-    def add_df(self, df: DataFrame, key_col: str = "seen_key") -> None:
-        """OR a key frame into the filter: delta bitmaps per shard,
-        merged with the standing dim by one keyed shuffle. The merged
-        dim is eagerly localCheckpointed (flat plan — supersteps would
-        otherwise nest every prior merge's lineage) and the old one
-        released."""
-        if not self.enabled:
-            return
-        bits = self.bits
-        delta = self._delta_dim(df, key_col)
-        if self.dim is None:
-            merged = delta
-        else:
-            def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-                words = np.zeros(bits // 64, dtype=np.uint64)
-                for b in pdf["words"]:
-                    words |= np.frombuffer(b, dtype=np.uint64)
-                return pd.DataFrame({
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "words": [words.tobytes()],
-                    "set_bits": [int(
-                        np.unpackbits(words.view(np.uint8)).sum()
-                    )],
-                    "n_keys": [int(pdf["n_keys"].sum())],
-                })
-
-            merged = (
-                self.dim.unionByName(delta)
-                .groupBy("shard")
-                .applyInPandas(fold, schema=self._DIM_SCHEMA)
-            )
-        old = self.dim
-        self.dim = merged.localCheckpoint(eager=True)
-        if old is not None:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        # saturation gauge: n_shards tiny rows — a metrics aggregate,
-        # not row data
-        agg = self.dim.agg(
-            F.max(F.col("set_bits")).alias("worst"),
-            F.sum(F.col("n_keys")).alias("n"),
-        ).collect()[0]
-        self.n_keys = int(agg["n"] or 0)
-        self._check_saturation(float(agg["worst"] or 0) / bits)
-
-    def _check_saturation(self, fill: float) -> None:
-        if fill >= self.DISABLE_FILL and self.enabled:
-            self.enabled = False
-            if self.dim is not None:
-                try:
-                    self.dim.unpersist()
-                except Exception:
-                    pass
-            warnings.warn(
-                f"ShardedBloomPrefilter saturated (worst shard fill="
-                f"{fill:.2f} >= {self.DISABLE_FILL}, ~{self.n_keys} "
-                f"keys into {self.n_shards}x{self.bits} bits): "
-                f"auto-disabled — candidates flow straight to the "
-                f"exact anti-join. Raise bits_per_shard/n_shards for "
-                f"the expected URL count.",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-        elif fill >= self.WARN_FILL and not self._warned:
-            self._warned = True
-            warnings.warn(
-                f"ShardedBloomPrefilter filling up (worst shard fill="
-                f"{fill:.2f} >= {self.WARN_FILL}, ~{self.n_keys} keys "
-                f"into {self.n_shards}x{self.bits} bits): "
-                f"false-'maybe' rate ~{fill ** self.K:.2f} and "
-                f"climbing.",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-
-    def filter_candidates(
-        self, df: DataFrame, key_col: str = "seen_key",
-        caches: list | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
-        """Split candidates into (maybe_seen, definitely_new) by
-        cogrouping candidates with the shard dim — each task sees one
-        shard's bitmap + that shard's candidate rows, co-partitioned
-        on the shard key. A shard with no bitmap row has no seen keys:
-        its candidates are definitely new."""
-        if not self.enabled or self.dim is None:
-            return df, df.limit(0)
-        bits = self.bits
-        cols = df.columns
-        cand = df.withColumn("__shard", self._shard_col(key_col))
-        out_schema = (
-            cand.withColumn("__maybe", F.lit(True)).drop("__shard")
-            .schema
-        )
-
-        def apply(left: pd.DataFrame, right: pd.DataFrame
-                  ) -> pd.DataFrame:
-            left = left.drop(columns="__shard")
-            if len(left) == 0:
-                return left.assign(__maybe=pd.Series([], dtype=bool))
-            if len(right) == 0:
-                return left.assign(__maybe=False)
-            words = np.frombuffer(
-                right["words"].iloc[0], dtype=np.uint64
-            )
-            k = left[key_col].to_numpy()
-            hit = np.ones(len(k), dtype=bool)
-            for pos in BloomPrefilter._probe_positions(k, bits):
-                bitset = (
-                    words[pos // 64] >> (pos % 64).astype(np.uint64)
-                ) & np.uint64(1)
-                hit &= bitset.astype(bool)
-            return left.assign(__maybe=hit)
-
-        flagged = (
-            cand.groupBy("__shard")
-            .cogroup(self.dim.groupBy("shard"))
-            .applyInPandas(apply, schema=out_schema)
-        )
-        if caches is not None:
-            # the two output branches each re-trigger the cogroup
-            # shuffle; a step-scoped cache makes it run once
-            flagged = flagged.cache()
-            caches.append(flagged)
-        return (
-            flagged.filter(F.col("__maybe")).select(*cols),
-            flagged.filter(~F.col("__maybe")).select(*cols),
-        )
-
-    def release(self) -> None:
-        if self.dim is not None:
-            try:
-                self.dim.unpersist()
-            except Exception:
-                pass
-            self.dim = None
-
-
-class ShardedCuckooPrefilter:
-    """Distributed, sharded URL-seen CUCKOO filter — the second shape
-    the north rule names ("partitioned Bloom/cuckoo filters keyed by
-    canonicalized-URL xxhash64"), with the same dim-frame architecture
-    as :class:`ShardedBloomPrefilter` (nothing on the driver) plus the
-    one capability a Bloom filter cannot offer: **deletion**
-    (``delete_df`` — e.g. evicting a URL the recrawl resolver marks
-    due, so it re-queues without rebuilding the filter).
-
-    Partial-key cuckoo hashing (Fan et al., "Cuckoo Filter: Practically
-    Better Than Bloom", CoNEXT 2014 — public paper): per shard, a table
-    of ``n_buckets`` buckets x 4 slots of 16-bit fingerprints. For a
-    64-bit seen-key ``k``:
-
-    * shard  = top ``log2(n_shards)`` bits (same routing as the Bloom
-      shards — co-partitionable with candidates),
-    * fp     = bits 32..47, mapped away from 0 (0 = empty slot),
-    * i1     = low bits (``k & (n_buckets-1)``),
-    * i2     = ``i1 XOR h(fp)`` — derivable from (i1, fp) alone, which
-      is what makes table MERGES possible: an occupied (bucket, fp)
-      slot re-inserts into another table without the original key.
-
-    Contract parity with the Bloom prefilters: *zero false negatives*
-    while enabled. A cuckoo table can refuse an insert (all kicks
-    exhausted); an absent key would probe "definitely new" and skip
-    the exact anti-join, so ANY insert failure — like saturation —
-    auto-disables the whole filter with a loud warning before the next
-    ``filter_candidates`` call (everything then flows to the exact
-    anti-join; correctness never depends on the prefilter).
-
-    Deleting a key that was never added can evict another key's
-    fingerprint (shared-slot ambiguity — inherent to cuckoo filters);
-    callers must only delete keys previously added, mirroring the
-    reference ledger's delete-by-known-reference
-    (CrawlerEntryLedger.java:206-241).
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 500
-    WARN_FILL = 0.80
-    DISABLE_FILL = 0.92
-
-    def __init__(self, buckets_per_shard: int = 1 << 12,
-                 n_shards: int = 64):
-        assert buckets_per_shard & (buckets_per_shard - 1) == 0, (
-            "buckets_per_shard must be a power of two"
-        )
-        assert n_shards >= 2 and n_shards & (n_shards - 1) == 0, (
-            "n_shards must be a power of two >= 2"
-        )
-        self.n_buckets = buckets_per_shard
-        self.n_shards = n_shards
-        self.shard_shift = 64 - n_shards.bit_length() + 1
-        self.dim: DataFrame | None = None
-        self.n_keys = 0
-        self.enabled = True
-        self._warned = False
-
-    _DIM_SCHEMA = (
-        "shard int, table binary, used_slots long, n_keys long, "
-        "failed long"
-    )
-
-    def _shard_col(self, key_col: str):
-        return F.shiftrightunsigned(
-            F.col(key_col), self.shard_shift
-        ).cast("int")
-
-    # ---- pure-numpy core (executor-side, Arrow-batched) ----
-
-    @staticmethod
-    def _fp_i1(keys: np.ndarray, n_buckets: int):
-        k = keys.astype(np.int64).view(np.uint64)
-        fp = ((k >> np.uint64(32)) & np.uint64(0xFFFF)).astype(
-            np.uint16
-        )
-        fp = np.where(fp == 0, np.uint16(1), fp)
-        i1 = (k & np.uint64(n_buckets - 1)).astype(np.int64)
-        return fp, i1
-
-    @staticmethod
-    def _alt(fp, n_buckets: int):
-        """Alternate-bucket offset h(fp); i2 = i XOR h(fp). Works on
-        scalars and arrays; multiply-hash spreads the 16-bit fp over
-        the bucket space."""
-        return (
-            np.asarray(fp).astype(np.uint64) * np.uint64(0x5BD1E995)
-            & np.uint64(n_buckets - 1)
-        ).astype(np.int64)
-
-    @classmethod
-    def _contains(cls, table: np.ndarray, n_buckets: int,
-                  keys: np.ndarray) -> np.ndarray:
-        t = table.reshape(n_buckets, cls.SLOTS)
-        fp, i1 = cls._fp_i1(keys, n_buckets)
-        i2 = i1 ^ cls._alt(fp, n_buckets)
-        f = fp[:, None]
-        return (t[i1] == f).any(axis=1) | (t[i2] == f).any(axis=1)
-
-    @classmethod
-    def _insert_pairs(cls, table: np.ndarray, n_buckets: int,
-                      fps: np.ndarray, buckets: np.ndarray) -> int:
-        """Insert (fp, bucket) pairs with kick eviction; returns the
-        number of pairs that exhausted MAX_KICKS (table full). The
-        kick slot choice is deterministic ((fp + kick) % SLOTS), so
-        resumed runs rebuild byte-identical tables."""
-        t = table.reshape(n_buckets, cls.SLOTS)
-        failed = 0
-        for fp, b in zip(fps.tolist(), buckets.tolist()):
-            cur_fp, cur_b = int(fp), int(b)
-            placed = False
-            for kick in range(cls.MAX_KICKS):
-                row = t[cur_b]
-                z = np.nonzero(row == 0)[0]
-                if z.size:
-                    row[z[0]] = cur_fp
-                    placed = True
-                    break
-                alt_b = cur_b ^ int(cls._alt(cur_fp, n_buckets))
-                row2 = t[alt_b]
-                z2 = np.nonzero(row2 == 0)[0]
-                if z2.size:
-                    row2[z2[0]] = cur_fp
-                    placed = True
-                    break
-                s = (cur_fp + kick) % cls.SLOTS
-                victim = int(row[s])
-                row[s] = cur_fp
-                cur_fp = victim
-                cur_b = cur_b ^ int(cls._alt(victim, n_buckets))
-            if not placed:
-                failed += 1
-        return failed
-
-    @classmethod
-    def _insert_keys(cls, table: np.ndarray, n_buckets: int,
-                     keys: np.ndarray) -> tuple[int, int]:
-        """Insert keys not already present; returns (n_new, failed).
-        Presence + dedup are vectorized; only the genuinely new
-        (fp, bucket) pairs take the per-pair kick loop."""
-        if len(keys) == 0:
-            return 0, 0
-        present = cls._contains(table, n_buckets, keys)
-        keys = keys[~present]
-        if len(keys) == 0:
-            return 0, 0
-        fp, i1 = cls._fp_i1(keys, n_buckets)
-        code = np.unique(
-            i1.astype(np.uint64) << np.uint64(16) | fp.astype(np.uint64)
-        )
-        u_fp = (code & np.uint64(0xFFFF)).astype(np.uint16)
-        u_b = (code >> np.uint64(16)).astype(np.int64)
-        failed = cls._insert_pairs(table, n_buckets, u_fp, u_b)
-        return len(code) - failed, failed
-
-    # ---- distributed surface (mirrors ShardedBloomPrefilter) ----
-
-    def _delta_dim(self, df: DataFrame, key_col: str) -> DataFrame:
-        n_buckets, slots = self.n_buckets, self.SLOTS
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            table = np.zeros(n_buckets * slots, dtype=np.uint16)
-            n_new, failed = ShardedCuckooPrefilter._insert_keys(
-                table, n_buckets, pdf["__k"].to_numpy()
-            )
-            return pd.DataFrame({
-                "shard": [int(pdf["__shard"].iloc[0])],
-                "table": [table.tobytes()],
-                "used_slots": [int(np.count_nonzero(table))],
-                "n_keys": [n_new],
-                "failed": [failed],
-            })
-
-        return (
-            df.select(
-                F.col(key_col).alias("__k"),
-                self._shard_col(key_col).alias("__shard"),
-            )
-            .groupBy("__shard")
-            .applyInPandas(build, schema=self._DIM_SCHEMA)
-        )
-
-    def add_df(self, df: DataFrame, key_col: str = "seen_key") -> None:
-        """Insert a key frame: per-shard delta tables, folded into the
-        standing dim by one keyed shuffle (occupied (bucket, fp) slots
-        of the smaller tables re-inserted into the largest-population
-        one — the XOR identity makes slot pairs key-free). Eagerly
-        localCheckpointed like the Bloom dim; any insert failure
-        disables the filter before the next probe."""
-        if not self.enabled:
-            return
-        n_buckets, slots = self.n_buckets, self.SLOTS
-        delta = self._delta_dim(df, key_col)
-        if self.dim is None:
-            merged = delta
-        else:
-            def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-                order = pdf["used_slots"].to_numpy().argsort()[::-1]
-                base = np.frombuffer(
-                    pdf["table"].iloc[int(order[0])], dtype=np.uint16
-                ).copy()
-                failed = int(pdf["failed"].sum())
-                n_keys = int(pdf["n_keys"].iloc[int(order[0])])
-                t_base = base.reshape(n_buckets,
-                                      ShardedCuckooPrefilter.SLOTS)
-                for j in order[1:]:
-                    t = np.frombuffer(
-                        pdf["table"].iloc[int(j)], dtype=np.uint16
-                    ).reshape(n_buckets, ShardedCuckooPrefilter.SLOTS)
-                    rows, cols = np.nonzero(t)
-                    fps = t[rows, cols]
-                    # skip pairs already present in base (re-added keys)
-                    alt = rows ^ ShardedCuckooPrefilter._alt(
-                        fps, n_buckets
-                    )
-                    f = fps[:, None]
-                    dup = (t_base[rows] == f).any(axis=1) | (
-                        t_base[alt] == f
-                    ).any(axis=1)
-                    failed += ShardedCuckooPrefilter._insert_pairs(
-                        base, n_buckets, fps[~dup], rows[~dup]
-                    )
-                    n_keys += int(np.count_nonzero(~dup))
-                return pd.DataFrame({
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "table": [base.tobytes()],
-                    "used_slots": [int(np.count_nonzero(base))],
-                    "n_keys": [n_keys],
-                    "failed": [failed],
-                })
-
-            merged = (
-                self.dim.unionByName(delta)
-                .groupBy("shard")
-                .applyInPandas(fold, schema=self._DIM_SCHEMA)
-            )
-        old = self.dim
-        self.dim = merged.localCheckpoint(eager=True)
-        if old is not None:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        agg = self.dim.agg(
-            F.max(F.col("used_slots")).alias("worst"),
-            F.sum(F.col("n_keys")).alias("n"),
-            F.sum(F.col("failed")).alias("failed"),
-        ).collect()[0]
-        self.n_keys = int(agg["n"] or 0)
-        self._check_saturation(
-            float(agg["worst"] or 0) / (n_buckets * slots),
-            int(agg["failed"] or 0),
-        )
-
-    def delete_df(self, df: DataFrame,
-                  key_col: str = "seen_key") -> None:
-        """Remove one fingerprint copy per key from its (i1, i2) pair —
-        the cuckoo capability Bloom lacks. Only delete keys previously
-        added (see class docstring)."""
-        if not self.enabled or self.dim is None:
-            return
-        n_buckets = self.n_buckets
-
-        def fold(pdf: pd.DataFrame, keys_pdf: pd.DataFrame
-                 ) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pdf
-            table = np.frombuffer(
-                pdf["table"].iloc[0], dtype=np.uint16
-            ).copy()
-            t = table.reshape(n_buckets, ShardedCuckooPrefilter.SLOTS)
-            removed = 0
-            if len(keys_pdf):
-                fp, i1 = ShardedCuckooPrefilter._fp_i1(
-                    keys_pdf["__k"].to_numpy(), n_buckets
-                )
-                i2 = i1 ^ ShardedCuckooPrefilter._alt(fp, n_buckets)
-                for f, b1, b2 in zip(
-                    fp.tolist(), i1.tolist(), i2.tolist()
-                ):
-                    for b in (b1, b2):
-                        hit = np.nonzero(t[b] == f)[0]
-                        if hit.size:
-                            t[b][hit[0]] = 0
-                            removed += 1
-                            break
-            return pd.DataFrame({
-                "shard": [int(pdf["shard"].iloc[0])],
-                "table": [table.tobytes()],
-                "used_slots": [int(np.count_nonzero(table))],
-                "n_keys": [max(0, int(pdf["n_keys"].iloc[0]) - removed)],
-                "failed": [int(pdf["failed"].iloc[0])],
-            })
-
-        keys = df.select(
-            F.col(key_col).alias("__k"),
-            self._shard_col(key_col).alias("__shard"),
-        )
-        merged = (
-            self.dim.groupBy("shard")
-            .cogroup(keys.groupBy("__shard"))
-            .applyInPandas(
-                lambda left, right: fold(left, right),
-                schema=self._DIM_SCHEMA,
-            )
-        )
-        old = self.dim
-        self.dim = merged.localCheckpoint(eager=True)
-        if old is not None:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-
-    def _check_saturation(self, fill: float, failed: int) -> None:
-        if (failed > 0 or fill >= self.DISABLE_FILL) and self.enabled:
-            self.enabled = False
-            if self.dim is not None:
-                try:
-                    self.dim.unpersist()
-                except Exception:
-                    pass
-            warnings.warn(
-                f"ShardedCuckooPrefilter saturated (worst shard fill="
-                f"{fill:.2f}, {failed} failed inserts, ~{self.n_keys} "
-                f"keys into {self.n_shards}x{self.n_buckets}x"
-                f"{self.SLOTS} slots): auto-disabled — candidates flow "
-                f"straight to the exact anti-join (an unstored key "
-                f"must never read 'definitely new'). Raise "
-                f"buckets_per_shard/n_shards for the expected URL "
-                f"count.",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-        elif fill >= self.WARN_FILL and not self._warned:
-            self._warned = True
-            warnings.warn(
-                f"ShardedCuckooPrefilter filling up (worst shard fill="
-                f"{fill:.2f} >= {self.WARN_FILL}, ~{self.n_keys} keys):"
-                f" kick chains lengthen and an insert failure will "
-                f"auto-disable the filter.",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-
-    def filter_candidates(
-        self, df: DataFrame, key_col: str = "seen_key",
-        caches: list | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
-        """(maybe_seen, definitely_new) — identical contract and plan
-        shape to the sharded Bloom: candidates cogrouped with the shard
-        dim, one co-partitioned task per shard, vectorized fingerprint
-        probes."""
-        if not self.enabled or self.dim is None:
-            return df, df.limit(0)
-        n_buckets = self.n_buckets
-        cols = df.columns
-        cand = df.withColumn("__shard", self._shard_col(key_col))
-        out_schema = (
-            cand.withColumn("__maybe", F.lit(True)).drop("__shard")
-            .schema
-        )
-
-        def apply(left: pd.DataFrame, right: pd.DataFrame
-                  ) -> pd.DataFrame:
-            left = left.drop(columns="__shard")
-            if len(left) == 0:
-                return left.assign(__maybe=pd.Series([], dtype=bool))
-            if len(right) == 0:
-                return left.assign(__maybe=False)
-            table = np.frombuffer(
-                right["table"].iloc[0], dtype=np.uint16
-            )
-            hit = ShardedCuckooPrefilter._contains(
-                table, n_buckets, left[key_col].to_numpy()
-            )
-            return left.assign(__maybe=hit)
-
-        flagged = (
-            cand.groupBy("__shard")
-            .cogroup(self.dim.groupBy("shard"))
-            .applyInPandas(apply, schema=out_schema)
-        )
-        if caches is not None:
-            flagged = flagged.cache()
-            caches.append(flagged)
-        return (
-            flagged.filter(F.col("__maybe")).select(*cols),
-            flagged.filter(~F.col("__maybe")).select(*cols),
-        )
-
-    def release(self) -> None:
-        if self.dim is not None:
-            try:
-                self.dim.unpersist()
-            except Exception:
-                pass
-            self.dim = None
 
 
 def connected_components(

@@ -821,6 +821,23 @@ def _ivf_train_spark(
     return cents
 
 
+def _codebook(
+    emb: DataFrame,
+    centroids: list[list[float]] | None,
+    n_cells: int,
+    n_dims: int,
+    n_iters: int,
+    sample_cap: int,
+) -> list[list[float]]:
+    """The caller's codebook, or a freshly trained one when none is
+    given. An empty codebook is an error, not a request to retrain."""
+    if centroids is None:
+        return ivf_train(emb, n_cells, n_dims, n_iters, sample_cap)
+    if not centroids:
+        raise ValueError("centroids must hold at least one centroid")
+    return centroids
+
+
 def ivf_trained_centroids(
     emb: DataFrame,
     n_cells: int = 16,
@@ -855,9 +872,7 @@ def ivf_trained_cell_stats(
     """Cell occupancy under the TRAINED codebook — the health gauge
     that shows the fit tracking the data (balanced cells) where the
     fixed codebook piles everything into a few."""
-    cents = centroids or ivf_train(
-        emb, n_cells, n_dims, n_iters, sample_cap
-    )
+    cents = _codebook(emb, centroids, n_cells, n_dims, n_iters, sample_cap)
     w = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.asc("j"))
     return (
         _trained_scored(
@@ -887,9 +902,7 @@ def ivf_trained_topk(
     """IVF ANN top-k over the trained codebook — same single-scan
     rank-frame shape as ivf_topk (cells = rk 1, probes = rk <=
     n_probe, exact cosine only inside probed cells)."""
-    cents = centroids or ivf_train(
-        emb, n_cells, n_dims, n_iters, sample_cap
-    )
+    cents = _codebook(emb, centroids, n_cells, n_dims, n_iters, sample_cap)
     wq = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.asc("j"))
     ranked = (
         _trained_scored(emb.select("vec_id", "embedding"), cents, n_dims)
@@ -953,9 +966,7 @@ def ivf_recall(
     top-k — the ann_recall analog for the inverted-file index.
     (query_id, n_hits, recall); queries whose probed cells hold no
     true neighbor report 0.0 rather than dropping out."""
-    cents = centroids or ivf_train(
-        emb, n_cells, n_dims, n_iters, sample_cap
-    )
+    cents = _codebook(emb, centroids, n_cells, n_dims, n_iters, sample_cap)
     exact = cosine_topk(emb, n_queries, k).select(
         "query_id", "neighbor_id"
     )
@@ -1007,9 +1018,7 @@ def semdedup(
     corpora); only (vec_id, cell, embedding) crosses the shuffle, and
     the codebook rides along as literals (no join for assignment).
     """
-    cents = centroids or ivf_train(
-        emb, n_cells, n_dims, n_iters, sample_cap
-    )
+    cents = _codebook(emb, centroids, n_cells, n_dims, n_iters, sample_cap)
     w = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.asc("j"))
     asg = (
         _trained_scored(emb.select("vec_id", "embedding"), cents, n_dims)

@@ -33,7 +33,7 @@ Superstep dataflow (all declarative; Catalyst/AQE plan it):
   outcome = CASE ladder + checksum first-wins window    (JVM)
   docs    = NEW/MODIFIED rows + image payload           (Arrow UDF)
   cands   = redirect ∪ canonical ∪ explode(links)
-  queue pipeline: normalize → first-wins → Bloom prefilter +
+  queue pipeline: normalize → first-wins → driver Bloom prefilter +
                   exact anti-join vs ledger → depth/filters/robots →
                   assign dense seq
   commit  = ONE level part + host-state snapshot + documents part +
@@ -56,10 +56,11 @@ Scale/efficiency notes:
   Small levels run in a handful of tasks instead of paying per-task
   Python-UDF round-trip overhead across hundreds of near-empty tasks;
   big levels still fan out to every core.
-* The URL-seen Bloom bitmap is maintained *incrementally* on the
-  driver: synced once from the ledger when it first crosses the size
-  threshold, then fed only each superstep's new rows — O(level), not
-  O(ledger), per superstep.
+* The URL-seen prefilter is one Bloom bitmap of ``bloom_bits/8`` bytes
+  on the driver, maintained *incrementally*: synced once from the
+  ledger when it first crosses the size threshold, then fed only each
+  superstep's new rows — O(level), not O(ledger), per superstep. If it
+  saturates it disables itself and the exact anti-join runs alone.
 * ``seq`` assignment is a single-task sort below ~150k candidates
   (two fewer jobs) and range-partition + per-partition offsets above
   (no global window either way).
@@ -101,8 +102,6 @@ from ..functions.links import PARSE_FIELDS, make_parse_transformer
 from ..functions.urls import normalize_url_udf, url_host_col
 from ..operators.dedup import (
     BloomPrefilter,
-    ShardedBloomPrefilter,
-    ShardedCuckooPrefilter,
     assign_seq,
     assign_seq_small,
     first_wins,
@@ -469,26 +468,7 @@ class CrawlEngine:
         self._max_sched_seen = 0
         self._frontier_part: str | None = None
         self._ledger_rows = 0
-        if cfg.urlseen_filter == "cuckoo":
-            # total-bits parity with the bloom knob: one 4-slot bucket
-            # of 16-bit fingerprints = 64 bits
-            per_shard = max(
-                2, cfg.bloom_bits // (cfg.bloom_shards * 64)
-            )
-            per_shard = 1 << (per_shard - 1).bit_length()
-            self.bloom = ShardedCuckooPrefilter(
-                buckets_per_shard=per_shard,
-                n_shards=cfg.bloom_shards,
-            )
-        elif cfg.bloom_shards > 0:
-            self.bloom = ShardedBloomPrefilter(
-                bits_per_shard=max(
-                    64, cfg.bloom_bits // cfg.bloom_shards
-                ),
-                n_shards=cfg.bloom_shards,
-            )
-        else:
-            self.bloom = BloomPrefilter(cfg.bloom_bits)
+        self.bloom = BloomPrefilter(cfg.bloom_bits)
         self._bloom_synced = False
         # links-per-fetched-doc ratio from the previous superstep; only
         # shapes partition counts, never results
@@ -942,8 +922,8 @@ class CrawlEngine:
     def release(self) -> int:
         """Unpersist every frame this engine pinned — localCheckpoint
         fragments (URL-seen keys, registries, sitemap hosts, event
-        state, the in-memory frontier) and the Bloom filter's
-        distributed dim — plus the textops operator cache registry.
+        state, the in-memory frontier) — plus the textops operator
+        cache registry.
         Returns how many frames were released. For long-lived
         sessions / CLI teardown; the engine must not step() after.
         All released frames are performance pins, not data: the
@@ -972,8 +952,6 @@ class CrawlEngine:
                 n += 1
             except Exception:
                 pass
-        if hasattr(self.bloom, "release"):
-            self.bloom.release()
         # sweep localCheckpoint storage (DataFrame.unpersist cannot
         # release it): every persistent RDD newer than the engine is
         # engine-created checkpoint state
@@ -1293,9 +1271,7 @@ class CrawlEngine:
         # one or two tasks.
         n_aj = self._n_part(max(n_cand, self._ledger_rows))
         if self._bloom_synced:
-            maybe, fresh = self.bloom.filter_candidates(
-                c, caches=caches
-            )
+            maybe, fresh = self.bloom.filter_candidates(c)
             # the ledger side is large here (that's why the Bloom is
             # on): a shuffle-hash join keeps the build distributed
             # instead of collecting ~all ledger keys to the driver for

@@ -457,58 +457,6 @@ def test_scrub_duplicated_spans_known_values(spark):
     assert got[5]["n_tiles"] == 0 and got[5]["n_removed"] == 0
 
 
-def test_sharded_bloom_no_false_negatives_and_low_fpp(spark):
-    """Sharded distributed filter: same prefilter contract as the
-    driver-held bitmap — zero false negatives, low false-positive
-    rate — with the bitmap living in a dim frame, not on the driver."""
-    from crawlspark.operators.dedup import ShardedBloomPrefilter
-
-    n = 50_000
-    seen = spark.range(n).select(
-        F.col("id").alias("url"), F.xxhash64(F.col("id")).alias("seen_key")
-    )
-    bloom = ShardedBloomPrefilter(bits_per_shard=1 << 16, n_shards=16)
-    bloom.add_df(seen)
-    cand = spark.range(n // 2, n + n // 2).select(
-        F.col("id").alias("url"), F.xxhash64(F.col("id")).alias("seen_key")
-    )
-    caches = []
-    maybe, fresh = bloom.filter_candidates(cand, caches=caches)
-    maybe_ids = set(r["url"] for r in maybe.collect())
-    fresh_ids = set(r["url"] for r in fresh.collect())
-    assert maybe_ids | fresh_ids == set(range(n // 2, n + n // 2))
-    assert maybe_ids.isdisjoint(fresh_ids)
-    for i in range(n // 2, n):  # no false negatives
-        assert i in maybe_ids
-    fp = sum(1 for i in range(n, n + n // 2) if i in maybe_ids)
-    assert fp / (n // 2) < 0.05, fp
-    for df in caches:
-        df.unpersist()
-    bloom.release()
-
-
-def test_sharded_bloom_incremental_merge(spark):
-    """Keys added across several add_df calls (the per-superstep
-    fragment feed) behave as one filter."""
-    from crawlspark.operators.dedup import ShardedBloomPrefilter
-
-    bloom = ShardedBloomPrefilter(bits_per_shard=1 << 14, n_shards=4)
-    for lo, hi in [(0, 1000), (1000, 2000), (2000, 3000)]:
-        bloom.add_df(
-            spark.range(lo, hi).select(
-                F.xxhash64(F.col("id")).alias("seen_key")
-            )
-        )
-    cand = spark.range(0, 3000).select(
-        F.col("id").alias("url"),
-        F.xxhash64(F.col("id")).alias("seen_key"),
-    )
-    maybe, fresh = bloom.filter_candidates(cand)
-    assert fresh.count() == 0  # all seen -> all maybe
-    assert maybe.count() == 3000
-    bloom.release()
-
-
 def test_bloom_saturation_warns_then_disables(spark):
     """Driver bitmap sized absurdly small: crossing WARN_FILL warns,
     crossing DISABLE_FILL disables — after which filter_candidates
@@ -528,32 +476,12 @@ def test_bloom_saturation_warns_then_disables(spark):
     assert maybe.count() == 50 and fresh.count() == 0
 
 
-def test_sharded_bloom_saturation_disables(spark):
-    from crawlspark.operators.dedup import ShardedBloomPrefilter
-
-    bloom = ShardedBloomPrefilter(bits_per_shard=64, n_shards=4)
-    with pytest.warns(RuntimeWarning, match="saturated"):
-        bloom.add_df(
-            spark.range(2000).select(
-                F.xxhash64(F.col("id")).alias("seen_key")
-            )
-        )
-    assert not bloom.enabled
-    cand = spark.range(10).select(
-        F.col("id").alias("url"),
-        F.xxhash64(F.col("id")).alias("seen_key"),
-    )
-    maybe, fresh = bloom.filter_candidates(cand)
-    assert maybe.count() == 10 and fresh.count() == 0
-
-
-def test_crawl_parity_with_sharded_bloom(spark, tmp_path):
-    """Engine run with the sharded distributed filter engaged from the
-    first superstep (min_ledger=1): fetch sequence and URL-seen set
-    must equal the oracle — the prefilter may only shrink the exact
+def test_crawl_parity_with_synced_bloom(spark, tmp_path):
+    """Engine run with the Bloom prefilter synced from the first
+    superstep (min_ledger=1): fetch sequence and URL-seen set must
+    equal the oracle — the prefilter may only shrink the exact
     anti-join's probe side, never change survivors."""
     from crawlspark.config import CrawlConfig
-    from crawlspark.operators.dedup import ShardedBloomPrefilter
     from crawlspark.oracle.simulator import CrawlSimulator
     from crawlspark.plans.superstep import CrawlEngine
     from crawlspark.sources.webgen import SiteParams, build_site
@@ -565,7 +493,6 @@ def test_crawl_parity_with_sharded_bloom(spark, tmp_path):
     cfg = CrawlConfig(
         max_depth=3, default_delay_ms=1000,
         bloom_prefilter_min_ledger=1,
-        bloom_shards=8, bloom_bits=1 << 18,
     )
     site = build_site(params)
     seeds = [r["url"] for r in site.seeds.to_dict("records")]
@@ -576,226 +503,34 @@ def test_crawl_parity_with_sharded_bloom(spark, tmp_path):
         spark, str(tmp_path / "crawl"), cfg,
         site.spark_pages_df(spark), site.spark_robots_df(spark),
     )
-    assert isinstance(eng.bloom, ShardedBloomPrefilter)
+    assert isinstance(eng.bloom, BloomPrefilter)
     eng.bootstrap(seeds)
     eng.run()
-    assert eng._bloom_synced  # the sharded path actually engaged
+    assert eng._bloom_synced  # the prefilter path actually engaged
     got = eng.fetch_log().toPandas()
     assert got["url"].tolist() == [r["url"] for r in sim.fetch_log]
-
-
-def test_sharded_cuckoo_no_false_negatives_and_low_fpp(spark):
-    """Cuckoo flavor of the distributed prefilter: same contract as
-    the sharded Bloom — zero false negatives, low false-positive rate,
-    tables living in a dim frame, nothing on the driver."""
-    from crawlspark.operators.dedup import ShardedCuckooPrefilter
-
-    n = 50_000
-    seen = spark.range(n).select(
-        F.col("id").alias("url"), F.xxhash64(F.col("id")).alias("seen_key")
+    seen = eng.urlseen().toPandas()
+    assert sorted(
+        zip(seen["url"], seen["status"], seen["outcome"], seen["depth"])
+    ) == sorted(
+        (r["url"], r["status"], r["outcome"], r["depth"])
+        for r in sim.urlseen()
     )
-    ck = ShardedCuckooPrefilter(buckets_per_shard=1 << 12, n_shards=16)
-    ck.add_df(seen)
-    assert ck.enabled
-    cand = spark.range(n // 2, n + n // 2).select(
-        F.col("id").alias("url"), F.xxhash64(F.col("id")).alias("seen_key")
-    )
-    caches = []
-    maybe, fresh = ck.filter_candidates(cand, caches=caches)
-    maybe_ids = set(r["url"] for r in maybe.collect())
-    fresh_ids = set(r["url"] for r in fresh.collect())
-    assert maybe_ids | fresh_ids == set(range(n // 2, n + n // 2))
-    assert maybe_ids.isdisjoint(fresh_ids)
-    for i in range(n // 2, n):  # no false negatives
-        assert i in maybe_ids
-    # 16-bit fingerprints: false-'maybe' rate well under the Bloom's
-    fp = sum(1 for i in range(n, n + n // 2) if i in maybe_ids)
-    assert fp / (n // 2) < 0.01, fp
-    for df in caches:
-        df.unpersist()
-    ck.release()
 
 
-def test_sharded_cuckoo_incremental_merge(spark):
-    """Keys added across several add_df calls (the per-superstep
-    fragment feed) fold into one filter — the XOR partial-key identity
-    makes table merges key-free."""
-    from crawlspark.operators.dedup import ShardedCuckooPrefilter
-
-    ck = ShardedCuckooPrefilter(buckets_per_shard=1 << 10, n_shards=4)
-    for lo, hi in [(0, 1000), (500, 2000), (2000, 3000)]:  # overlap too
-        ck.add_df(
-            spark.range(lo, hi).select(
-                F.xxhash64(F.col("id")).alias("seen_key")
-            )
-        )
-    cand = spark.range(0, 3000).select(
-        F.col("id").alias("url"),
-        F.xxhash64(F.col("id")).alias("seen_key"),
-    )
-    maybe, fresh = ck.filter_candidates(cand)
-    assert fresh.count() == 0  # all seen -> all maybe
-    assert maybe.count() == 3000
-    ck.release()
-
-
-def test_sharded_cuckoo_delete(spark):
-    """delete_df — the capability a Bloom filter cannot offer. Keys
-    still present keep zero false negatives; deleted keys drop back to
-    'definitely new' (up to fingerprint-collision noise)."""
-    from crawlspark.operators.dedup import ShardedCuckooPrefilter
-
-    n = 20_000
-    ck = ShardedCuckooPrefilter(buckets_per_shard=1 << 12, n_shards=4)
-    ck.add_df(
-        spark.range(n).select(F.xxhash64(F.col("id")).alias("seen_key"))
-    )
-    ck.delete_df(
-        spark.range(n // 2).select(
-            F.xxhash64(F.col("id")).alias("seen_key")
-        )
-    )
-    cand = spark.range(n).select(
-        F.col("id").alias("url"),
-        F.xxhash64(F.col("id")).alias("seen_key"),
-    )
-    maybe, fresh = ck.filter_candidates(cand)
-    maybe_ids = set(r["url"] for r in maybe.collect())
-    for i in range(n // 2, n):  # survivors: still no false negatives
-        assert i in maybe_ids
-    # deleted keys probe fresh except for shared-fingerprint collisions
-    still = sum(1 for i in range(n // 2) if i in maybe_ids)
-    assert still / (n // 2) < 0.02, still
-    ck.release()
-
-
-def test_sharded_cuckoo_saturation_disables(spark):
-    """An insert failure (all kicks exhausted) would create a false
-    negative if ignored — the filter must auto-disable loudly and pass
-    everything through as 'maybe' instead."""
-    from crawlspark.operators.dedup import ShardedCuckooPrefilter
-
-    ck = ShardedCuckooPrefilter(buckets_per_shard=4, n_shards=2)
-    with pytest.warns(RuntimeWarning, match="saturated"):
-        ck.add_df(
-            spark.range(2000).select(
-                F.xxhash64(F.col("id")).alias("seen_key")
-            )
-        )
-    assert not ck.enabled
-    cand = spark.range(10).select(
-        F.col("id").alias("url"),
-        F.xxhash64(F.col("id")).alias("seen_key"),
-    )
-    maybe, fresh = ck.filter_candidates(cand)
-    assert maybe.count() == 10 and fresh.count() == 0
-
-
-def test_urlseen_filter_config_validation():
+def test_bloom_bits_validation():
+    """bloom_bits must be a power of two >= 64: anything else cannot
+    be laid out as whole uint64 words. Both the config check and the
+    filter itself reject it (a ValueError, not an assert that
+    ``python -O`` strips)."""
     from crawlspark.config import CrawlConfig, validate
 
-    assert validate(CrawlConfig(urlseen_filter="bogus"))
-    # cuckoo is distributed-only: requires shards
-    assert validate(CrawlConfig(urlseen_filter="cuckoo", bloom_shards=0))
-    assert not validate(
-        CrawlConfig(urlseen_filter="cuckoo", bloom_shards=8)
-    )
-
-
-def test_crawl_parity_with_cuckoo(spark, tmp_path):
-    """Engine run with urlseen_filter='cuckoo' engaged from the first
-    superstep: fetch sequence must equal the oracle — like the Bloom,
-    the cuckoo prefilter may only shrink the exact anti-join's probe
-    side, never change survivors."""
-    from crawlspark.config import CrawlConfig
-    from crawlspark.operators.dedup import ShardedCuckooPrefilter
-    from crawlspark.oracle.simulator import CrawlSimulator
-    from crawlspark.plans.superstep import CrawlEngine
-    from crawlspark.sources.webgen import SiteParams, build_site
-
-    params = SiteParams(
-        seed=7, n_hosts=3, depth=3, branching=3, dup_pct=0.25,
-        redirect_pct=0.1, cross_pct=0.4, n_seed_hosts=2,
-    )
-    cfg = CrawlConfig(
-        max_depth=3, default_delay_ms=1000,
-        bloom_prefilter_min_ledger=1,
-        urlseen_filter="cuckoo", bloom_shards=8, bloom_bits=1 << 18,
-    )
-    site = build_site(params)
-    seeds = [r["url"] for r in site.seeds.to_dict("records")]
-    sim = CrawlSimulator(
-        site.pages_dict(), site.robots_dict(), cfg
-    ).run(seeds)
-    eng = CrawlEngine(
-        spark, str(tmp_path / "crawl"), cfg,
-        site.spark_pages_df(spark), site.spark_robots_df(spark),
-    )
-    assert isinstance(eng.bloom, ShardedCuckooPrefilter)
-    eng.bootstrap(seeds)
-    eng.run()
-    assert eng._bloom_synced  # the cuckoo path actually engaged
-    got = eng.fetch_log().toPandas()
-    assert got["url"].tolist() == [r["url"] for r in sim.fetch_log]
-
-
-def test_cuckoo_core_model_no_false_negatives():
-    """Model-based check of the numpy cuckoo core (no Spark): after an
-    arbitrary interleaving of inserts, every still-present key must
-    probe True — the zero-false-negative contract the prefilter relies
-    on — and inserts report failures instead of silently dropping."""
-    from crawlspark.operators.dedup import ShardedCuckooPrefilter as CK
-
-    rng = np.random.default_rng(42)
-    n_buckets = 1 << 8
-    table = np.zeros(n_buckets * CK.SLOTS, dtype=np.uint16)
-    present: set[int] = set()
-    total_failed = 0
-    for _ in range(20):
-        keys = rng.integers(
-            -(2**63), 2**63 - 1, size=40, dtype=np.int64
-        )
-        n_new, failed = CK._insert_keys(table, n_buckets, keys)
-        total_failed += failed
-        if failed == 0:
-            present.update(keys.tolist())
-        else:
-            break  # engine disables the filter at first failure
-    arr = np.array(sorted(present), dtype=np.int64)
-    hits = CK._contains(table, n_buckets, arr)
-    assert bool(hits.all()), "false negative for a present key"
-
-
-def test_cuckoo_core_delete_restores_capacity():
-    """Deleting previously-inserted keys frees their slots: a fill ->
-    delete-all -> refill cycle succeeds with zero failed inserts, and
-    the emptied table probes False for the deleted keys."""
-    from crawlspark.operators.dedup import ShardedCuckooPrefilter as CK
-
-    n_buckets = 1 << 6
-    table = np.zeros(n_buckets * CK.SLOTS, dtype=np.uint16)
-    # wrapping uint64 multiply (the constant exceeds int64, so plain
-    # int64 * python-int promotes to float64 and the later int cast
-    # is invalid for values past 2^63)
-    keys = (
-        np.arange(100, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    ).view(np.int64)
-    n_new, failed = CK._insert_keys(table, n_buckets, keys)
-    assert failed == 0 and n_new > 0
-    # delete every key: one fingerprint copy from its (i1, i2) pair
-    fp, i1 = CK._fp_i1(keys, n_buckets)
-    i2 = i1 ^ CK._alt(fp, n_buckets)
-    t = table.reshape(n_buckets, CK.SLOTS)
-    for f, b1, b2 in zip(fp.tolist(), i1.tolist(), i2.tolist()):
-        for b in (b1, b2):
-            hit = np.nonzero(t[b] == f)[0]
-            if hit.size:
-                t[b][hit[0]] = 0
-                break
-    assert int(np.count_nonzero(table)) == 0
-    assert not CK._contains(table, n_buckets, keys).any()
-    # refill with different keys: full capacity is back
-    keys2 = (np.arange(100, dtype=np.int64) + 7777) * -0x61C8864680B583EB
-    _, failed2 = CK._insert_keys(table, n_buckets, keys2)
-    assert failed2 == 0
-    assert CK._contains(table, n_buckets, keys2).all()
+    for bad in (0, 32, 100, -64, 1 << 20 | 1):
+        assert any("bloom_bits" in e for e in validate(
+            CrawlConfig(bloom_bits=bad)
+        )), bad
+        with pytest.raises(ValueError, match="bloom_bits"):
+            BloomPrefilter(bad)
+    for ok in (64, 1 << 10, CrawlConfig().bloom_bits):
+        assert not validate(CrawlConfig(bloom_bits=ok))
+        assert BloomPrefilter(ok).words.size == ok // 64

@@ -56,6 +56,13 @@ def test_empty_and_tiny_images():
     assert ocr_image(np.full((2, 2, 3), 255, np.uint8)) == ""
 
 
+def test_grayscale_raster_reads_like_rgb():
+    img = render_text("HELLO 42")
+    assert ocr_image(img[..., 0]) == ocr_image(img) == "HELLO 42"
+    with pytest.raises(ValueError, match="3-D"):
+        ocr_image(img[None])
+
+
 def test_unknown_glyph_reads_as_question_mark():
     img = render_text("AB")
     img[1:8, 1:6] = 0  # stamp a solid block over the first cell

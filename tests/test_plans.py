@@ -326,39 +326,3 @@ def test_sweep_stale_scratch(tmp_path):
     os.utime(old, (stale, stale))
     _sweep_stale_scratch(str(tmp_path))
     assert not old.exists() and new.exists()
-
-
-@pytest.mark.parametrize("flavor", ["bloom", "cuckoo"])
-def test_sharded_prefilter_probe_is_one_cogrouped_map(spark, flavor):
-    """The distributed URL-seen probe must be ONE co-partitioned
-    cogroup task per shard — candidates and filter-table rows meeting
-    on the shard key — with no driver collect, no cartesian, and no
-    broadcast of the candidate side. This is the plan shape that
-    survives 10^10 URLs: memory is O(table_bits/shards) per task."""
-    from crawlspark.operators.dedup import (
-        ShardedBloomPrefilter,
-        ShardedCuckooPrefilter,
-    )
-
-    filt = (
-        ShardedBloomPrefilter(bits_per_shard=1 << 14, n_shards=8)
-        if flavor == "bloom"
-        else ShardedCuckooPrefilter(buckets_per_shard=1 << 8, n_shards=8)
-    )
-    filt.add_df(
-        spark.range(5000).select(F.xxhash64(F.col("id")).alias("seen_key"))
-    )
-    cand = spark.range(2500, 7500).select(
-        F.col("id").alias("url"),
-        F.xxhash64(F.col("id")).alias("seen_key"),
-    )
-    maybe, fresh = filt.filter_candidates(cand)
-    for df in (maybe, fresh):
-        plan = _plan(df)
-        # formatted explain repeats each op in the detail section —
-        # count within the tree only
-        tree = plan.split("\n\n")[0]
-        assert tree.count("FlatMapCoGroupsInPandas") == 1, plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-    filt.release()

@@ -150,3 +150,21 @@ def test_semdedup_threshold_monotone(spark):
     rm_loose = set(loose.loc[~loose["keep"], "vec_id"])
     rm_tight = set(tight.loc[~tight["keep"], "vec_id"])
     assert rm_tight <= rm_loose
+
+
+def test_empty_codebook_is_rejected_not_retrained(spark):
+    """``centroids=[]`` is a caller error: every trained-codebook entry
+    point raises instead of silently fitting a fresh codebook."""
+    import pytest
+
+    from crawlspark.operators import similarity as S
+
+    emb = _emb(spark)
+    for fn in (
+        S.ivf_trained_cell_stats,
+        S.ivf_trained_topk,
+        S.ivf_recall,
+        S.semdedup,
+    ):
+        with pytest.raises(ValueError, match="centroids"):
+            fn(emb, centroids=[])
