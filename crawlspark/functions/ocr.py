@@ -162,7 +162,10 @@ def resolve_ocr_fn(spec) -> "callable":
     a callable passes through; "module:attr" imports lazily on the
     executor; the string "bitmap" selects the in-container reader.
     The resolved callable takes (data: bytes, content_type: str) and
-    returns the recognized text ('' when it can't read)."""
+    returns the recognized text ('' when it can't read).
+
+    A "module:attr" spec imports and runs arbitrary code with no
+    check, so it must come from trusted configuration only."""
     if callable(spec):
         return spec
     if spec == "bitmap":

@@ -4,8 +4,11 @@
   (MVStoreCacheQueue.java:27-35) re-expressed without a single-task
   global window: range-repartition on the order key, sort within
   partitions, collect only the tiny per-partition counts to the
-  driver, then add cumulative offsets per partition. O(1) driver data,
-  fully parallel — survives a 10^10-row frontier.
+  driver, then add cumulative offsets per partition. O(partitions)
+  driver data, fully parallel — survives a 10^10-row frontier. The
+  caller sizes ``n_part`` to the level: a small level runs as the
+  ``n_part=1`` case (one shuffle + one sort task, no sample or count
+  job).
 
 * ``first_wins`` — first-discovery-wins candidate dedup
   (DedupService.java:88-99 "first reference wins", made deterministic
@@ -56,80 +59,51 @@ def first_wins(
     )
 
 
-def assign_seq_small(
-    df: DataFrame, order_cols: list[str], start: int, seq_col: str = "seq"
-) -> DataFrame:
-    """Small-level fast path: one shuffle to a single partition, sort,
-    number. No range-sampling pass, no per-partition count job —
-    two whole Spark jobs cheaper than ``assign_seq``, and a single
-    sort task over <~150k rows is milliseconds. Upstream lineage keeps
-    its parallelism (``repartition``, not ``coalesce``)."""
-    one = df.repartition(1).sortWithinPartitions(*order_cols)
-    cols = df.columns
-    schema = one.withColumn(seq_col, F.lit(0).cast("long")).schema
-
-    def add_seq(it):
-        off = start
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            seqs = np.arange(off, off + len(pdf), dtype="int64")
-            off += len(pdf)
-            yield pdf.assign(**{seq_col: seqs})
-
-    return one.mapInPandas(add_seq, schema=schema).select(*cols, seq_col)
-
-
 def assign_seq(
     df: DataFrame,
     order_cols: list[str],
     start: int,
     seq_col: str = "seq",
     n_part: int | None = None,
-    first_col_bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Add a dense 0-gap sequence ``start, start+1, ...`` following the
     total order given by ``order_cols`` (must be unique per row).
 
-    ``first_col_bounds=(lo, hi)`` — when the caller knows the value
-    range of ``order_cols[0]`` (the crawl engine does: a candidate's
-    ``parent_seq`` is always a seq of the level being processed, whose
-    dense range the driver tracks), the range-partitioner's SAMPLING
-    pass is skipped entirely: rows are bucketed by a computed
-    ``(v - lo) * buckets // span`` id — monotone in the first order
-    column, so bucket k's rows all precede bucket k+1's in the total
-    order — and hash-clustered by that id (every row of a bucket lands
-    in one partition; which physical partition is irrelevant because
-    offsets are accumulated per *bucket*). One shuffle + one tiny
-    per-bucket count job instead of sample + shuffle + count: a whole
-    pass over the candidate lineage saved per superstep. NULL first
-    columns all map to bucket 0 (Spark sorts nulls first ascending, so
-    they belong at the front of the total order anyway).
+    Range-partition on the order key, sort within partitions, then
+    number each partition from its cumulative offset. ``n_part=1`` is
+    the small-level case: the one partition's offset is ``start``, so
+    the range partitioner plans a plain single-partition exchange (no
+    sampling job) and the per-partition count job and its cache are
+    skipped — one shuffle and one sort task. Upstream lineage keeps its
+    parallelism either way (a shuffle, not a ``coalesce``).
+
+    The result carries ``_assign_seq_cache``, the frame to
+    ``unpersist()`` once the result is materialized (long superstep
+    loops would otherwise accumulate cached frames); with ``n_part=1``
+    nothing was cached and the call is a no-op.
     """
     spark = df.sparkSession
     if n_part is None:
         n_part = max(2, spark.sparkContext.defaultParallelism)
-    if first_col_bounds is not None:
-        return _assign_seq_bucketed(
-            df, order_cols, start, seq_col, n_part, first_col_bounds
-        )
     parted = df.repartitionByRange(n_part, *order_cols).sortWithinPartitions(
         *order_cols
     )
-    parted = parted.cache()
-    counts = (
-        parted.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .count()
-        .collect()
-    )
-    sizes = {r["__pid"]: r["count"] for r in counts}
-    offsets: dict[int, int] = {}
-    acc = start
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-    boff = spark.sparkContext.broadcast(offsets)
+    if n_part == 1:
+        offsets = {0: start}
+    else:
+        parted = parted.cache()
+        counts = (
+            parted.withColumn("__pid", F.spark_partition_id())
+            .groupBy("__pid")
+            .count()
+            .collect()
+        )
+        sizes = {r["__pid"]: r["count"] for r in counts}
+        offsets = {}
+        acc = start
+        for pid in sorted(sizes):
+            offsets[pid] = acc
+            acc += sizes[pid]
     cols = df.columns
 
     def add_seq(it):
@@ -140,7 +114,7 @@ def assign_seq(
             if len(pdf) == 0:
                 continue
             if off is None:
-                off = boff.value[int(pdf["__pid"].iloc[0])]
+                off = offsets[int(pdf["__pid"].iloc[0])]
             seqs = np.arange(off, off + len(pdf), dtype="int64")
             off += len(pdf)
             yield pdf.assign(**{seq_col: seqs}).drop(columns="__pid")
@@ -151,143 +125,6 @@ def assign_seq(
         .mapInPandas(add_seq, schema=schema)
         .select(*cols, seq_col)
     )
-    # expose the internal cache so the caller can release it once the
-    # result is materialized (long superstep loops would otherwise
-    # accumulate cached frames)
-    out._assign_seq_cache = parted
-    return out
-
-
-# n_part -> token list: token[p] is an int Spark's HashPartitioning
-# routes to partition p of n_part. Murmur3 (seed 42) is fixed across
-# sessions, so the table never invalidates.
-_PART_TOKENS: dict[int, list[int]] = {}
-
-
-def _partition_tokens(spark, n_part: int) -> list[int]:
-    """Find, for every partition p of ``n_part``, an int that Spark's
-    hash partitioner sends exactly there — computed WITH ``F.hash``
-    itself (HashPartitioning's partition id is
-    ``pmod(murmur3(cols), n)``), so the mapping can never drift from
-    the engine. One tiny driver job per distinct ``n_part`` per
-    process; coupon-collector says ~n·ln(n) candidates suffice, we
-    probe in growing batches."""
-    toks = _PART_TOKENS.get(n_part)
-    if toks is not None:
-        return toks
-    found: dict[int, int] = {}
-    lo = 0
-    while len(found) < n_part:
-        hi = lo + max(64, 8 * n_part)
-        rows = (
-            spark.range(lo, hi)
-            .select(
-                F.col("id").cast("int").alias("t"),
-                F.pmod(
-                    F.hash(F.col("id").cast("int")), F.lit(n_part)
-                ).alias("p"),
-            )
-            .collect()
-        )
-        for r in rows:
-            found.setdefault(int(r["p"]), int(r["t"]))
-        lo = hi
-    toks = [found[p] for p in range(n_part)]
-    _PART_TOKENS[n_part] = toks
-    return toks
-
-
-def _assign_seq_bucketed(
-    df: DataFrame,
-    order_cols: list[str],
-    start: int,
-    seq_col: str,
-    n_part: int,
-    bounds: tuple[int, int],
-) -> DataFrame:
-    """Sample-free ``assign_seq``: explicit order-contiguous buckets
-    from the known first-column range (see ``assign_seq`` docstring).
-
-    4x more buckets than partitions, assigned to partitions in
-    contiguous equal blocks (bucket b -> partition b·n_part//n_buckets)
-    through a hash-token table (:func:`_partition_tokens`) — raw
-    ``repartition(n, __bkt)`` would throw ~4·n_part distinct values at
-    n_part partitions balls-in-bins style, leaving some partitions
-    with 2x the buckets and the sort+downstream stages straggling on
-    them (measured ~7%% on the bench crawl). Routing is balance-only
-    either way: offsets are per *bucket*, so any one-partition-per-
-    bucket placement is correct."""
-    lo, hi = bounds
-    span = max(1, int(hi) - int(lo) + 1)
-    n_buckets = max(1, min(4 * n_part, span))
-    first = F.col(order_cols[0]).cast("long")
-    bucket = F.when(
-        first.isNull(), F.lit(0)
-    ).otherwise(
-        F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(n_buckets - 1),
-                ((first - F.lit(int(lo))) * n_buckets / F.lit(span)).cast(
-                    "long"
-                ),
-            ),
-        )
-    )
-    toks = _partition_tokens(df.sparkSession, n_part)
-    # bucket block -> the token hashing to that exact partition
-    tok_arr = F.array(*[F.lit(t) for t in toks])
-    pid = F.element_at(
-        tok_arr, (F.col("__bkt") * n_part / n_buckets).cast("int") + 1
-    )
-    parted = (
-        df.withColumn("__bkt", bucket)
-        .repartition(n_part, pid)
-        .sortWithinPartitions("__bkt", *order_cols)
-    )
-    parted = parted.cache()
-    counts = parted.groupBy("__bkt").count().collect()
-    sizes = {int(r["__bkt"]): r["count"] for r in counts}
-    offsets: dict[int, int] = {}
-    acc = start
-    for b in sorted(sizes):
-        offsets[b] = acc
-        acc += sizes[b]
-    boff = parted.sparkSession.sparkContext.broadcast(offsets)
-    cols = df.columns
-
-    def add_seq(it):
-        # batches arrive sorted by (__bkt, *order_cols); a bucket's rows
-        # are contiguous within the partition and global to it, so a
-        # per-bucket running offset is exact.
-        cur_bkt = None
-        off = 0
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            bkts = pdf["__bkt"].to_numpy()
-            seqs = np.empty(len(pdf), dtype="int64")
-            pos = 0
-            # contiguous runs of equal bucket id
-            change = np.flatnonzero(np.diff(bkts)) + 1
-            for s, e in zip(
-                np.concatenate(([0], change)),
-                np.concatenate((change, [len(bkts)])),
-            ):
-                b = int(bkts[s])
-                if b != cur_bkt:
-                    cur_bkt = b
-                    off = boff.value[b]
-                seqs[s:e] = np.arange(off, off + (e - s), dtype="int64")
-                off += e - s
-                pos = e
-            assert pos == len(bkts)
-            yield pdf.assign(**{seq_col: seqs}).drop(columns="__bkt")
-
-    schema = parted.drop("__bkt").withColumn(
-        seq_col, F.lit(0).cast("long")
-    ).schema
-    out = parted.mapInPandas(add_seq, schema=schema).select(*cols, seq_col)
     out._assign_seq_cache = parted
     return out
 

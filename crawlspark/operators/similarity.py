@@ -305,12 +305,20 @@ def cosine_topk_vectorized(
     import numpy as np
     import pandas as pd
 
+    # vec_id < n_queries also matches negative or duplicate ids: bound
+    # the driver collect and refuse anything past the query block
     qrows = sorted(
         emb.filter(F.col("vec_id") < n_queries)
         .select("vec_id", "embedding")
+        .limit(n_queries + 1)
         .collect(),
         key=lambda r: r["vec_id"],
     )
+    if len(qrows) > n_queries:
+        raise ValueError(
+            f"more than n_queries={n_queries} rows have vec_id < "
+            f"{n_queries}: vec_id must be unique and non-negative"
+        )
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     qm = np.array([r["embedding"] for r in qrows], dtype=np.float64)
     qn = np.linalg.norm(qm, axis=1)

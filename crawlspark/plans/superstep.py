@@ -61,9 +61,9 @@ Scale/efficiency notes:
   ledger when it first crosses the size threshold, then fed only each
   superstep's new rows — O(level), not O(ledger), per superstep. If it
   saturates it disables itself and the exact anti-join runs alone.
-* ``seq`` assignment is a single-task sort below ~150k candidates
-  (two fewer jobs) and range-partition + per-partition offsets above
-  (no global window either way).
+* ``seq`` assignment is one range-partition + per-partition offsets
+  path (no global window); below ~150k candidates it runs with one
+  partition, which skips the sampling and count jobs.
 * The URL-seen keys and the checksum registry are served from
   per-part cached fragments (one slim cached DataFrame per committed
   level part) so per-superstep broadcast builds never re-scan the
@@ -100,12 +100,7 @@ from pyspark.sql import types as T
 from ..config import CrawlConfig
 from ..functions.links import PARSE_FIELDS, make_parse_transformer
 from ..functions.urls import normalize_url_udf, url_host_col
-from ..operators.dedup import (
-    BloomPrefilter,
-    assign_seq,
-    assign_seq_small,
-    first_wins,
-)
+from ..operators.dedup import BloomPrefilter, assign_seq, first_wins
 from ..operators.politeness import schedule_hosts
 from ..operators.robots_filter import (
     build_robots_rules,
@@ -126,8 +121,8 @@ ROWS_PER_TASK = 2500
 # below this level size AQE's per-stage re-planning round-trips cost
 # more driver latency than they save (see _set_shuffle)
 AQE_MIN_ROWS = 100_000
-# below this many candidates, seq assignment single-task sorts instead
-# of range-partitioning (saves the sampling + count jobs).
+# up to this many candidates, seq assignment runs on one partition
+# (no range-sampling or per-partition count job).
 SMALL_SEQ_ROWS = 150_000
 
 
@@ -456,10 +451,6 @@ class CrawlEngine:
         )
         self.superstep = 0
         self.max_seq = 0
-        # seq range of the most recently assigned level (None until the
-        # first pipeline run and after resume — assign_seq then falls
-        # back to its sampling path)
-        self._level_bounds: tuple[int, int] | None = None
         self.committed_total = 0
         self.queued_remaining = 0
         # highest politeness-clock value scheduled so far (drives the
@@ -1118,23 +1109,19 @@ class CrawlEngine:
             n_part=self._n_part(n_cand),
         )
 
-        # second cache before assign_seq: the large path's range
-        # partitioning samples its input (an extra pass), which must
-        # not re-run the join lineage
-        c = c.cache()
-        caches.append(c)
-        if n_cand <= SMALL_SEQ_ROWS:
-            seq_df = assign_seq_small(
-                c, ["parent_seq", "out_pos", "sub"], self.max_seq
-            )
-        else:
-            seq_df = assign_seq(
-                c,
-                ["parent_seq", "out_pos", "sub"],
-                self.max_seq,
-                n_part=self._n_part(n_cand),
-                first_col_bounds=self._level_bounds,
-            )
+        n_seq = 1 if n_cand <= SMALL_SEQ_ROWS else self._n_part(n_cand)
+        if n_seq > 1:
+            # second cache before assign_seq: multi-partition range
+            # partitioning samples its input (an extra pass), which
+            # must not re-run the join lineage
+            c = c.cache()
+            caches.append(c)
+        seq_df = assign_seq(
+            c, ["parent_seq", "out_pos", "sub"], self.max_seq, n_part=n_seq
+        )
+        # released with the other caches; held here because the variants
+        # join below replaces seq_df with a frame that lacks the handle
+        caches.append(seq_df._assign_seq_cache)
         qtick("qp:seq_assigned")
         if cfg.record_url_variants:
             # reference-trail variant marking (ProcessFinalize.java:
@@ -1197,8 +1184,6 @@ class CrawlEngine:
         def cleanup():
             for df in caches:
                 df.unpersist()
-            if hasattr(seq_df, "_assign_seq_cache"):
-                seq_df._assign_seq_cache.unpersist()
 
         if not collect:
             # caller folds counts_df into its own single collect and
@@ -1500,14 +1485,7 @@ class CrawlEngine:
             "DUPLICATE_OR_BAD_SKIPPED": n_cand - n_new,
         }
         stats.update(sm_stats)
-        # the level just assigned spans exactly [old max_seq, new max_seq):
-        # next superstep's candidates carry parent_seq values from inside
-        # it, so assign_seq can bucket by this range instead of sampling.
-        # A stale/loose range is only a balance hint (the bucket map is
-        # clamped + monotone), never a correctness input.
-        lo = self.max_seq
         self.max_seq += n_new
-        self._level_bounds = (lo, self.max_seq - 1) if n_new else None
         self._ledger_rows += n_new
         return stats
 

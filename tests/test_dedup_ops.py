@@ -38,51 +38,59 @@ def test_bloom_probe_overflow_safe():
         assert ((pos >= 0) & (pos < (1 << 20))).all()
 
 
-def test_assign_seq_dense_and_ordered(spark):
+@pytest.mark.parametrize("n_part", [1, 4])
+def test_assign_seq_dense_and_ordered(spark, n_part):
     df = spark.range(10_000).select(
         (F.col("id") * 7919 % 10_000).alias("a"),
         F.col("id").alias("b"),
     )
-    out = assign_seq(df, ["a", "b"], start=100).collect()
+    out = assign_seq(df, ["a", "b"], start=100, n_part=n_part).collect()
     rows = sorted(out, key=lambda r: (r["a"], r["b"]))
     seqs = [r["seq"] for r in rows]
     assert seqs == list(range(100, 100 + len(rows)))
 
 
-def test_assign_seq_empty(spark):
-    df = spark.createDataFrame([], "a long, b long")
-    assert assign_seq(df, ["a", "b"], start=0).count() == 0
-
-
-def test_assign_seq_bucketed_matches_sampled(spark):
-    """The sample-free bounds path must produce the identical dense
-    sequence — with exact bounds, loose bounds, stale (wrong) bounds,
-    and null first-column values (bounds are a balance hint only)."""
-    df = spark.range(10_000).select(
-        (F.col("id") * 7919 % 10_000 + 50_000).alias("a"),
-        F.col("id").alias("b"),
-    )
-    expect = list(range(7, 7 + 10_000))
-
-    def seqs(bounds):
-        out = assign_seq(
-            df, ["a", "b"], start=7, first_col_bounds=bounds
-        ).collect()
-        rows = sorted(out, key=lambda r: (r["a"], r["b"]))
-        return [r["seq"] for r in rows]
-
-    assert seqs((50_000, 59_999)) == expect  # exact
-    assert seqs((0, 10_000_000)) == expect  # loose
-    assert seqs((59_000, 59_010)) == expect  # stale/wrong: skew only
-    # null first column sorts first, like the sampled path
-    dfn = spark.createDataFrame(
+@pytest.mark.parametrize("n_part", [1, 4])
+def test_assign_seq_null_first_column_sorts_first(spark, n_part):
+    df = spark.createDataFrame(
         [(None, 2), (5, 0), (None, 1), (3, 9)], "a long, b long"
     )
-    out = assign_seq(
-        dfn, ["a", "b"], start=0, first_col_bounds=(3, 5)
-    ).collect()
+    out = assign_seq(df, ["a", "b"], start=0, n_part=n_part).collect()
     got = {(r["a"], r["b"]): r["seq"] for r in out}
     assert got == {(None, 1): 0, (None, 2): 1, (3, 9): 2, (5, 0): 3}
+
+
+@pytest.mark.parametrize("n_part", [1, 4])
+def test_assign_seq_empty(spark, n_part):
+    df = spark.createDataFrame([], "a long, b long")
+    assert assign_seq(df, ["a", "b"], start=0, n_part=n_part).count() == 0
+
+
+def test_assign_seq_single_partition_adds_no_jobs(spark):
+    """``n_part=1`` (the path every small crawl level takes) launches
+    no range-sampling or per-partition count job: collecting it costs
+    no more Spark jobs than a plain one-partition sort."""
+    df = spark.range(5_000).select(
+        (F.col("id") * 7919 % 5_000).alias("a"), F.col("id").alias("b")
+    )
+    sc = spark.sparkContext
+
+    def n_jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    base = n_jobs(
+        "seq-baseline",
+        lambda: df.repartition(1).sortWithinPartitions("a", "b"),
+    )
+    one = n_jobs(
+        "seq-one-part", lambda: assign_seq(df, ["a", "b"], 0, n_part=1)
+    )
+    assert 0 < one <= base, (one, base)
 
 
 def test_first_wins(spark):
@@ -516,6 +524,65 @@ def test_crawl_parity_with_synced_bloom(spark, tmp_path):
         (r["url"], r["status"], r["outcome"], r["depth"])
         for r in sim.urlseen()
     )
+
+
+def test_crawl_parity_with_range_partitioned_seq(spark, tmp_path, monkeypatch):
+    """Engine run with every queue level's seq assignment forced onto
+    the multi-partition path (sampled range partitioning + cached
+    per-partition counts): fetch sequence and URL-seen set must equal
+    the oracle, and the assigned seqs must stay dense."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.oracle.simulator import CrawlSimulator
+    from crawlspark.plans import superstep
+    from crawlspark.sources.webgen import SiteParams, build_site
+
+    monkeypatch.setattr(superstep, "SMALL_SEQ_ROWS", 0)
+    monkeypatch.setattr(superstep, "ROWS_PER_TASK", 8)
+    n_parts = []
+
+    def spy(*args, **kwargs):
+        n_parts.append(kwargs["n_part"])
+        return assign_seq(*args, **kwargs)
+
+    monkeypatch.setattr(superstep, "assign_seq", spy)
+    # the synced-Bloom site one level shallower: levels of a few dozen
+    # candidates already split into several seq partitions
+    params = SiteParams(
+        seed=7, n_hosts=3, depth=2, branching=3, dup_pct=0.25,
+        redirect_pct=0.1, cross_pct=0.4, n_seed_hosts=2,
+    )
+    cfg = CrawlConfig(max_depth=2, default_delay_ms=1000)
+    site = build_site(params)
+    seeds = [r["url"] for r in site.seeds.to_dict("records")]
+    sim = CrawlSimulator(
+        site.pages_dict(), site.robots_dict(), cfg
+    ).run(seeds)
+    eng = superstep.CrawlEngine(
+        spark, str(tmp_path / "crawl"), cfg,
+        site.spark_pages_df(spark), site.spark_robots_df(spark),
+    )
+    eng.bootstrap(seeds)
+    eng.run()
+    assert max(n_parts) > 1  # the multi-partition path actually ran
+    got = eng.fetch_log().toPandas()
+    assert got["url"].tolist() == [r["url"] for r in sim.fetch_log]
+    seen = eng.urlseen().toPandas()
+    assert sorted(
+        zip(seen["url"], seen["status"], seen["outcome"], seen["depth"])
+    ) == sorted(
+        (r["url"], r["status"], r["outcome"], r["depth"])
+        for r in sim.urlseen()
+    )
+    # every queue-pipeline row (QUEUED or REJECTED; PROCESSED rows
+    # re-record an earlier seq) holds one seq of exactly 0..N-1
+    assigned = [
+        r["seq"]
+        for r in eng.levels.read()
+        .filter(F.col("status") != "PROCESSED")
+        .select("seq")
+        .collect()
+    ]
+    assert sorted(assigned) == list(range(eng.max_seq))
 
 
 def test_bloom_bits_validation():

@@ -1,6 +1,9 @@
 """Similarity-search operators: vectorized brute-force parity and
 ANN recall sanity."""
 
+import pytest
+from pyspark.sql import functions as F
+
 from crawlspark.operators.similarity import (
     ann_recall,
     cosine_topk,
@@ -25,6 +28,15 @@ def test_vectorized_matches_fold_topk(spark):
     # and the scores agree to float tolerance
     m = a.merge(b, on=["query_id", "neighbor_id"], suffixes=("_a", "_b"))
     assert (abs(m["cos_a"] - m["cos_b"]) < 1e-9).all()
+
+
+def test_vectorized_rejects_duplicate_query_ids(spark):
+    """Duplicate vec_ids below n_queries would grow the driver-collected
+    query block past its bound: refused, not silently collected."""
+    emb = _emb(spark).filter(F.col("vec_id") < 3)
+    dup = emb.unionByName(emb)
+    with pytest.raises(ValueError, match="n_queries"):
+        cosine_topk_vectorized(dup, n_queries=3, k=2)
 
 
 def test_ann_recall_bounds(spark):
