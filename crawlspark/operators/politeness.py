@@ -120,21 +120,14 @@ def schedule_hosts(
     patterns: tuple = (),
     scope: str = "SITE",
     n_threads: int = 2,
-    delays_broadcast: bool = True,
-    state_broadcast: bool = True,
 ) -> DataFrame:
     """Add ``sched_ms`` to a QUEUED batch.
 
     ``host_delays``: (host, crawl_delay_ms nullable) dim.
     ``host_state``: (scope_key, last_sched_ms) carried
-    across supersteps (None on the first). Both dims are O(distinct
-    hosts): ``delays_broadcast``/``state_broadcast`` force the
-    broadcast hint only while the caller's counted strategy says the
-    dim is driver-safe (CrawlEngine ratchets host_state per superstep
-    against ``host_dim_broadcast_max_rows``); when False the join goes
-    unhinted and Catalyst/AQE pick shuffle-hash/sort-merge — at the
-    10^10-URL tier a forced O(hosts) broadcast is an OOM, not a plan
-    choice. ``schedules``/``patterns``:
+    across supersteps (None on the first). Both joins are unhinted:
+    the session's broadcast threshold picks their strategy.
+    ``schedules``/``patterns``:
     time-of-day and per-URL delay resolvers — when configured, hosts
     WITHOUT a robots crawl-delay take an O(n)-python per-row path
     (the delay varies per request, so the recurrence has no closed
@@ -145,16 +138,11 @@ def schedule_hosts(
     deterministic seq%K thread slot. Non-SITE groups span hosts, so
     the robots crawl-delay is resolved per row inside the group.
     """
-    delays_dim = (
-        F.broadcast(host_delays) if delays_broadcast else host_delays
-    )
-    b = batch.join(delays_dim, "host", "left").withColumn(
+    b = batch.join(host_delays, "host", "left").withColumn(
         "__scope_key", scope_key_col(scope, n_threads)
     )
     if host_state is not None:
         state_dim = host_state.withColumnRenamed("host", "__scope_key")
-        if state_broadcast:
-            state_dim = F.broadcast(state_dim)
         b = b.join(state_dim, "__scope_key", "left")
     else:
         b = b.withColumn("last_sched_ms", F.lit(None).cast("long"))

@@ -4,17 +4,17 @@ The reference caches parsed robots per site in a CacheMap
 (StandardRobotsTxtProvider.java:88-139); we parse every host's body
 once, distributed, into a flat ``robots_rules`` dim table
 
-    (host, pattern, pattern_re, allow, pattern_len, crawl_delay_ms)
+    (host, pattern, allow, pattern_len, crawl_delay_ms)
 
-and filter candidates with a host equi-join + JVM-side
-``regexp_like`` + a longest-match aggregation implementing
-RobotsTxtFiltersStage.java:88-103 (Disallow rejects unless a
-*strictly longer* Allow matches). No Python in the match path.
+The per-host crawl delays are a dim derived from it (``host_delays``).
+Its (host, pattern, allow) rows are collected once per run and
+broadcast to ``make_robots_verdict_udf``, which filters candidates
+with the oracle's ``RobotsMatcher`` — longest match, where Disallow
+rejects unless a *strictly longer* Allow matches
+(RobotsTxtFiltersStage.java:88-103).
 """
 
 from __future__ import annotations
-
-import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -23,22 +23,9 @@ from pyspark.sql import functions as F
 from ..functions.robots import parse_robots_txt
 
 RULES_SCHEMA = (
-    "host string, pattern string, pattern_re string, allow boolean, "
-    "pattern_len int, crawl_delay_ms long"
+    "host string, pattern string, allow boolean, pattern_len int, "
+    "crawl_delay_ms long"
 )
-
-
-def pattern_to_regex(pattern: str) -> str:
-    """robots path pattern -> anchored regex (``*`` -> ``.*``, ``$``).
-
-    Emits only escapes valid in both Python and Java regex, so the
-    same string drives the oracle matcher and ``regexp_like``.
-    """
-    anchored = pattern.endswith("$")
-    if anchored:
-        pattern = pattern[:-1]
-    body = ".*".join(re.escape(p) for p in pattern.split("*"))
-    return "^" + body + ("$" if anchored else "")
 
 
 def build_robots_rules(robots_df: DataFrame, user_agent: str) -> DataFrame:
@@ -57,17 +44,14 @@ def build_robots_rules(robots_df: DataFrame, user_agent: str) -> DataFrame:
                 )
                 if parsed.rules:
                     for p, allow in parsed.rules:
-                        rows.append(
-                            (host, p, pattern_to_regex(p), allow, len(p), delay)
-                        )
+                        rows.append((host, p, allow, len(p), delay))
                 else:
-                    rows.append((host, None, None, True, 0, delay))
+                    rows.append((host, None, True, 0, delay))
             yield pd.DataFrame(
                 rows,
                 columns=[
                     "host",
                     "pattern",
-                    "pattern_re",
                     "allow",
                     "pattern_len",
                     "crawl_delay_ms",
@@ -84,16 +68,6 @@ def host_delays(rules_df: DataFrame) -> DataFrame:
     )
 
 
-def match_target_col(url_col):
-    """path(+?query) a rule matches against — JVM-side parse_url."""
-    path = F.parse_url(url_col, F.lit("PATH"))
-    path = F.when((path.isNull()) | (path == ""), F.lit("/")).otherwise(path)
-    query = F.parse_url(url_col, F.lit("QUERY"))
-    return F.when(
-        query.isNull() | (query == ""), path
-    ).otherwise(F.concat(path, F.lit("?"), query))
-
-
 def make_robots_verdict_udf(spark, rules_rows: list):
     """Broadcast-dict longest-match verdict — a single projection,
     zero shuffles, zero extra jobs per superstep.
@@ -102,10 +76,7 @@ def make_robots_verdict_udf(spark, rules_rows: list):
     rules dim — collected ONCE per run; the per-host pattern lists are
     broadcast and candidates match in a vectorized pandas UDF using
     the *same* ``RobotsMatcher`` the pure-Python oracle uses (exact
-    parity by construction). This is the right physical shape while
-    the rule set fits a broadcast (hundreds of MB ≈ 10^6+ hosts);
-    beyond that, flip to ``robots_verdict`` — the join/agg dataflow
-    form over the ``robots_rules`` dim table.
+    parity by construction).
     """
     from ..functions.robots import RobotsMatcher, RobotsRules
 
@@ -151,30 +122,3 @@ def make_robots_verdict_udf(spark, rules_rows: list):
     # the Arrow node (fixed per-task Python round-trip) across
     # filter/projection and union branches
     return robots_ok.asNondeterministic()
-
-
-def robots_verdict(cand_urls: DataFrame, rules_df: DataFrame) -> DataFrame:
-    """(url, host) -> (url, robots_ok boolean) via longest-match."""
-    c = cand_urls.withColumn("__mt", match_target_col(F.col("url")))
-    # rules is a per-host dim (a handful of rows per host); broadcast
-    # explicitly — its mapInPandas lineage defeats size estimation, so
-    # without the hint Catalyst plans a sort-merge join.
-    j = c.join(F.broadcast(rules_df), "host", "left")
-    matched = F.col("pattern_re").isNotNull() & F.regexp_like(
-        F.col("__mt"), F.col("pattern_re")
-    )
-    agg = j.groupBy("url").agg(
-        F.max(F.when(matched & ~F.col("allow"), F.col("pattern_len"))).alias(
-            "__dis"
-        ),
-        F.max(F.when(matched & F.col("allow"), F.col("pattern_len"))).alias(
-            "__alw"
-        ),
-    )
-    return agg.select(
-        "url",
-        (
-            F.col("__dis").isNull()
-            | (F.coalesce(F.col("__alw"), F.lit(-1)) > F.col("__dis"))
-        ).alias("robots_ok"),
-    )

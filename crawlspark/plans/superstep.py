@@ -73,10 +73,12 @@ Scale/efficiency notes:
   clustering width: those shuffles carry highly-compressible slim rows
   that AQE would coalesce into one partition, serializing the Python
   stages downstream (politeness -> fetch -> parse).
-* Robots matching defaults to a broadcast of the per-host rule lists
-  applied in a zero-shuffle pandas UDF (same ``RobotsMatcher`` as the
-  oracle); the ``robots_rules`` dim-table join remains for rule sets
-  too large to broadcast (``CrawlConfig.robots_broadcast=False``).
+* Robots matching broadcasts the per-host rule lists once and applies
+  them in a zero-shuffle pandas UDF (same ``RobotsMatcher`` as the
+  oracle).
+* Host-keyed and baseline dimension joins carry no hints: the
+  session's ``spark.sql.autoBroadcastJoinThreshold`` alone picks
+  broadcast or shuffle join.
 * Fetch and parse are FUSED into one ``mapInPandas`` pass when the
   fetcher exposes its generator form: page bodies are parsed in the
   Python worker that fetched them and never serialize to the JVM.
@@ -106,7 +108,6 @@ from ..operators.robots_filter import (
     build_robots_rules,
     host_delays,
     make_robots_verdict_udf,
-    robots_verdict,
 )
 from ..sources.docgen import make_document_udf
 from .ledger import AppendTable, SnapshotTable
@@ -339,15 +340,6 @@ class CrawlEngine:
         self.workdir = workdir
         self.cfg = cfg
         self.baseline = baseline_df.cache() if baseline_df is not None else None
-        # memoized "is the baseline driver-safe to broadcast" verdict
-        # (capped count on first use — see _baseline_hint)
-        self._baseline_small: bool | None = None
-        # host-keyed dim strategies (host_dim_broadcast_max_rows):
-        # delays/presence are static per run -> memoized once;
-        # host_state grows monotonically -> ratcheted per superstep
-        # (re-counted while small, permanently large once over cap)
-        self._delays_small: bool | None = None
-        self._presence_small: bool | None = None
         # UrlNormalizerStage slot: the fused default pipeline unless
         # the config names its own op list (GenericUrlNormalizer
         # analog — functions/urlnorm.py; oracle builds the identical
@@ -362,7 +354,6 @@ class CrawlEngine:
                 cfg.url_replacements,
                 cfg.url_ip_resolver,
             )
-        self._host_state_big = False
         self._orphans_done = baseline_df is None
         os.makedirs(workdir, exist_ok=True)
         self.fetcher = fetcher
@@ -417,23 +408,14 @@ class CrawlEngine:
                 "etag",
             ).cache()
         self.rules = build_robots_rules(robots_df, cfg.user_agent).cache()
-        self.delays = host_delays(self.rules).cache()
         self._robots_udf = None
         if cfg.honor_robots:
-            bc = cfg.robots_broadcast
-            if bc is None:
-                # auto strategy: broadcast only a driver-safe rule dim;
-                # beyond the cap the distributed dim-join path runs
-                # (one count action at init, never O(hosts) collected)
-                bc = (
-                    self.rules.limit(
-                        cfg.robots_broadcast_max_rules + 1
-                    ).count()
-                    <= cfg.robots_broadcast_max_rules
-                )
-            if bc:
-                rows = self.rules.select("host", "pattern", "allow").collect()
-                self._robots_udf = make_robots_verdict_udf(spark, rows)
+            rows = self.rules.select("host", "pattern", "allow").collect()
+            self._robots_udf = make_robots_verdict_udf(spark, rows)
+        # cached after the collect has loaded the rules cache, so the
+        # delay dim carries the rules' measured size and the politeness
+        # join plans as a broadcast under the session threshold
+        self.delays = host_delays(self.rules).cache()
         self.levels = AppendTable(
             spark, os.path.join(workdir, "ledger_levels"), schema=LEDGER_SCHEMA
         )
@@ -559,51 +541,6 @@ class CrawlEngine:
             "spark.sql.adaptive.enabled",
             "true" if rows > AQE_MIN_ROWS else "false",
         )
-
-    def _baseline_hint(self, proj: DataFrame) -> DataFrame:
-        """Broadcast a baseline projection only while the baseline is
-        counted driver-safe (one capped count, memoized — the same
-        auto strategy as robots_broadcast). The baseline is O(prior
-        crawl): at the 10^10-URL tier a forced broadcast is an OOM,
-        not a plan choice, so beyond the cap the join goes unhinted
-        and Catalyst/AQE pick shuffle-hash / sort-merge."""
-        if self._baseline_small is None:
-            cap = self.cfg.baseline_broadcast_max_rows
-            self._baseline_small = (
-                self.baseline.limit(cap + 1).count() <= cap
-            )
-        return F.broadcast(proj) if self._baseline_small else proj
-
-    def _dim_small(self, df: DataFrame, cap: int) -> bool:
-        """One capped count: is this dim driver-safe to broadcast?
-        limit(cap+1) bounds the scan — never O(dim) driver work."""
-        return df.limit(cap + 1).count() <= cap
-
-    def _delays_broadcastable(self) -> bool:
-        """Crawl-delay dim (O(hosts with robots rules)) — static per
-        run, counted once."""
-        if self._delays_small is None:
-            self._delays_small = self._dim_small(
-                self.delays, self.cfg.host_dim_broadcast_max_rows
-            )
-        return self._delays_small
-
-    def _host_state_broadcastable(self, host_state) -> bool:
-        """Politeness last-sched state (O(distinct hosts ever seen)) —
-        grows monotonically, so the verdict is a ratchet: re-counted
-        per superstep while small (host_state is a localCheckpoint in
-        memory — the capped count is cheap), permanently non-broadcast
-        once over the cap."""
-        if host_state is None:
-            return True
-        if self._host_state_big:
-            return False
-        if not self._dim_small(
-            host_state, self.cfg.host_dim_broadcast_max_rows
-        ):
-            self._host_state_big = True
-            return False
-        return True
 
     def _ledger_df(self) -> DataFrame:
         """All URL-seen rows (every level part; a QUEUED row and its
@@ -1310,12 +1247,12 @@ class CrawlEngine:
 
         # TOO_DEEP/FILTERED precede robots in the stage ladder, so rows
         # they already rejected never need a pattern match — mask them
-        # out of the robots evaluation (null host short-circuits the
-        # UDF; the join path filters its probe side). On a leaf level
-        # ~all candidates are TOO_DEEP: this turns the level's robots
-        # cost from O(candidates) to O(live).
+        # out of the robots evaluation (a null host short-circuits the
+        # UDF to "allowed"). On a leaf level ~all candidates are
+        # TOO_DEEP: this turns the level's robots cost from
+        # O(candidates) to O(live).
         live = ~too_deep & ~filtered
-        if cfg.honor_robots and self._robots_udf is not None:
+        if cfg.honor_robots:
             c = c.withColumn(
                 "robots_ok",
                 self._robots_udf(
@@ -1323,14 +1260,6 @@ class CrawlEngine:
                     F.when(live, F.col("host")),
                 ),
             )
-        elif cfg.honor_robots:
-            verdict = robots_verdict(
-                c.filter(live).select("url", "host"), self.rules
-            )
-            # left join: masked rows get null robots_ok, which the
-            # outcome ladder coalesces to "allowed" (their outcome is
-            # already decided by an earlier rung)
-            c = c.join(verdict, "url", "left")
         else:
             c = c.withColumn("robots_ok", F.lit(True))
 
@@ -1338,7 +1267,7 @@ class CrawlEngine:
             "outcome",
             F.when(too_deep, "TOO_DEEP")
             .when(filtered, "FILTERED")
-            .when(~F.coalesce(F.col("robots_ok"), F.lit(True)), "ROBOTS_TXT")
+            .when(~F.col("robots_ok"), "ROBOTS_TXT")
             .otherwise(F.lit(None).cast("string")),
         ).withColumn(
             "status",
@@ -1571,7 +1500,7 @@ class CrawlEngine:
                 _bcol("sm_lastmod").alias("base_sm_lastmod"),
                 _bcol("sm_changefreq").alias("base_sm_changefreq"),
             )
-            b2 = batch.join(self._baseline_hint(bsched), "url", "left")
+            b2 = batch.join(bsched, "url", "left")
             is_prem = F.col("base_sched").isNotNull() & ~_recrawlable_col(
                 cfg
             )
@@ -1597,8 +1526,6 @@ class CrawlEngine:
             patterns=cfg.delay_patterns,
             scope=cfg.delay_scope,
             n_threads=cfg.delay_threads,
-            delays_broadcast=self._delays_broadcastable(),
-            state_broadcast=self._host_state_broadcastable(host_state),
         )
 
         # -- metadata checksum band (MetadataChecksumStage + the HEAD
@@ -1643,9 +1570,7 @@ class CrawlEngine:
                     base_meta = self.baseline.select(
                         "url", F.col("meta_ck").alias("base_meta_head")
                     )
-                    hj = hj.join(
-                        self._baseline_hint(base_meta), "url", "left"
-                    )
+                    hj = hj.join(base_meta, "url", "left")
                     unmod_cond = (
                         F.col("base_meta_head").isNotNull()
                         & (F.col("meta_ck") == F.col("base_meta_head"))
@@ -1751,15 +1676,6 @@ class CrawlEngine:
             presence = self.sitemaps.select("host").distinct().withColumn(
                 "__has_sm", F.lit(True)
             )
-            # presence is O(hosts with sitemaps): broadcast only while
-            # counted driver-safe (static per run — memoized once);
-            # beyond the cap the join goes unhinted.
-            if self._presence_small is None:
-                self._presence_small = self._dim_small(
-                    presence, self.cfg.host_dim_broadcast_max_rows
-                )
-            if self._presence_small:
-                presence = F.broadcast(presence)
             parsed = parsed.join(presence, "host", "left")
         if (
             cfg.stay_on_domain

@@ -35,6 +35,12 @@ def _sweep_stale_scratch(local_dir: str, max_age_s: int = 6 * 3600) -> None:
         pass
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory in whole GiB, clamped to [1g, 48g]."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "crawlspark",
     cores: int | str | None = None,
@@ -79,7 +85,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

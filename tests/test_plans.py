@@ -76,21 +76,41 @@ def test_minhash_dup_pairs_single_scan(spark):
         spark.catalog.clearCache()
 
 
-def test_baseline_broadcast_auto_strategy(spark, tmp_path):
-    """Baseline projections are broadcast only while the baseline is
-    counted driver-safe: above cfg.baseline_broadcast_max_rows the
-    joins go unhinted (the baseline is O(prior crawl) — a forced
-    broadcast at the 10^10 tier is an OOM, not a plan choice)."""
-    from pyspark.sql import functions as F
-
+def test_dim_joins_follow_session_broadcast_threshold(spark, tmp_path):
+    """Dimension joins carry no broadcast hint: the session's
+    autoBroadcastJoinThreshold alone plans small dims (the engine's
+    cached crawl-delay dim and baseline, a checkpointed host-state
+    fold) as broadcast joins, and with the threshold off the same joins
+    shuffle and give the same rows (AQE off, as on every small crawl
+    level, so the executed plan is final). A checkpoint keeps the size
+    estimate of the plan it was taken from."""
     from crawlspark.config import CrawlConfig
+    from crawlspark.operators.politeness import schedule_hosts
     from crawlspark.plans.superstep import CrawlEngine
 
+    batch = spark.range(50).select(
+        F.concat(
+            F.lit("http://h"), F.col("id") % 5, F.lit(".x/p"), F.col("id")
+        ).alias("url"),
+        F.concat(F.lit("h"), F.col("id") % 5, F.lit(".x")).alias("host"),
+        F.col("id").alias("seq"),
+        (F.col("id") * 10).alias("avail_ms"),
+    )
+    # the politeness fold's shape: per-host max sched, checkpointed
+    # (estimated from its spark.range source)
+    state = (
+        batch.groupBy("host")
+        .agg(F.max("avail_ms").alias("last_sched_ms"))
+        .localCheckpoint()
+    )
     pages = spark.createDataFrame(
         [("http://h.x/", 200, "<html></html>", None)],
         "url string, status int, html string, redirect_to string",
     )
-    robots = spark.createDataFrame([], "host string, body string")
+    robots = spark.createDataFrame(
+        [(f"h{i}.x", f"User-agent: *\nCrawl-delay: {i}\n") for i in range(3)],
+        "host string, body string",
+    )
     baseline = spark.range(10).select(
         F.concat(F.lit("http://h.x/p"), F.col("id")).alias("url"),
         F.lit("ck").alias("checksum"),
@@ -100,36 +120,47 @@ def test_baseline_broadcast_auto_strategy(spark, tmp_path):
         F.lit(None).cast("string").alias("outcome"),
     )
 
-    def plan_of(cap):
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def rows(df):
+        return sorted((r["url"], r["sched_ms"]) for r in df.collect())
+
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
         eng = CrawlEngine(
             spark,
-            str(tmp_path / f"b{cap}"),
-            CrawlConfig(baseline_broadcast_max_rows=cap),
+            str(tmp_path / "base"),
+            CrawlConfig(),
             pages,
             robots,
             baseline_df=baseline,
         )
-        proj = eng.baseline.select("url", "checksum")
-        hinted = eng._baseline_hint(proj)
+        sched = schedule_hosts(batch, eng.delays, state, 1000)
+        logical = sched._jdf.queryExecution().optimizedPlan().toString()
+        assert "strategy=broadcast" not in logical, logical[:3000]
+        plan = executed(sched)
+        assert plan.count("BroadcastHashJoin") == 2, plan[:3000]
+        broadcast_rows = rows(sched)
+
         probe = spark.range(100).select(
             F.concat(F.lit("http://h.x/p"), F.col("id")).alias("url")
         )
-        return (
-            eng._baseline_small,
-            probe.join(hinted, "url", "left")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString(),
+        base_join = probe.join(
+            eng.baseline.select("url", "checksum"), "url", "left"
         )
+        assert "BroadcastHashJoin" in executed(base_join)
 
-    small, plan_small = plan_of(1000)  # 10 rows <= cap -> broadcast
-    assert small is True
-    assert "BroadcastHashJoin" in plan_small
-    big, plan_big = plan_of(5)  # 10 rows > cap -> unhinted
-    assert big is False
-    # Catalyst may still pick broadcast for a genuinely tiny frame via
-    # autoBroadcastJoinThreshold — what must be gone is the FORCED
-    # hint; assert on the optimized logical plan instead
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        shuffled = schedule_hosts(batch, eng.delays, state, 1000)
+        plan = executed(shuffled)
+        assert "BroadcastHashJoin" not in plan, plan[:3000]
+        assert rows(shuffled) == broadcast_rows
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
 
 
 def test_lsh_signature_plan_has_no_per_row_hash(spark):
@@ -148,102 +179,55 @@ def test_lsh_signature_plan_has_no_per_row_hash(spark):
     assert "md5" not in plan.lower(), plan[:2000]
 
 
-def test_host_dim_broadcast_auto_strategy(spark):
-    """The politeness host_state / crawl-delay dims are O(distinct
-    hosts ever seen): the broadcast hint must appear ONLY when the
-    caller's counted strategy says so (r3's last two forced O(hosts)
-    broadcasts) — unhinted, Catalyst/AQE pick shuffle-hash/sort-merge
-    (auto-broadcast disabled here so the hint is observable)."""
-    from pyspark.sql import functions as F
+def test_crawl_parity_without_broadcast_joins(spark, tmp_path):
+    """With auto-broadcast off every dimension join in the engine
+    (crawl delays, host state, the URL-seen anti-join) plans as a
+    shuffle join; the fetch order and politeness schedule still equal
+    the pure-Python oracle's."""
+    import pandas as pd
 
-    from crawlspark.operators.politeness import schedule_hosts
+    from crawlspark.config import CrawlConfig
+    from crawlspark.oracle.simulator import CrawlSimulator
+    from crawlspark.plans.superstep import CrawlEngine
+    from crawlspark.sources.webgen import SiteParams, build_site
 
+    site = build_site(
+        SiteParams(
+            seed=31,
+            n_hosts=4,
+            depth=2,
+            branching=4,
+            dup_pct=0.1,
+            cross_pct=0.3,
+            n_seed_hosts=3,
+        )
+    )
+    seeds = [r["url"] for r in site.seeds.to_dict("records")]
+    cfg = CrawlConfig(max_depth=2, default_delay_ms=1000)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        batch = spark.range(50).select(
-            F.concat(F.lit("http://h"), (F.col("id") % 5), F.lit(".x/p"), F.col("id")).alias("url"),
-            F.concat(F.lit("h"), (F.col("id") % 5), F.lit(".x")).alias("host"),
-            F.col("id").alias("seq"),
-            (F.col("id") * 10).alias("avail_ms"),
-        )
-        delays = spark.createDataFrame(
-            [(f"h{i}.x", None) for i in range(5)],
-            "host string, crawl_delay_ms long",
-        )
-        state = spark.createDataFrame(
-            [(f"h{i}.x", 0) for i in range(5)],
-            "host string, last_sched_ms long",
-        )
-
-        def plan_of(db, sb):
-            df = schedule_hosts(
-                batch, delays, state, 1000,
-                delays_broadcast=db, state_broadcast=sb,
-            )
-            return df._jdf.queryExecution().executedPlan().toString()
-
-        hinted = plan_of(True, True)
-        assert hinted.count("BroadcastHashJoin") == 2, hinted[:3000]
-        unhinted = plan_of(False, False)
-        assert "BroadcastHashJoin" not in unhinted, unhinted[:3000]
-        # results identical either way — strategy is physical only
-        a = schedule_hosts(batch, delays, state, 1000).collect()
-        b = schedule_hosts(
-            batch, delays, state, 1000,
-            delays_broadcast=False, state_broadcast=False,
-        ).collect()
-        assert sorted((r["url"], r["sched_ms"]) for r in a) == sorted(
-            (r["url"], r["sched_ms"]) for r in b
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_engine_host_state_ratchet(spark, tmp_path):
-    """CrawlEngine's host_state verdict ratchets: with a 0-row cap the
-    first superstep flips it to permanently-large (never broadcast
-    again, never re-counted) and the crawl result is unchanged."""
-    from crawlspark.config import CrawlConfig
-    from crawlspark.plans.superstep import CrawlEngine
-
-    def page(u, links):
-        html = "<html><body>" + "".join(
-            f'<a href="{x}">x</a>' for x in links
-        ) + "</body></html>"
-        return (u, 200, html, None)
-
-    pages = spark.createDataFrame(
-        [
-            page("http://h.x/", ["http://h.x/a", "http://h.x/b"]),
-            page("http://h.x/a", []),
-            page("http://h.x/b", []),
-        ],
-        "url string, status int, html string, redirect_to string",
-    )
-    robots = spark.createDataFrame([("h.x", None)], "host string, body string")
-
-    def crawl(cap, tag):
         eng = CrawlEngine(
             spark,
-            str(tmp_path / tag),
-            CrawlConfig(max_depth=2, host_dim_broadcast_max_rows=cap),
-            pages,
-            robots,
+            str(tmp_path / "shuffled"),
+            cfg,
+            site.spark_pages_df(spark),
+            site.spark_robots_df(spark),
         )
-        eng.bootstrap(["http://h.x/"])
+        eng.bootstrap(seeds)
         eng.run()
-        log = [
-            (r["url"], r["scheduled_at_ms"])
-            for r in eng.fetch_log().orderBy("seq").collect()
-        ]
-        return eng, log
-
-    eng_big, log_big = crawl(2_000_000, "hs_big")
-    assert eng_big._host_state_big is False
-    eng_zero, log_zero = crawl(0, "hs_zero")
-    assert eng_zero._host_state_big is True
-    assert log_big == log_zero
+        got = eng.fetch_log().toPandas()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    want = pd.DataFrame(
+        CrawlSimulator(site.pages_dict(), site.robots_dict(), cfg)
+        .run(seeds)
+        .fetch_log
+    )
+    assert got["url"].tolist() == want["url"].tolist()
+    assert (
+        got["scheduled_at_ms"].tolist() == want["scheduled_at_ms"].tolist()
+    )
 
 
 def test_sampling_ops_are_shuffle_free_projections(spark):
@@ -326,3 +310,17 @@ def test_sweep_stale_scratch(tmp_path):
     os.utime(old, (stale, stale))
     _sweep_stale_scratch(str(tmp_path))
     assert not old.exists() and new.exists()
+
+
+def test_default_driver_mem_fits_the_machine():
+    """The default driver heap is derived from physical memory: at
+    least 1 GiB, at most the machine's RAM and at most 48 GiB."""
+    import os
+
+    from crawlspark.session import _default_driver_mem
+
+    mem = _default_driver_mem()
+    assert mem.endswith("g")
+    gib = int(mem[:-1]) * 2**30
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 2**30 <= gib <= min(phys, 48 * 2**30)
