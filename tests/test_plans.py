@@ -76,16 +76,11 @@ def test_minhash_dup_pairs_single_scan(spark):
         spark.catalog.clearCache()
 
 
-def test_dim_joins_follow_session_broadcast_threshold(spark, tmp_path):
-    """Dimension joins carry no broadcast hint: the session's
-    autoBroadcastJoinThreshold alone plans small dims (the engine's
-    cached crawl-delay dim and baseline, a checkpointed host-state
-    fold) as broadcast joins, and with the threshold off the same joins
-    shuffle and give the same rows (AQE off, as on every small crawl
-    level, so the executed plan is final). A checkpoint keeps the size
-    estimate of the plan it was taken from."""
+def _dim_fixtures(spark, tmp_path):
+    """An engine over three robots hosts (its cached crawl-delay dim)
+    and a 10-row baseline, plus a 50-url batch over five hosts and a
+    checkpointed per-host fold in the politeness host-state shape."""
     from crawlspark.config import CrawlConfig
-    from crawlspark.operators.politeness import schedule_hosts
     from crawlspark.plans.superstep import CrawlEngine
 
     batch = spark.range(50).select(
@@ -119,9 +114,53 @@ def test_dim_joins_follow_session_broadcast_threshold(spark, tmp_path):
         F.col("id").alias("sched_ms"),
         F.lit(None).cast("string").alias("outcome"),
     )
+    eng = CrawlEngine(
+        spark,
+        str(tmp_path / "base"),
+        CrawlConfig(),
+        pages,
+        robots,
+        baseline_df=baseline,
+    )
+    return eng, batch, state
 
-    def executed(df):
-        return df._jdf.queryExecution().executedPlan().toString()
+
+def _executed(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_baseline_broadcast_auto_strategy(spark, tmp_path):
+    """The baseline projection joins carry no broadcast hint: Spark's
+    auto-broadcast strategy (the session's autoBroadcastJoinThreshold)
+    alone plans a probe join against the engine's cached baseline as a
+    broadcast join (AQE off, as on every small crawl level, so the
+    executed plan is final)."""
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        eng, _, _ = _dim_fixtures(spark, tmp_path)
+        probe = spark.range(100).select(
+            F.concat(F.lit("http://h.x/p"), F.col("id")).alias("url")
+        )
+        base_join = probe.join(
+            eng.baseline.select("url", "checksum"), "url", "left"
+        )
+        logical = base_join._jdf.queryExecution().optimizedPlan().toString()
+        assert "strategy=broadcast" not in logical, logical[:3000]
+        assert "BroadcastHashJoin" in _executed(base_join)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+
+def test_host_dim_broadcast_auto_strategy(spark, tmp_path):
+    """The politeness crawl-delay and host-state dims carry no
+    broadcast hint: the session's autoBroadcastJoinThreshold plans both
+    as broadcast joins (the engine's cached delay dim, a checkpointed
+    host-state fold — a checkpoint keeps the size estimate of the plan
+    it was taken from), and with the threshold off the same joins
+    shuffle and give the same rows (AQE off, so the executed plan is
+    final)."""
+    from crawlspark.operators.politeness import schedule_hosts
 
     def rows(df):
         return sorted((r["url"], r["sched_ms"]) for r in df.collect())
@@ -130,32 +169,17 @@ def test_dim_joins_follow_session_broadcast_threshold(spark, tmp_path):
     prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        eng = CrawlEngine(
-            spark,
-            str(tmp_path / "base"),
-            CrawlConfig(),
-            pages,
-            robots,
-            baseline_df=baseline,
-        )
+        eng, batch, state = _dim_fixtures(spark, tmp_path)
         sched = schedule_hosts(batch, eng.delays, state, 1000)
         logical = sched._jdf.queryExecution().optimizedPlan().toString()
         assert "strategy=broadcast" not in logical, logical[:3000]
-        plan = executed(sched)
+        plan = _executed(sched)
         assert plan.count("BroadcastHashJoin") == 2, plan[:3000]
         broadcast_rows = rows(sched)
 
-        probe = spark.range(100).select(
-            F.concat(F.lit("http://h.x/p"), F.col("id")).alias("url")
-        )
-        base_join = probe.join(
-            eng.baseline.select("url", "checksum"), "url", "left"
-        )
-        assert "BroadcastHashJoin" in executed(base_join)
-
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         shuffled = schedule_hosts(batch, eng.delays, state, 1000)
-        plan = executed(shuffled)
+        plan = _executed(shuffled)
         assert "BroadcastHashJoin" not in plan, plan[:3000]
         assert rows(shuffled) == broadcast_rows
     finally:
@@ -179,55 +203,54 @@ def test_lsh_signature_plan_has_no_per_row_hash(spark):
     assert "md5" not in plan.lower(), plan[:2000]
 
 
-def test_crawl_parity_without_broadcast_joins(spark, tmp_path):
-    """With auto-broadcast off every dimension join in the engine
-    (crawl delays, host state, the URL-seen anti-join) plans as a
-    shuffle join; the fetch order and politeness schedule still equal
-    the pure-Python oracle's."""
-    import pandas as pd
-
+def test_engine_host_state_ratchet(spark, tmp_path):
+    """The engine's host-state join has no strategy of its own: with
+    auto-broadcast off it plans as a shuffle join on every superstep,
+    and the crawl (fetch order and politeness schedule) is the same as
+    with the session's default threshold."""
     from crawlspark.config import CrawlConfig
-    from crawlspark.oracle.simulator import CrawlSimulator
     from crawlspark.plans.superstep import CrawlEngine
-    from crawlspark.sources.webgen import SiteParams, build_site
 
-    site = build_site(
-        SiteParams(
-            seed=31,
-            n_hosts=4,
-            depth=2,
-            branching=4,
-            dup_pct=0.1,
-            cross_pct=0.3,
-            n_seed_hosts=3,
-        )
+    def page(u, links):
+        html = "<html><body>" + "".join(
+            f'<a href="{x}">x</a>' for x in links
+        ) + "</body></html>"
+        return (u, 200, html, None)
+
+    pages = spark.createDataFrame(
+        [
+            page("http://h.x/", ["http://h.x/a", "http://h.x/b"]),
+            page("http://h.x/a", []),
+            page("http://h.x/b", []),
+        ],
+        "url string, status int, html string, redirect_to string",
     )
-    seeds = [r["url"] for r in site.seeds.to_dict("records")]
-    cfg = CrawlConfig(max_depth=2, default_delay_ms=1000)
+    robots = spark.createDataFrame([("h.x", None)], "host string, body string")
+
+    def crawl(tag):
+        eng = CrawlEngine(
+            spark,
+            str(tmp_path / tag),
+            CrawlConfig(max_depth=2),
+            pages,
+            robots,
+        )
+        eng.bootstrap(["http://h.x/"])
+        eng.run()
+        return [
+            (r["url"], r["scheduled_at_ms"])
+            for r in eng.fetch_log().orderBy("seq").collect()
+        ]
+
+    log_default = crawl("hs_default")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        eng = CrawlEngine(
-            spark,
-            str(tmp_path / "shuffled"),
-            cfg,
-            site.spark_pages_df(spark),
-            site.spark_robots_df(spark),
-        )
-        eng.bootstrap(seeds)
-        eng.run()
-        got = eng.fetch_log().toPandas()
+        log_shuffled = crawl("hs_shuffled")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    want = pd.DataFrame(
-        CrawlSimulator(site.pages_dict(), site.robots_dict(), cfg)
-        .run(seeds)
-        .fetch_log
-    )
-    assert got["url"].tolist() == want["url"].tolist()
-    assert (
-        got["scheduled_at_ms"].tolist() == want["scheduled_at_ms"].tolist()
-    )
+    assert len(log_default) == 3
+    assert log_shuffled == log_default
 
 
 def test_sampling_ops_are_shuffle_free_projections(spark):

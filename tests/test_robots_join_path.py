@@ -1,7 +1,8 @@
-"""Robots physical-strategy parity: the distributed dim-join path
-(robots_broadcast=False — what the auto default picks beyond
-robots_broadcast_max_rules) must produce the exact fetch order the
-broadcast-UDF path and the pure-Python oracle produce."""
+"""Engine parity with every dimension join shuffled: with the session's
+auto-broadcast threshold off, the crawl-delay, host-state and URL-seen
+joins plan as shuffle joins, and robots matching runs through the
+broadcast RobotsMatcher UDF (the only matcher). The fetch order and
+politeness schedule must still equal the pure-Python oracle's."""
 
 import pandas as pd
 
@@ -21,46 +22,31 @@ SITE = SiteParams(
 )
 
 
-def _crawl(spark, workdir, cfg):
+def test_join_path_matches_oracle(spark, tmp_path):
     site = build_site(SITE)
     seeds = [r["url"] for r in site.seeds.to_dict("records")]
-    eng = CrawlEngine(
-        spark,
-        workdir,
-        cfg,
-        site.spark_pages_df(spark),
-        site.spark_robots_df(spark),
+    cfg = CrawlConfig(max_depth=2, default_delay_ms=1000)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        eng = CrawlEngine(
+            spark,
+            str(tmp_path / "shuffled"),
+            cfg,
+            site.spark_pages_df(spark),
+            site.spark_robots_df(spark),
+        )
+        eng.bootstrap(seeds)
+        eng.run()
+        got = eng.fetch_log().toPandas()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    want = pd.DataFrame(
+        CrawlSimulator(site.pages_dict(), site.robots_dict(), cfg)
+        .run(seeds)
+        .fetch_log
     )
-    eng.bootstrap(seeds)
-    eng.run()
-    sim = CrawlSimulator(site.pages_dict(), site.robots_dict(), cfg).run(
-        seeds
-    )
-    return eng, sim
-
-
-def test_join_path_matches_oracle(spark, tmp_path):
-    cfg = CrawlConfig(
-        max_depth=2, default_delay_ms=1000, robots_broadcast=False
-    )
-    eng, sim = _crawl(spark, str(tmp_path / "join"), cfg)
-    got = eng.fetch_log().toPandas()
-    want = pd.DataFrame(sim.fetch_log)
     assert got["url"].tolist() == want["url"].tolist()
     assert (
-        got["scheduled_at_ms"].tolist()
-        == want["scheduled_at_ms"].tolist()
+        got["scheduled_at_ms"].tolist() == want["scheduled_at_ms"].tolist()
     )
-
-
-def test_auto_default_picks_join_beyond_cap(spark, tmp_path):
-    """With the cap forced to 0 the auto default must take the join
-    path (no broadcast UDF built) and still match the oracle."""
-    cfg = CrawlConfig(
-        max_depth=1, default_delay_ms=1000, robots_broadcast_max_rules=0
-    )
-    eng, sim = _crawl(spark, str(tmp_path / "auto"), cfg)
-    assert eng._robots_udf is None
-    assert eng.fetch_log().toPandas()["url"].tolist() == [
-        r["url"] for r in sim.fetch_log
-    ]
