@@ -1104,9 +1104,9 @@ class CrawlEngine:
         )
         # Materialize as a flat LogicalRDD, not .cache(): a cached
         # frame short-circuits re-EXECUTION but every downstream
-        # action (the merged metrics collect, the ledger/key-fragment
-        # checkpoints, the level parquet write, the frontier filter,
-        # the bad-event projection) still re-ANALYZES the full queue
+        # action (the merged metrics collect, the key fragment, the
+        # level parquet write, the frontier filter, the bad-event
+        # projection) still re-ANALYZES the full queue
         # mega-plan — politeness recurrence, normalize UDF, robots
         # join, two dedup windows, seq assignment — a ~1s driver cost
         # per action that is pure per-superstep floor (measured on the
@@ -2390,7 +2390,6 @@ class CrawlEngine:
                 .agg(F.max("last_sched_ms").alias("last_sched_ms"))
             )
         ckpt_dfs = {
-            "ledger": new_rows.select(*[f.name for f in LEDGER_SCHEMA.fields]),
             "registry": parsed.filter(
                 F.col("outcome").isin("NEW", "MODIFIED")
             ).select("checksum"),
@@ -2404,10 +2403,11 @@ class CrawlEngine:
             k: self._ckpt_pool.submit(df.localCheckpoint, True)
             for k, df in ckpt_dfs.items()
         }
-        new_chk = futs["ledger"].result()
         new_state = futs["host_state"].result()
-        self._pinned.append(new_chk)
-        frag = new_chk.select("url", "seen_key")
+        # the queue pipeline's output is already an eager localCheckpoint
+        # with exactly LEDGER_SCHEMA's columns: it is the level's state
+        self._pinned.append(new_rows)
+        frag = new_rows.select("url", "seen_key")
         if self._bloom_synced:
             # the bitmap isn't consulted again until the NEXT
             # superstep's queue pipeline — fold the new keys in on the
@@ -2433,7 +2433,7 @@ class CrawlEngine:
                 F.col("seq").alias("turn"),
                 F.lit("PROCESSED").alias("kind"),
                 F.col("outcome").alias("ev_outcome"),
-            ).unionByName(new_chk.select(*_event_proj()))
+            ).unionByName(new_rows.select(*_event_proj()))
             old_ev = self._bad_event_state
             merged_ev = self._merge_bad_events(cur_events)
             self._bad_ev_fut = self._ckpt_pool.submit(
@@ -2442,7 +2442,7 @@ class CrawlEngine:
                     old,
                 )
             )
-        next_frontier = new_chk.filter(F.col("status") == "QUEUED")
+        next_frontier = new_rows.filter(F.col("status") == "QUEUED")
         # the superseded snapshot is dead: new_state is eagerly
         # materialized, nothing re-reads the old frame
         if (
@@ -2475,7 +2475,7 @@ class CrawlEngine:
         self.superstep = sid
         self._frontier_mem = next_frontier
 
-        level_df = processed.unionByName(new_chk).coalesce(n_out)
+        level_df = processed.unionByName(new_rows).coalesce(n_out)
         # same 2-branch coalesce for the image-payload write (the most
         # CPU-intensive stage — worker count must equal core count)
         docs_df = docs.coalesce(n_out)
@@ -2492,7 +2492,6 @@ class CrawlEngine:
             self.documents.append(docs_df, part)
             self.host_state.write(new_state, sid)
             parsed.unpersist()
-            new_rows.unpersist()
             self._write_ckpt(ckpt_state)
 
         self._submit_commit(commit)

@@ -4,6 +4,16 @@ Local-mode defaults mirror what we would set on a real cluster:
 AQE on (runtime re-plan + skew-join splitting for hot hosts), Arrow
 on (every custom operator is a pandas/Arrow UDF), shuffle partitions
 sized to cores rather than the 200 default.
+
+Python workers are forked from ``crawlspark._pydaemon`` instead of
+``pyspark.daemon``. PySpark's worker calls ``importlib.invalidate_caches()``
+at the start of every task, and before CPython 3.12 (gh-103200) each zip
+importer then eagerly re-reads its archive's central directory: about 27k
+entries of ``pyspark.zip``, the py4j zip and the spark-core jar per task,
+most of a warm small-batch Python task's time. The daemon re-reads an
+archive only when its mtime or size changed; on Python >= 3.12 it is
+plain ``pyspark.daemon``. Workers must be able to import ``crawlspark``,
+as the crawl's own UDFs already require.
 """
 
 from __future__ import annotations
@@ -115,6 +125,9 @@ def get_spark(
         # pruning here — the heavy frames are filtered through explicit
         # columns, not inferable constraints
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # fork Python workers from a daemon that re-reads zip archives
+        # only when they change (see the module docstring)
+        .config("spark.python.daemon.module", "crawlspark._pydaemon")
     )
     # LOCAL MODE ONLY: put shuffle/spill scratch on tmpfs. Even with
     # the sort-based writer, shuffle index/data creates + renames on
