@@ -9,15 +9,23 @@ reference precedence robots crawl-delay > default 3 s
 (AbstractDelayResolver.java:100-115; BaseDelayResolverConfig.java:64;
 per-site serialization SiteDelay.java:44-58).
 
-Physical shape: ``groupBy(host).applyInPandas`` with the recurrence
-*vectorized* — for constant per-host delay,
-    sched_i = i*delay + max(last+delay, running_max(avail_j - j*delay))
-is a single ``np.maximum.accumulate``, so even a hot host with millions
-of queued URLs costs O(n) numpy, not O(n) Python. Host groups are
-hash-distributed across executors; cross-host skew is handled by AQE
-(the group itself must stay whole — the recurrence is serial per host
-by *definition* of politeness, so "salting" a host would change the
-semantics; the scale lever is that per-row work is ~3 numpy ops).
+Physical shape: one ``repartition(n, scope_key)``, then
+``sortWithinPartitions(scope_key, seq)``, then one ``mapInPandas``
+kernel that schedules every scope key of an Arrow batch in a single
+vectorized pass. Groups are contiguous runs of the sorted key; with a
+per-row delay ``d`` and ``C`` its per-group running sum,
+    sched_i = C_i + max(last, running_max(avail_j - C_j))
+is one cumulative sum and one grouped cumulative max over the whole
+batch, so a batch costs one pandas round trip however many hosts it
+holds (a ``groupBy(host).applyInPandas`` paid one per host, about
+5 ms each), and a hot host with millions of queued URLs costs O(n)
+numpy, not O(n) Python. A group that spans Arrow batches continues
+from the ``(key, last sched)`` carried from the previous batch of its
+partition. Only groups whose delay depends on the request's own probe
+time (time-of-day/URL-pattern resolvers without a robots delay) run
+the per-row recurrence. A group must stay whole in one task — the
+recurrence is serial per key by *definition* of politeness, so
+"salting" a host would change the semantics.
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MS_PER_HOUR = 3_600_000
 
@@ -111,6 +120,74 @@ def scope_key_col(scope: str, n_threads: int = 2):
     return F.col("host")
 
 
+def _schedule_batch(
+    pdf: pd.DataFrame,
+    carry: tuple | None,
+    default_delay_ms: int,
+    schedules: tuple,
+    patterns: list,
+) -> tuple[np.ndarray, tuple]:
+    """``sched_ms`` for one Arrow batch sorted by (``__scope_key``,
+    ``seq``), every scope key of the batch in one vectorized pass, and
+    the ``(key, last sched)`` to carry into the partition's next batch.
+
+    ``carry``: that pair from the previous batch; a batch that opens
+    with its key continues the group. Per row the delay is the robots
+    crawl-delay, else the default, so with ``C`` the per-group running
+    sum of delays the recurrence ``s_i = max(a_i, s_{i-1} + d_i)`` has
+    the closed form ``s_i = C_i + max(last, cummax_{j<=i}(a_j - C_j))``
+    (``last`` only when the group has one). Only when time-of-day or
+    URL-pattern resolvers are configured does a group holding a row
+    without a robots delay run the per-row ``resolve_delay``
+    recurrence: that delay depends on the request's own probe time.
+    """
+    n = len(pdf)
+    keys = pdf["__scope_key"].to_numpy(dtype=object)
+    keys[pd.isna(keys)] = None  # one null group, as groupBy makes it
+    start = np.ones(n, dtype=bool)
+    start[1:] = keys[1:] != keys[:-1]
+    starts = np.flatnonzero(start)
+    seg = np.cumsum(start) - 1
+
+    last_col = pdf["last_sched_ms"].to_numpy(dtype="float64")[starts]
+    has_last = ~np.isnan(last_col)
+    last = np.where(has_last, last_col, 0).astype("int64")
+    if carry is not None and keys[0] == carry[0]:
+        has_last[0] = True
+        last[0] = carry[1]
+
+    cds = pdf["crawl_delay_ms"].to_numpy(dtype="float64")
+    no_robots = np.isnan(cds)
+    d = np.where(no_robots, default_delay_ms, cds).astype("int64")
+    avail = pdf["avail_ms"].to_numpy(dtype="int64")
+
+    # per-group running sum of delays; int64 wrap-around in the batch
+    # sum cancels in the difference
+    cs = np.cumsum(d)
+    c = cs - (cs - d)[starts][seg]
+    run = pd.Series(avail - c).groupby(seg).cummax().to_numpy()
+    run = np.where(has_last[seg], np.maximum(run, last[seg]), run)
+    sched = c + run
+
+    if schedules or patterns:
+        ends = np.append(starts[1:], n)
+        py = np.logical_or.reduceat(no_robots, starts)
+        urls = pdf["url"].tolist()
+        for g in np.flatnonzero(py):
+            prev = int(last[g]) if has_last[g] else None
+            for i in range(starts[g], ends[g]):
+                a = int(avail[i])
+                rd = None if no_robots[i] else int(cds[i])
+                t_probe = a if prev is None else max(a, prev)
+                delay = resolve_delay(
+                    urls[i], t_probe, rd, schedules, patterns,
+                    default_delay_ms,
+                )
+                prev = a if prev is None else max(a, prev + delay)
+                sched[i] = prev
+    return sched, (keys[-1], int(sched[-1]))
+
+
 def schedule_hosts(
     batch: DataFrame,
     host_delays: DataFrame,
@@ -120,6 +197,7 @@ def schedule_hosts(
     patterns: tuple = (),
     scope: str = "SITE",
     n_threads: int = 2,
+    n_part: int | None = None,
 ) -> DataFrame:
     """Add ``sched_ms`` to a QUEUED batch.
 
@@ -128,73 +206,52 @@ def schedule_hosts(
     across supersteps (None on the first). Both joins are unhinted:
     the session's broadcast threshold picks their strategy.
     ``schedules``/``patterns``:
-    time-of-day and per-URL delay resolvers — when configured, hosts
-    WITHOUT a robots crawl-delay take an O(n)-python per-row path
-    (the delay varies per request, so the recurrence has no closed
-    form); everything else stays on the vectorized numpy path.
+    time-of-day and per-URL delay resolvers — when configured, groups
+    holding a row WITHOUT a robots crawl-delay take an O(n)-python
+    per-row path (the delay varies per request, so the recurrence has
+    no closed form); everything else stays vectorized.
     ``scope``: SITE (default) serializes per host; CRAWLER serializes
     the whole crawl (one group — inherently serial by semantics, the
     recurrence itself is still O(n) numpy); THREAD serializes per
     deterministic seq%K thread slot. Non-SITE groups span hosts, so
     the robots crawl-delay is resolved per row inside the group.
+    ``n_part``: width of the one exchange by scope key (default: the
+    session's shuffle partitions).
     """
-    b = batch.join(host_delays, "host", "left").withColumn(
-        "__scope_key", scope_key_col(scope, n_threads)
+    key = "__scope_key"
+    # The kernel needs each scope key whole in one task, which only the
+    # user repartition below guarantees: AQE never splits its
+    # partitions, but it may split a skewed shuffle-join partition, so
+    # Spark must not drop the repartition as redundant. The scope key
+    # is added before the host join, so a shuffled host join is never
+    # partitioned by it; that join sits below the exchange (above it, a
+    # shuffled join on host would re-key it). The host-state dim joins
+    # on the scope key above the exchange: a shuffled join there reuses
+    # it, so the level pays one exchange.
+    b = batch.withColumn(key, scope_key_col(scope, n_threads)).join(
+        host_delays, "host", "left"
     )
+    b = b.repartition(n_part, key) if n_part else b.repartition(key)
     if host_state is not None:
-        state_dim = host_state.withColumnRenamed("host", "__scope_key")
-        b = b.join(state_dim, "__scope_key", "left")
+        b = b.join(host_state.withColumnRenamed("host", key), key, "left")
     else:
         b = b.withColumn("last_sched_ms", F.lit(None).cast("long"))
+    b = b.sortWithinPartitions(key, "seq")
 
-    out_schema = batch.sparkSession.createDataFrame(
-        [], batch.schema
-    ).withColumn("sched_ms", F.lit(0).cast("long")).schema
-    out_cols = [f.name for f in out_schema.fields]
-    compiled = [(re.compile(p), d) for p, d in patterns]
-    varying = bool(schedules or compiled)
-
-    multi_host = scope != "SITE"
-
-    def sched_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("seq").reset_index(drop=True)
-        cds = pdf["crawl_delay_ms"]
-        last = pdf["last_sched_ms"].iloc[0]
-        last = None if pd.isna(last) else int(last)
-        avail = pdf["avail_ms"].to_numpy(dtype="int64")
-        # constant-delay closed form holds when every row resolves the
-        # same delay: the single-host group's robots delay (or default),
-        # or a multi-host group with no robots delays and no varying
-        # resolvers. Otherwise the per-row python recurrence runs.
-        any_robots = cds.notna().any()
-        if (varying and not (not multi_host and any_robots)) or (
-            multi_host and any_robots and cds.nunique(dropna=False) > 1
-        ):
-            urls = pdf["url"].tolist()
-            rds = [None if pd.isna(x) else int(x) for x in cds]
-            out = np.empty(len(pdf), dtype="int64")
-            for i, a in enumerate(avail):
-                t_probe = a if last is None else max(int(a), last)
-                d = resolve_delay(
-                    urls[i], t_probe, rds[i], schedules, compiled,
-                    default_delay_ms,
-                )
-                sched = a if last is None else max(int(a), last + d)
-                out[i] = sched
-                last = int(sched)
-            pdf["sched_ms"] = out
-            return pdf[out_cols]
-        robots_d = cds.iloc[0]
-        robots_d = None if pd.isna(robots_d) else int(robots_d)
-        delay = robots_d if robots_d is not None else int(default_delay_ms)
-        idx = np.arange(len(pdf), dtype="int64")
-        v = avail - idx * delay
-        run = np.maximum.accumulate(v)
-        if last is not None:
-            run = np.maximum(run, np.int64(last) + delay)
-        pdf["sched_ms"] = run + idx * delay
-        return pdf[out_cols]
-
-    return b.groupBy("__scope_key").applyInPandas(
-        sched_group, schema=out_schema
+    out_schema = T.StructType(
+        batch.schema.fields
+        + [T.StructField("sched_ms", T.LongType(), False)]
     )
+    out_cols = out_schema.fieldNames()
+    compiled = [(re.compile(p), d) for p, d in patterns]
+
+    def kernel(batches):
+        carry = None
+        for pdf in batches:
+            if not pdf.empty:
+                pdf["sched_ms"], carry = _schedule_batch(
+                    pdf, carry, default_delay_ms, schedules, compiled
+                )
+                yield pdf[out_cols]
+
+    return b.mapInPandas(kernel, schema=out_schema)

@@ -27,7 +27,7 @@ so the URL-seen anti-join prunes partitions.
 Superstep dataflow (all declarative; Catalyst/AQE plan it):
 
   batch   = previous level's QUEUED rows                (parquet scan)
-  sched   = per-host politeness recurrence              (applyInPandas)
+  sched   = per-host politeness recurrence   (host-sorted mapInPandas)
   fetched = fetcher(sched)                              (the fetch slot*)
   parsed  = canonical/robots-meta/links/md5/baseline    (Arrow UDFs)
   outcome = CASE ladder + checksum first-wins window    (JVM)
@@ -446,6 +446,10 @@ class CrawlEngine:
         # links-per-fetched-doc ratio from the previous superstep; only
         # shapes partition counts, never results
         self._branch_est = 10.0
+        # min depth of the QUEUED frontier (None: unknown, e.g. resumed
+        # from a manifest that predates it) — sizes a leaf level's
+        # queue pipeline
+        self._frontier_min_depth: int | None = None
         self._key_parts: list[DataFrame] = []
         self._registry_parts: list[DataFrame] = []
         self._meta_registry_parts: list[DataFrame] = []
@@ -806,6 +810,7 @@ class CrawlEngine:
             "frontier_part": self._frontier_part,
             "ledger_rows": self._ledger_rows,
             "branch_est": self._branch_est,
+            "frontier_min_depth": self._frontier_min_depth,
             "max_sched_seen": self._max_sched_seen,
             "host_state_snapshot": (
                 host_state_snapshot
@@ -935,6 +940,7 @@ class CrawlEngine:
         eng._frontier_part = state.get("frontier_part")
         eng._ledger_rows = state.get("ledger_rows", 0)
         eng._branch_est = state.get("branch_est", 10.0)
+        eng._frontier_min_depth = state.get("frontier_min_depth")
         eng._max_sched_seen = state.get("max_sched_seen", 0)
         eng._metric_rows = [tuple(r) for r in state.get("metrics", [])]
         # drop any partial writes from a crashed superstep
@@ -1116,7 +1122,9 @@ class CrawlEngine:
         new_rows = new_rows.localCheckpoint(eager=True)
 
         qtick("qp:plan_built")
-        counts_df = new_rows.groupBy("status", "outcome").count()
+        counts_df = new_rows.groupBy("status", "outcome").agg(
+            F.count("*").alias("count"), F.min("depth").alias("min_depth")
+        )
 
         def cleanup():
             for df in caches:
@@ -1126,12 +1134,10 @@ class CrawlEngine:
             # caller folds counts_df into its own single collect and
             # calls _queue_stats + cleanup afterwards
             return new_rows, counts_df, cleanup
-        by_status = {
-            (r["status"], r["outcome"]): r["count"]
-            for r in counts_df.collect()
-        }
+        counts = counts_df.collect()
+        by_status = {(r["status"], r["outcome"]): r["count"] for r in counts}
         qtick("qp:materialize+count")
-        stats = self._queue_stats(by_status, n_cand)
+        stats = self._queue_stats(by_status, n_cand, counts)
         cleanup()
         return new_rows, stats
 
@@ -1398,9 +1404,17 @@ class CrawlEngine:
         }
         return locs
 
-    def _queue_stats(self, by_status: dict, n_cand: int) -> dict:
+    def _queue_stats(
+        self, by_status: dict, n_cand: int, count_rows: list
+    ) -> dict:
         """Fold per-(status,outcome) counts into queue metrics and
-        advance the seq/ledger counters (exactly once per pipeline)."""
+        advance the seq/ledger counters (exactly once per pipeline).
+        ``count_rows`` also carry each group's ``min_depth``: the QUEUED
+        rows become the next frontier."""
+        self._frontier_min_depth = next(
+            (r["min_depth"] for r in count_rows if r["status"] == "QUEUED"),
+            None,
+        )
         sm_stats = self._last_sitemap_stats
         self._last_sitemap_stats = {}
         n_cand += sm_stats.get("SITEMAP_URLS", 0)
@@ -1450,11 +1464,7 @@ class CrawlEngine:
         # sched_ms/checksum are re-derived this superstep (QUEUED rows
         # carry nulls for both). The frontier and host state are handed
         # over in memory by the previous superstep (localCheckpoints);
-        # the parquet reads only serve a resumed run's first step. The
-        # explicit repartition-by-num pins the politeness clustering
-        # width — AQE would otherwise coalesce this slim-row shuffle
-        # into one partition and serialize the whole politeness →
-        # fetch → parse chain behind it.
+        # the parquet reads only serve a resumed run's first step.
         frontier = (
             self._frontier_mem
             if self._frontier_mem is not None
@@ -1466,8 +1476,6 @@ class CrawlEngine:
         batch = frontier.drop(
             "sched_ms", "checksum", "meta_ck", "meta_tracked",
             "http_status",
-        ).repartition(
-            self._n_part(self.queued_remaining), F.col("host")
         )
 
         host_state = (
@@ -1526,6 +1534,12 @@ class CrawlEngine:
             patterns=cfg.delay_patterns,
             scope=cfg.delay_scope,
             n_threads=cfg.delay_threads,
+            # the level's one exchange before the fetch: the explicit
+            # width pins the politeness clustering — AQE would
+            # otherwise coalesce this slim-row shuffle into one
+            # partition and serialize the whole politeness → fetch →
+            # parse chain behind it
+            n_part=self._n_part(self.queued_remaining),
         )
 
         # -- metadata checksum band (MetadataChecksumStage + the HEAD
@@ -2198,8 +2212,18 @@ class CrawlEngine:
         # stages. Partition sizing uses the previous superstep's
         # branching ratio (an estimate is fine — it only shapes the
         # physical plan); exact candidate counts come from the metrics
-        # aggregation right after, which now reads the warm cache. ----
-        n_est = max(1, int(self.queued_remaining * self._branch_est))
+        # aggregation right after, which now reads the warm cache. A
+        # level at max_depth extracts no links (parse kernel), so its
+        # candidates are only redirect/canonical/post-import targets —
+        # at most about one per row. ----
+        leaf = (
+            self._frontier_min_depth is not None
+            and self._frontier_min_depth >= cfg.max_depth >= 0
+        )
+        n_est = max(
+            1,
+            int(self.queued_remaining * (1.0 if leaf else self._branch_est)),
+        )
         new_rows, counts_df, qp_cleanup = self._queue_pipeline(
             cand,
             self._ledger_keys(),
@@ -2260,12 +2284,11 @@ class CrawlEngine:
         )
         rows = merged.collect()
         agg_rows = [r for r in rows if r["__src"] == "agg"]
+        q_rows = [r for r in rows if r["__src"] == "queue"]
         by_status = {
-            (r["status"], r["outcome"]): r["qp_count"]
-            for r in rows
-            if r["__src"] == "queue"
+            (r["status"], r["outcome"]): r["qp_count"] for r in q_rows
         }
-        qstats = self._queue_stats(by_status, n_est)
+        qstats = self._queue_stats(by_status, n_est, q_rows)
         qp_cleanup()
         tick("parse+agg+queue")
         out_counts = {r["outcome"]: r["n"] for r in agg_rows}
@@ -2481,12 +2504,12 @@ class CrawlEngine:
         docs_df = docs.coalesce(n_out)
         ckpt_state = self._ckpt_state(host_state_snapshot=sid)
 
-        # level_df/docs_df read the `parsed` cache (MEMORY_AND_DISK —
-        # Spark SQL's .cache() default): eviction spills to disk rather
-        # than recomputing the fetch lineage, so the background write
-        # cannot silently re-fetch; the per-superstep shuffle-partition
-        # mutation only affects *new* shuffles, and both writes are
-        # shuffle-free (coalesce of cached partitions).
+        # level_df/docs_df read `parsed`, the eager localCheckpoint
+        # taken after the parse (blocks kept memory-and-disk, lineage
+        # cut), so the background write can never re-run the fetch; the
+        # per-superstep shuffle-partition mutation only affects *new*
+        # shuffles, and both writes are shuffle-free (coalesce of
+        # checkpointed partitions).
         def commit():
             self.levels.append(level_df, part)
             self.documents.append(docs_df, part)

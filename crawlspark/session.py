@@ -13,7 +13,19 @@ entries of ``pyspark.zip``, the py4j zip and the spark-core jar per task,
 most of a warm small-batch Python task's time. The daemon re-reads an
 archive only when its mtime or size changed; on Python >= 3.12 it is
 plain ``pyspark.daemon``. Workers must be able to import ``crawlspark``,
-as the crawl's own UDFs already require.
+as the crawl's own UDFs already require, so the package root is put
+first on their ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, merged
+with the inherited one): a driver that finds the package only through
+``sys.path`` works from any working directory.
+
+PySpark's DataFrame origin capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off. With it on,
+every DataFrame or Column API call walks the Python stack and makes
+4-5 extra py4j round trips, and each call retries a failing
+``import IPython`` across ``sys.path``; a superstep makes thousands of
+such calls. The cost of turning it off: DataFrame error contexts lack
+the Python call site. Pass the key as ``"true"`` in ``extra_conf`` to
+get it back while debugging.
 """
 
 from __future__ import annotations
@@ -49,6 +61,14 @@ def _default_driver_mem() -> str:
     """Half of physical memory in whole GiB, clamped to [1g, 48g]."""
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{min(48, max(1, phys // 2 // 2**30))}g"
+
+
+def _worker_pythonpath() -> str:
+    """The ``crawlspark`` package root, then the inherited
+    ``PYTHONPATH`` entries."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    inherited = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    return os.pathsep.join(dict.fromkeys([root, *filter(None, inherited)]))
 
 
 def get_spark(
@@ -128,6 +148,9 @@ def get_spark(
         # fork Python workers from a daemon that re-reads zip archives
         # only when they change (see the module docstring)
         .config("spark.python.daemon.module", "crawlspark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
+        # no per-call origin capture (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # LOCAL MODE ONLY: put shuffle/spill scratch on tmpfs. Even with
     # the sort-based writer, shuffle index/data creates + renames on

@@ -77,3 +77,50 @@ def test_python_workers_run_under_the_daemon(spark):
         .collect()
     }
     assert got == {_pydaemon._invalidate_caches.__module__}
+
+
+_WORKER_PATH_DRIVER = """
+import sys
+sys.path.insert(0, {root!r})
+import pandas as pd
+from pyspark.sql import functions as F
+from crawlspark.session import get_spark
+
+spark = get_spark("worker-path", cores=1, shuffle_partitions=1)
+
+@F.pandas_udf("string")
+def package_file(s: pd.Series) -> pd.Series:
+    import crawlspark
+
+    return s.map(lambda _: crawlspark.__file__)
+
+print("GOT", spark.range(2).select(package_file(F.lit("x"))).first()[0])
+spark.stop()
+"""
+
+
+def test_workers_import_the_package_from_any_directory(tmp_path):
+    """A driver that finds ``crawlspark`` only through ``sys.path``,
+    started from another directory with no ``PYTHONPATH``, still runs a
+    pandas UDF that imports the package: ``get_spark`` puts the package
+    root on the workers' path, so the worker daemon and the pickled
+    UDFs import it."""
+    import os
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "driver.py"
+    script.write_text(_WORKER_PATH_DRIVER.format(root=root))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = [ln for ln in proc.stdout.splitlines() if ln.startswith("GOT ")]
+    assert got == [f"GOT {os.path.join(root, 'crawlspark', '__init__.py')}"]
