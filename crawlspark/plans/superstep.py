@@ -36,8 +36,10 @@ Superstep dataflow (all declarative; Catalyst/AQE plan it):
   queue pipeline: normalize → first-wins → driver Bloom prefilter +
                   exact anti-join vs ledger → depth/filters/robots →
                   assign dense seq
-  commit  = ONE level part + host-state snapshot + documents part +
-            checkpoint manifest (atomic swap last)
+  commit  = ONE write-behind job per level (bootstrap, superstep and
+            orphan pass alike, see ``_end_level``): level part +
+            documents part + host-state snapshot + checkpoint manifest
+            (atomic swap last)
 
 *The fetch slot has two implementations: ``fetcher`` — a mapInPandas
 transform resolving each URL in the fetch task itself (zero shuffle;
@@ -64,11 +66,14 @@ Scale/efficiency notes:
 * ``seq`` assignment is one range-partition + per-partition offsets
   path (no global window); below ~150k candidates it runs with one
   partition, which skips the sampling and count jobs.
-* The URL-seen keys and the checksum registry are served from
-  per-part cached fragments (one slim cached DataFrame per committed
-  level part) so per-superstep broadcast builds never re-scan the
-  ledger from disk; columns like ``checksum`` ride in the ledger rows
-  so no extra table or write job exists for them.
+* The URL-seen keys and the checksum registries are served from
+  in-memory fragments, one per level: the live key fragment is a lazy
+  projection of the level's checkpoint (the queue pipeline's output),
+  the registries are slim checkpoints of the level's committed rows.
+  Per-superstep broadcast builds never re-scan the ledger from disk;
+  columns like ``checksum`` ride in the ledger rows so no extra table
+  or write job exists for them. A resumed run rebuilds the fragments
+  from the level parts.
 * Explicit ``repartition(n, key)`` pins the politeness and first-wins
   clustering width: those shuffles carry highly-compressible slim rows
   that AQE would coalesce into one partition, serializing the Python
@@ -292,6 +297,47 @@ def _event_proj():
     )
 
 
+def _skip_fetch_rows(src: DataFrame, cols: list, **given) -> DataFrame:
+    """Rows that skip fetch+parse (HEAD-skipped, PREMATURE) in the
+    parse pass's shape: ``cols`` plus every fetch/parse output column,
+    taken from ``given`` (name -> Column) or else null / False."""
+    out = {
+        "http_status": F.lit(None).cast("int"),
+        "redirect_to": F.lit(None).cast("string"),
+        "canonical": F.lit(None).cast("string"),
+        "noindex": F.lit(False),
+        "nofollow": F.lit(False),
+        "checksum": F.lit(None).cast("string"),
+        "links": F.lit(None).cast(PARSE_FIELDS["links"].dataType),
+        "doc_filtered": F.lit(False),
+        "post_links": F.lit(None).cast(PARSE_FIELDS["post_links"].dataType),
+        "premature": F.lit(False),
+        "head_unmod": F.lit(False),
+        "meta_ck": F.lit(None).cast("string"),
+        "meta_filtered": F.lit(False),
+    }
+    out.update(given)
+    return src.select(*cols, *[c.alias(name) for name, c in out.items()])
+
+
+def _delete_ops(rows: DataFrame) -> DataFrame:
+    """Delete-op document rows (DOCS_SCHEMA) for ``rows`` carrying
+    (url, seq, depth): spoiled deletes and orphan DELETE."""
+    return rows.select(
+        F.col("url").alias("image_id"),
+        F.lit(None).cast("binary").alias("bytes"),
+        F.lit(None).cast("int").alias("w"),
+        F.lit(None).cast("int").alias("h"),
+        F.lit(None).cast("string").alias("fmt"),
+        F.lit(None).cast("string").alias("caption"),
+        F.lit(None).cast("long").alias("phash"),
+        F.lit(None).cast("string").alias("checksum"),
+        F.col("seq").cast("long").alias("seq"),
+        F.col("depth").cast("int").alias("depth"),
+        F.lit("delete").alias("op"),
+    )
+
+
 @dataclass
 class StepStats:
     superstep: int
@@ -466,10 +512,9 @@ class CrawlEngine:
         # event history and scanned it every superstep — the measured
         # crawl-loop regression.
         self._bad_event_state: DataFrame | None = None
-        self._resume_event_parts: list[DataFrame] = []
-        # deferred pool work from step()'s commit region: the bitmap
-        # fold and the bad-event-state checkpoint both overlap the next
-        # superstep's parse and land at their first consumer
+        # deferred pool work from _end_level: the bitmap fold and the
+        # bad-event-state checkpoint both overlap the next superstep's
+        # parse and land at their first consumer
         self._bloom_fut = None
         self._bad_ev_fut = None
         # (host, [path,] xml) dim for SitemapResolution; hosts whose
@@ -481,9 +526,8 @@ class CrawlEngine:
         # hosts whose sitemap resolution already ran (== hosts ever
         # QUEUED), kept as dataflow fragments like _key_parts — never a
         # driver-side set, so 10^7+ hosts never ship through the driver.
-        # Durable for free: each fragment is derivable from its level
-        # part (distinct QUEUED hosts), rebuilt by _register_part on
-        # resume.
+        # Durable through their own sidecar parts (see
+        # _sitemap_candidates), read back in resume().
         self._sitemap_host_parts: list[DataFrame] = []
         self._last_sitemap_stats: dict = {}
         # write-behind committer: one ordered background thread owns
@@ -546,100 +590,83 @@ class CrawlEngine:
             "true" if rows > AQE_MIN_ROWS else "false",
         )
 
-    def _ledger_df(self) -> DataFrame:
-        """All URL-seen rows (every level part; a QUEUED row and its
-        later PROCESSED row may coexist — harmless for anti-joins)."""
-        return self.levels.read()
-
     # -- in-memory ledger fragments ----------------------------------------
     # The URL-seen anti-join and the checksum registry need the ledger
     # every superstep; re-scanning all level parts from parquet makes
     # each superstep O(ledger) in broadcast-build time. Instead each
-    # committed part contributes one independently-cached slim fragment
-    # (url/seen_key; checksums of committed rows) and consumers union
+    # level contributes one slim in-memory fragment (url/seen_key;
+    # checksums of committed rows — see _end_level) and consumers union
     # the fragment list — O(level) new work per superstep, no nested
-    # cache lineage. On a 10^10-URL cluster these fragments would not
+    # lineage. On a 10^10-URL cluster these fragments would not
     # fit executor memory: there the anti-join runs against the Iceberg
     # ledger bucketed by seen_key (bucket-pruned by the Bloom pass) —
     # same dataflow, different storage tier.
 
-    def _register_part(self, part: str) -> None:
-        """Resume path: rebuild fragments from the part's parquet."""
-        pdf = self.levels.read_part(part)
-        self._key_parts.append(
-            pdf.filter(F.col("status") != "PROCESSED")
-            .select("url", "seen_key")
-            .cache()
-        )
-        self._registry_parts.append(
-            pdf.filter(F.col("outcome").isin("NEW", "MODIFIED"))
-            .select("checksum")
-            .cache()
-        )
-        if self.cfg.metadata_dedup:
-            self._meta_registry_parts.append(
-                pdf.filter(F.col("meta_tracked")).select("meta_ck").cache()
-            )
-        if self.cfg.redirect_requeue:
-            self._resume_event_parts.append(pdf.select(*_event_proj()))
-        # (sitemap resolved-state is NOT rebuilt from ledger rows: the
-        # trigger-host set is persisted in its own sidecar parts —
-        # see _sitemap_candidates — and restored in resume())
-
-    def _add_key_fragment(self, new_rows: DataFrame) -> None:
-        """Live path: snapshot this superstep's ledger keys off the
-        still-cached ``new_rows`` — no parquet re-read, no single-task
-        scan. MUST be ``localCheckpoint`` (flat LogicalRDD plan), not
-        ``cache``: a cached fragment keeps the queue-pipeline lineage,
-        which references the union of all PRIOR fragments through the
-        anti-join — nesting every fragment's plan inside the next and
-        sending Catalyst analysis exponential. On a cluster this slot
-        is the Iceberg ledger table itself (bucketed by seen_key)."""
-        frag = new_rows.select("url", "seen_key").localCheckpoint(eager=True)
-        if self._bloom_synced:
-            self.bloom.add_df(frag)
-        self._key_parts.append(frag)
-        if self.cfg.redirect_requeue:
-            old_ev = self._bad_event_state
-            self._bad_event_state = self._merge_bad_events(
-                new_rows.select(*_event_proj())
-            ).localCheckpoint(eager=True)
-            if old_ev is not None:
-                try:
-                    old_ev.unpersist()
-                except Exception:
-                    pass
-
     def _restore_parts(self) -> None:
+        """Resume path: rebuild the fragments from the level parts'
+        parquet. (Sitemap resolved-state is NOT rebuilt from ledger
+        rows: the trigger-host set is persisted in its own sidecar
+        parts — see _sitemap_candidates — and restored in resume().)"""
+        events = []
         for name in self.levels.parts():
-            self._register_part(name[len("part-"):])
-        if self.cfg.redirect_requeue and self._resume_event_parts:
+            pdf = self.levels.read_part(name[len("part-"):])
+            self._key_parts.append(
+                pdf.filter(F.col("status") != "PROCESSED")
+                .select("url", "seen_key")
+                .cache()
+            )
+            self._registry_parts.append(
+                pdf.filter(F.col("outcome").isin("NEW", "MODIFIED"))
+                .select("checksum")
+                .cache()
+            )
+            if self.cfg.metadata_dedup:
+                self._meta_registry_parts.append(
+                    pdf.filter(F.col("meta_tracked")).select("meta_ck").cache()
+                )
+            if self.cfg.redirect_requeue:
+                events.append(pdf.select(*_event_proj()))
+        if self.cfg.redirect_requeue:
             # one merge over all committed parts' events rebuilds the
             # compact bad-target state (same fold the live path runs
-            # per superstep — resume replays identically)
-            ev = self._resume_event_parts[0]
-            for p in self._resume_event_parts[1:]:
-                ev = ev.unionByName(p)
-            self._resume_event_parts = []
+            # per level — resume replays identically)
+            ev = self._union(
+                events, "url string, turn long, kind string, ev_outcome string"
+            )
             self._bad_event_state = self._merge_bad_events(
                 ev
             ).localCheckpoint(eager=True)
 
-    def _ledger_keys(self) -> DataFrame:
-        """(url, seen_key) of every ledger row — union of cached
-        fragments (urls unique: PROCESSED rows are excluded, having
-        already contributed their QUEUED fragment)."""
-        if not self._key_parts:
-            return self.spark.createDataFrame([], "url string, seen_key long")
-        out = self._key_parts[0]
-        for p in self._key_parts[1:]:
-            out = out.unionByName(p)
+    def _union(self, frags: list[DataFrame], schema: str) -> DataFrame:
+        """Union of a fragment list; an empty ``schema`` frame when the
+        list is empty."""
+        if not frags:
+            return self.spark.createDataFrame([], schema)
+        out = frags[0]
+        for frag in frags[1:]:
+            out = out.unionByName(frag)
         return out
 
+    def _ledger_keys(self) -> DataFrame:
+        """(url, seen_key) of every ledger row — union of the level
+        fragments (urls unique: PROCESSED rows are excluded, having
+        already contributed their QUEUED fragment)."""
+        return self._union(self._key_parts, "url string, seen_key long")
+
+    # The frontier and host state are handed over in memory by the
+    # previous level (_end_level); the parquet reads only serve a
+    # resumed run's first superstep.
     def _frontier_df(self) -> DataFrame:
+        if self._frontier_mem is not None:
+            return self._frontier_mem
         return self.levels.read_part(self._frontier_part).filter(
             F.col("status") == "QUEUED"
         )
+
+    def _host_state_df(self) -> DataFrame | None:
+        if self._host_state_mem is not None:
+            return self._host_state_mem
+        return self.host_state.read()
 
     def _fetch_parse(self, sched: DataFrame) -> DataFrame:
         """Fetch + parse the scheduled batch.
@@ -712,34 +739,24 @@ class CrawlEngine:
         checksum by construction (a checksum commits at most once per
         run; later hits become DUPLICATE). Served from the cached
         fragments, independent of image payload size."""
-        if not self._registry_parts:
-            base = self.spark.createDataFrame([], "checksum string")
-        else:
-            base = self._registry_parts[0]
-            for p in self._registry_parts[1:]:
-                base = base.unionByName(p)
+        base = self._union(self._registry_parts, "checksum string")
         return base.select("checksum", F.lit(True).alias("ck_seen"))
 
     def _resolve_bloom(self) -> None:
-        """Block on the deferred bitmap fold (submitted by step()'s
-        commit region) before the bitmap is consulted again."""
+        """Block on the deferred bitmap fold (submitted by _end_level)
+        before the bitmap is consulted again."""
         fut = self._bloom_fut
         if fut is not None:
             self._bloom_fut = None
             fut.result()
 
     def _resolve_bad_events(self) -> None:
-        """Land the deferred bad-event-state checkpoint (see step())."""
+        """Land the deferred bad-event-state checkpoint (see
+        _end_level)."""
         fut = self._bad_ev_fut
         if fut is not None:
             self._bad_ev_fut = None
-            chk, old = fut.result()
-            self._bad_event_state = chk
-            if old is not None:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
+            self._bad_event_state = fut.result()
 
     def _events(self) -> DataFrame:
         """(url, turn, kind, ev_outcome) — the compact requeue state:
@@ -787,12 +804,7 @@ class CrawlEngine:
         """(meta_ck, mk_seen) of meta checksums tracked by the dedup
         service in prior supersteps (MetadataDedupStage's
         findOrTrackMetadata store, served like the content registry)."""
-        if not self._meta_registry_parts:
-            base = self.spark.createDataFrame([], "meta_ck string")
-        else:
-            base = self._meta_registry_parts[0]
-            for p in self._meta_registry_parts[1:]:
-                base = base.unionByName(p)
+        base = self._union(self._meta_registry_parts, "meta_ck string")
         return base.select("meta_ck", F.lit(True).alias("mk_seen"))
 
     # -- checkpoint manifest (per-run lineage) -----------------------------
@@ -800,40 +812,13 @@ class CrawlEngine:
     def _ckpt(self) -> str:
         return os.path.join(self.workdir, "checkpoint.json")
 
-    def _ckpt_state(self, host_state_snapshot=None) -> dict:
-        return {
-            "superstep": self.superstep,
-            "max_seq": self.max_seq,
-            "committed_total": self.committed_total,
-            "queued_remaining": self.queued_remaining,
-            "orphans_done": self._orphans_done,
-            "frontier_part": self._frontier_part,
-            "ledger_rows": self._ledger_rows,
-            "branch_est": self._branch_est,
-            "frontier_min_depth": self._frontier_min_depth,
-            "max_sched_seen": self._max_sched_seen,
-            "host_state_snapshot": (
-                host_state_snapshot
-                if host_state_snapshot is not None
-                else self.host_state.latest_id()
-            ),
-            "metrics": list(self._metric_rows),
-        }
-
     def _write_ckpt(self, state: dict) -> None:
         tmp = self._ckpt + ".tmp"
         with open(tmp, "w") as f:
             json.dump(state, f)
         os.replace(tmp, self._ckpt)
 
-    def _save_ckpt(self) -> None:
-        self._write_ckpt(self._ckpt_state())
-
     # -- write-behind committer --------------------------------------------
-    def _submit_commit(self, fn) -> None:
-        self._raise_failed()
-        self._pending.append(self._committer.submit(fn))
-
     def _raise_failed(self) -> None:
         done = [f for f in self._pending if f.done()]
         for f in done:
@@ -906,18 +891,9 @@ class CrawlEngine:
         return n
 
     @classmethod
-    def resume(
-        cls,
-        spark: SparkSession,
-        workdir: str,
-        cfg: CrawlConfig,
-        pages_df: DataFrame | None,
-        robots_df: DataFrame,
-        baseline_df: DataFrame | None = None,
-        fetcher: Callable[[DataFrame], DataFrame] | None = None,
-        sitemaps_df: DataFrame | None = None,
-    ) -> "CrawlEngine":
+    def resume(cls, *args, **kwargs) -> "CrawlEngine":
         """Rebuild engine state from the last committed checkpoint.
+        Takes the constructor's arguments, forwarded unchanged.
 
         Replays identically: level parts are immutable, the manifest is
         swapped atomically after all writes, and every downstream
@@ -926,17 +902,14 @@ class CrawlEngine:
         (CrawlerEntryLedger.java:206-241,487-511). The Bloom bitmap is
         not persisted; it is re-synced lazily from the ledger.
         """
-        eng = cls(
-            spark, workdir, cfg, pages_df, robots_df, baseline_df,
-            fetcher, sitemaps_df,
-        )
+        eng = cls(*args, **kwargs)
         with open(eng._ckpt) as f:
             state = json.load(f)
         eng.superstep = state["superstep"]
         eng.max_seq = state["max_seq"]
         eng.committed_total = state["committed_total"]
         eng.queued_remaining = state["queued_remaining"]
-        eng._orphans_done = state.get("orphans_done", baseline_df is None)
+        eng._orphans_done = state.get("orphans_done", eng.baseline is None)
         eng._frontier_part = state.get("frontier_part")
         eng._ledger_rows = state.get("ledger_rows", 0)
         eng._branch_est = state.get("branch_est", 10.0)
@@ -974,18 +947,12 @@ class CrawlEngine:
             schema="raw_url string, depth int, avail_ms long, "
             "trail array<string>, parent_seq long, out_pos int",
         )
-        self._set_shuffle(len(seed_urls))
-        empty = self.spark.createDataFrame([], LEDGER_SCHEMA)
-        new_rows, stats = self._queue_pipeline(cand, empty, len(seed_urls))
+        new_rows, stats = self._queue_pipeline(
+            cand, self._ledger_keys(), len(seed_urls)
+        )
         # "0-bootstrap" sorts before "000000" so resume truncation
         # (drop parts > last completed superstep) never removes it.
-        self.levels.append(new_rows, "0-bootstrap")
-        self._add_key_fragment(new_rows)
-        new_rows.unpersist()
-        self._frontier_part = "0-bootstrap"
-        self.queued_remaining = stats["DOCUMENT_QUEUED"]
-        self._record_metrics(stats, "0-bootstrap")
-        self._save_ckpt()
+        self._end_level(new_rows, "0-bootstrap", stats)
 
     # -- queue pipeline (§2.2 stage order) ---------------------------------
     def _queue_pipeline(
@@ -1333,9 +1300,7 @@ class CrawlEngine:
         # broadcasts the small side on its own. Durability rides the
         # same write-behind commit as the level part (see step()).
         if self._sitemap_host_parts:
-            known = self._sitemap_host_parts[0]
-            for frag in self._sitemap_host_parts[1:]:
-                known = known.unionByName(frag)
+            known = self._union(self._sitemap_host_parts, "host string")
             triggers = triggers.join(known, "host", "left_anti")
         trg = triggers.localCheckpoint(eager=True)
         self._pinned.append(trg)
@@ -1455,34 +1420,22 @@ class CrawlEngine:
         # session-conf mutation: the bad-event fold shuffles (its
         # first_wins Window reads spark.sql.* at execution), so letting
         # _set_shuffle flip shuffle sizing / AQE mid-execution is a
-        # race. They were submitted at the top of the previous commit
-        # region, so they have already overlapped that superstep's
+        # race. They were submitted when the previous level ended
+        # (_end_level), so they have already overlapped that level's
         # background parquet writes — the win this deferral exists for.
         self._resolve_bloom()
         self._resolve_bad_events()
         self._set_shuffle(self.queued_remaining)
         # sched_ms/checksum are re-derived this superstep (QUEUED rows
-        # carry nulls for both). The frontier and host state are handed
-        # over in memory by the previous superstep (localCheckpoints);
-        # the parquet reads only serve a resumed run's first step.
-        frontier = (
-            self._frontier_mem
-            if self._frontier_mem is not None
-            else self._frontier_df()
-        )
-        # http_status is the QUEUED placeholder (always null here) —
-        # dropped so the fetch/head/premature branches re-derive the
-        # real response column without a name collision
-        batch = frontier.drop(
+        # carry nulls for both); http_status is the QUEUED placeholder
+        # (always null here) — dropped so the fetch/head/premature
+        # branches re-derive the real response column without a name
+        # collision
+        batch = self._frontier_df().drop(
             "sched_ms", "checksum", "meta_ck", "meta_tracked",
             "http_status",
         )
-
-        host_state = (
-            self._host_state_mem
-            if self._host_state_mem is not None
-            else self.host_state.read()
-        )
+        host_state = self._host_state_df()
         # RecrawlableResolver (PREMATURE) runs before the delay
         # resolver: not-yet-due URLs bypass politeness and fetch
         # entirely (RecrawlableResolverStage.java:38-93)
@@ -1618,26 +1571,17 @@ class CrawlEngine:
                 "meta_ck", F.lit(None).cast("string")
             ).withColumn("meta_filtered", F.lit(False))
         if head_rows_src is not None:
-            head_rows = head_rows_src.select(
-                *[F.col(c) for c in batch.columns],
-                "sched_ms",
-                F.lit(200).alias("http_status"),
-                F.lit(None).cast("string").alias("redirect_to"),
-                F.lit(None).cast("string").alias("canonical"),
-                F.lit(False).alias("noindex"),
-                F.lit(False).alias("nofollow"),
-                F.lit(None).cast("string").alias("checksum"),
-                F.lit(None).cast(PARSE_FIELDS["links"].dataType).alias("links"),
-                F.lit(False).cast("boolean").alias("doc_filtered"),
-                F.lit(None)
-                .cast(PARSE_FIELDS["post_links"].dataType)
-                .alias("post_links"),
-                F.lit(False).alias("premature"),
-                "head_unmod",
-                "meta_ck",
-                "meta_filtered",
+            parsed = parsed.unionByName(
+                _skip_fetch_rows(
+                    head_rows_src,
+                    batch.columns,
+                    sched_ms=F.col("sched_ms"),
+                    http_status=F.lit(200),
+                    head_unmod=F.col("head_unmod"),
+                    meta_ck=F.col("meta_ck"),
+                    meta_filtered=F.col("meta_filtered"),
+                )
             )
-            parsed = parsed.unionByName(head_rows)
         if prem is not None:
             base_meta_prem = (
                 F.col("base_meta_prem")
@@ -1652,26 +1596,16 @@ class CrawlEngine:
                 else F.col(c)
                 for c in batch.columns
             ]
-            prem_rows = prem.select(
-                *prem_cols,
-                F.col("base_sched").alias("sched_ms"),
-                F.lit(None).cast("int").alias("http_status"),
-                F.lit(None).cast("string").alias("redirect_to"),
-                F.lit(None).cast("string").alias("canonical"),
-                F.lit(False).alias("noindex"),
-                F.lit(False).alias("nofollow"),
-                F.col("base_ck_prem").alias("checksum"),
-                F.lit(None).cast(PARSE_FIELDS["links"].dataType).alias("links"),
-                F.lit(False).cast("boolean").alias("doc_filtered"),
-                F.lit(None)
-                .cast(PARSE_FIELDS["post_links"].dataType)
-                .alias("post_links"),
-                F.lit(True).alias("premature"),
-                F.lit(False).alias("head_unmod"),
-                base_meta_prem.alias("meta_ck"),
-                F.lit(False).alias("meta_filtered"),
+            parsed = parsed.unionByName(
+                _skip_fetch_rows(
+                    prem,
+                    prem_cols,
+                    sched_ms=F.col("base_sched"),
+                    checksum=F.col("base_ck_prem"),
+                    premature=F.lit(True),
+                    meta_ck=base_meta_prem,
+                )
             )
-            parsed = parsed.unionByName(prem_rows)
 
         # stay-on-domain/protocol vs the referring page: out-of-scope
         # links are dropped at extraction, before the queue pipeline
@@ -2047,20 +1981,9 @@ class CrawlEngine:
         # triggered GRACE_ONCE) strategy -> delete op
         # (GenericSpoiledReferenceStrategizer state->strategy mapping)
         if cfg.spoiled_delete:
-            spoiled = parsed.filter(F.col("spoiled_del")).select(
-                F.col("url").alias("image_id"),
-                F.lit(None).cast("binary").alias("bytes"),
-                F.lit(None).cast("int").alias("w"),
-                F.lit(None).cast("int").alias("h"),
-                F.lit(None).cast("string").alias("fmt"),
-                F.lit(None).cast("string").alias("caption"),
-                F.lit(None).cast("long").alias("phash"),
-                F.lit(None).cast("string").alias("checksum"),
-                "seq",
-                "depth",
-                F.lit("delete").alias("op"),
+            docs = docs.unionByName(
+                _delete_ops(parsed.filter(F.col("spoiled_del")))
             )
-            docs = docs.unionByName(spoiled)
 
         # ---- next-level candidates ----
         # the redirect/canonical/post branches carry a few % of the
@@ -2358,136 +2281,6 @@ class CrawlEngine:
             }
         )
 
-        # ---- commit: O(level) writes only, WRITE-BEHIND ----
-        # The next superstep depends only on in-memory state (frontier
-        # localCheckpoint, host-state localCheckpoint, key/registry
-        # fragments, Bloom bitmap, driver counters). The durable level
-        # part, documents part, host-state snapshot and manifest are
-        # handed to a single ordered committer thread: a crash before a
-        # manifest lands simply replays that superstep identically from
-        # the previous manifest. Hides the heaviest write stage (image
-        # synthesis + parquet encode) under the next superstep's
-        # latency-bound phases.
-        # coalesce the union branches: without it each branch keeps its
-        # own partitions and the write stage runs 2x-parallelism
-        # concurrent tasks — oversubscribing the Python workers 2:1
-        # (measured 5x core-seconds inflation on the image stage).
-        n_out = self._n_part(
-            stats["DOCUMENT_FETCHED"] + stats["DOCUMENT_QUEUED"]
-        )
-        sid = self.superstep + 1
-        part = f"{self.superstep:06d}"
-
-        # ONE localCheckpoint serves both hand-offs: the key fragment
-        # (all new rows) and the next frontier (its QUEUED subset) are
-        # lazy projections of the same flat snapshot, and the level
-        # write below reuses the snapshot instead of the cache. The
-        # registry snapshot (parsed's plan references the prior
-        # registry — lineage-flattening) and the host-state fold are
-        # independent reads of already-materialized caches, so all
-        # three checkpoints run as CONCURRENT jobs.
-        prev_state = (
-            self._host_state_mem
-            if self._host_state_mem is not None
-            else self.host_state.read()
-        )
-        # premature rows never held a politeness slot — they must not
-        # advance the per-host clock. The fold keys by the politeness
-        # scope key (host for SITE; global/thread sentinel otherwise),
-        # stored in the host_state table's `host` column.
-        from ..operators.politeness import scope_key_col
-
-        new_state_df = (
-            parsed.filter(~F.col("premature"))
-            .groupBy(
-                scope_key_col(
-                    cfg.delay_scope, cfg.delay_threads
-                ).alias("host")
-            )
-            .agg(F.max("sched_ms").alias("last_sched_ms"))
-        )
-        if prev_state is not None:
-            new_state_df = (
-                new_state_df.unionByName(prev_state)
-                .groupBy("host")
-                .agg(F.max("last_sched_ms").alias("last_sched_ms"))
-            )
-        ckpt_dfs = {
-            "registry": parsed.filter(
-                F.col("outcome").isin("NEW", "MODIFIED")
-            ).select("checksum"),
-            "host_state": new_state_df,
-        }
-        if cfg.metadata_dedup:
-            ckpt_dfs["meta_registry"] = parsed.filter(
-                F.col("meta_tracked")
-            ).select("meta_ck")
-        futs = {
-            k: self._ckpt_pool.submit(df.localCheckpoint, True)
-            for k, df in ckpt_dfs.items()
-        }
-        new_state = futs["host_state"].result()
-        # the queue pipeline's output is already an eager localCheckpoint
-        # with exactly LEDGER_SCHEMA's columns: it is the level's state
-        self._pinned.append(new_rows)
-        frag = new_rows.select("url", "seen_key")
-        if self._bloom_synced:
-            # the bitmap isn't consulted again until the NEXT
-            # superstep's queue pipeline — fold the new keys in on the
-            # pool and only block there (_resolve_bloom)
-            self._bloom_fut = self._ckpt_pool.submit(
-                self.bloom.add_df, frag
-            )
-        self._key_parts.append(frag)
-        self._registry_parts.append(futs["registry"].result())
-        if cfg.metadata_dedup:
-            self._meta_registry_parts.append(futs["meta_registry"].result())
-        if cfg.redirect_requeue:
-            # fold this superstep's events (PROCESSED rows at their own
-            # seq; new QUEUED/REJECTED rows at their parent's turn) into
-            # the compact bad-target state — O(level + |bad|), replacing
-            # r2's ever-growing event-fragment union. The fold's plan is
-            # built here (it references the current state) but its
-            # checkpoint runs on the pool — the state is next read in
-            # the NEXT superstep's queue pipeline (_events), which
-            # resolves the future.
-            cur_events = parsed.select(
-                "url",
-                F.col("seq").alias("turn"),
-                F.lit("PROCESSED").alias("kind"),
-                F.col("outcome").alias("ev_outcome"),
-            ).unionByName(new_rows.select(*_event_proj()))
-            old_ev = self._bad_event_state
-            merged_ev = self._merge_bad_events(cur_events)
-            self._bad_ev_fut = self._ckpt_pool.submit(
-                lambda df=merged_ev, old=old_ev: (
-                    df.localCheckpoint(True),
-                    old,
-                )
-            )
-        next_frontier = new_rows.filter(F.col("status") == "QUEUED")
-        # the superseded snapshot is dead: new_state is eagerly
-        # materialized, nothing re-reads the old frame
-        if (
-            self._host_state_mem is not None
-            and self._host_state_mem is not new_state
-        ):
-            try:
-                self._host_state_mem.unpersist()
-            except Exception:
-                pass
-        self._host_state_mem = new_state
-        tick("mem_state")
-
-        self._record_metrics(stats, part)
-        self._frontier_part = part
-        self.committed_total += stats["DOCUMENT_COMMITTED_UPSERT"]
-        self.queued_remaining = (
-            self.queued_remaining
-            - stats["DOCUMENT_FETCHED"]
-            - stats["REJECTED_PREMATURE"]
-            + stats["DOCUMENT_QUEUED"]
-        )
         st = StepStats(
             superstep=self.superstep,
             fetched=stats["DOCUMENT_FETCHED"],
@@ -2495,46 +2288,180 @@ class CrawlEngine:
             queued_new=stats["DOCUMENT_QUEUED"],
             metrics=stats,
         )
-        self.superstep = sid
-        self._frontier_mem = next_frontier
+        self._end_level(
+            new_rows, self._cur_part, stats, processed=processed, docs=docs
+        )
+        tick("end_level")
+        return st
 
-        level_df = processed.unionByName(new_rows).coalesce(n_out)
-        # same 2-branch coalesce for the image-payload write (the most
-        # CPU-intensive stage — worker count must equal core count)
-        docs_df = docs.coalesce(n_out)
-        ckpt_state = self._ckpt_state(host_state_snapshot=sid)
+    # -- ending a level -------------------------------------------------------
+    def _end_level(
+        self,
+        new_rows: DataFrame,
+        part: str,
+        stats: dict,
+        *,
+        processed: DataFrame | None = None,
+        docs: DataFrame | None = None,
+    ) -> None:
+        """End a level — bootstrap, a superstep or the orphan pass: hand
+        the next superstep its inputs in memory, advance the counters,
+        and submit the level's durable writes as ONE write-behind commit.
 
-        # level_df/docs_df read `parsed`, the eager localCheckpoint
-        # taken after the parse (blocks kept memory-and-disk, lineage
-        # cut), so the background write can never re-run the fetch; the
-        # per-superstep shuffle-partition mutation only affects *new*
-        # shuffles, and both writes are shuffle-free (coalesce of
-        # checkpointed partitions).
+        ``new_rows`` is the queue pipeline's output, an eager
+        localCheckpoint with exactly LEDGER_SCHEMA's columns; the key
+        fragment and the next frontier are lazy projections of it.
+        ``processed`` (a superstep's PROCESSED rows, a projection of
+        its parse checkpoint) feeds the checksum registries and the
+        host-state fold; ``docs`` are the level's document ops.
+
+        The next superstep depends only on in-memory state (frontier,
+        host-state checkpoint, key/registry fragments, Bloom bitmap,
+        driver counters). The level part, documents part, host-state
+        snapshot and manifest go to a single ordered committer thread:
+        a crash before a manifest lands replays that level identically
+        from the previous manifest (a crash before bootstrap's manifest
+        leaves nothing to resume, as before any commit). The commit
+        reads only checkpointed rows, so the background writes can
+        never re-run a fetch, and they are shuffle-free: the main
+        thread's per-level shuffle-partition changes cannot reach
+        them."""
+        cfg = self.cfg
+        # registry snapshots and the host-state fold are independent
+        # reads of the parse checkpoint: concurrent jobs on the pool
+        ckpts = {}
+        if processed is not None:
+            # premature rows never held a politeness slot — they must
+            # not advance the per-host clock. The fold keys by the
+            # politeness scope key (host for SITE; global/thread
+            # sentinel otherwise), stored in the table's `host` column.
+            from ..operators.politeness import scope_key_col
+
+            state = (
+                processed.filter(F.col("outcome") != "PREMATURE")
+                .groupBy(
+                    scope_key_col(
+                        cfg.delay_scope, cfg.delay_threads
+                    ).alias("host")
+                )
+                .agg(F.max("sched_ms").alias("last_sched_ms"))
+            )
+            prev_state = self._host_state_df()
+            if prev_state is not None:
+                state = (
+                    state.unionByName(prev_state)
+                    .groupBy("host")
+                    .agg(F.max("last_sched_ms").alias("last_sched_ms"))
+                )
+            ckpts["host_state"] = state
+            ckpts["registry"] = processed.filter(
+                F.col("outcome").isin("NEW", "MODIFIED")
+            ).select("checksum")
+            if cfg.metadata_dedup:
+                ckpts["meta_registry"] = processed.filter(
+                    F.col("meta_tracked")
+                ).select("meta_ck")
+        futs = {
+            k: self._ckpt_pool.submit(df.localCheckpoint, True)
+            for k, df in ckpts.items()
+        }
+        self._pinned.append(new_rows)
+        frag = new_rows.select("url", "seen_key")
+        if self._bloom_synced:
+            # the bitmap isn't consulted again until the NEXT level's
+            # queue pipeline — fold the new keys in on the pool and
+            # only block there (_resolve_bloom)
+            self._bloom_fut = self._ckpt_pool.submit(self.bloom.add_df, frag)
+        self._key_parts.append(frag)
+        level = new_rows
+        if processed is not None:
+            level = processed.unionByName(new_rows)
+        if cfg.redirect_requeue:
+            # fold this level's events (PROCESSED rows at their own seq;
+            # new QUEUED/REJECTED rows at their parent's turn) into the
+            # compact bad-target state — O(level + |bad|). The plan is
+            # built here; its checkpoint runs on the pool and lands at
+            # the next read (_events / _resolve_bad_events).
+            merged = self._merge_bad_events(level.select(*_event_proj()))
+            self._bad_ev_fut = self._ckpt_pool.submit(
+                merged.localCheckpoint, True
+            )
+        host_state = None
+        if processed is not None:
+            host_state = futs["host_state"].result()
+            self._host_state_mem = host_state
+            self._registry_parts.append(futs["registry"].result())
+            if cfg.metadata_dedup:
+                self._meta_registry_parts.append(
+                    futs["meta_registry"].result()
+                )
+        self._frontier_mem = new_rows.filter(F.col("status") == "QUEUED")
+        self._frontier_part = part
+        self._record_metrics(stats, part)
+        self.committed_total += stats.get("DOCUMENT_COMMITTED_UPSERT", 0)
+        self.queued_remaining += (
+            stats.get("DOCUMENT_QUEUED", 0)
+            - stats.get("DOCUMENT_FETCHED", 0)
+            - stats.get("REJECTED_PREMATURE", 0)
+        )
+        if part != "0-bootstrap":
+            self.superstep += 1
+        sid = self.superstep
+        ckpt_state = {
+            "superstep": sid,
+            "max_seq": self.max_seq,
+            "committed_total": self.committed_total,
+            "queued_remaining": self.queued_remaining,
+            "orphans_done": self._orphans_done,
+            "frontier_part": part,
+            "ledger_rows": self._ledger_rows,
+            "branch_est": self._branch_est,
+            "frontier_min_depth": self._frontier_min_depth,
+            "max_sched_seen": self._max_sched_seen,
+            "metrics": list(self._metric_rows),
+        }
+        # coalesce the union branches: without it each branch keeps its
+        # own partitions and the write stage runs 2x-parallelism
+        # concurrent tasks — oversubscribing the Python workers 2:1
+        # (measured 5x core-seconds inflation on the image stage)
+        n_out = self._n_part(
+            stats.get("DOCUMENT_FETCHED", 0) + stats.get("DOCUMENT_QUEUED", 0)
+        )
+        level = level.coalesce(n_out)
+        if docs is not None:
+            docs = docs.coalesce(n_out)
+
         def commit():
-            self.levels.append(level_df, part)
-            self.documents.append(docs_df, part)
-            self.host_state.write(new_state, sid)
-            parsed.unpersist()
+            self.levels.append(level, part)
+            if docs is not None:
+                self.documents.append(docs, part)
+            if host_state is not None:
+                self.host_state.write(host_state, sid)
+            # a level without a host-state fold keeps the last snapshot
+            ckpt_state["host_state_snapshot"] = self.host_state.latest_id()
             self._write_ckpt(ckpt_state)
 
-        self._submit_commit(commit)
-        tick("commit_submit")
-        return st
+        self._raise_failed()
+        self._pending.append(self._committer.submit(commit))
 
     def _inject_orphans(self) -> None:
         """Orphan pass: every baseline URL never rediscovered this run
         (RequeueOrphansForProcessingStep analog). PROCESS requeues them
         through the normal queue pipeline in baseline-seq order;
-        DELETE emits delete ops for previously committed ones."""
+        DELETE emits delete ops for previously committed ones; IGNORE
+        ends an empty level."""
+        # land the last level's pool folds before the queue pipeline
+        # changes session settings
         self.flush()
         orphans = self.baseline.join(
             self._ledger_keys().select("url"), "url", "left_anti"
         ).cache()
         self._pinned.append(orphans)
         strategy = self.cfg.orphan_strategy
-        sid = self.superstep + 1
-        part = f"{self.superstep:06d}"
-        self._cur_part = part
+        self._cur_part = f"{self.superstep:06d}"
+        new_rows = self.spark.createDataFrame([], LEDGER_SCHEMA)
+        stats = {}
+        docs = None
         if strategy == "PROCESS":
             cand = orphans.select(
                 F.col("url").alias("raw_url"),
@@ -2547,37 +2474,15 @@ class CrawlEngine:
             n = orphans.count()
             new_rows, stats = self._queue_pipeline(cand, self._ledger_keys(), n)
             stats["ORPHANS_REQUEUED"] = n
-            self.levels.append(new_rows, part)
-            self._add_key_fragment(new_rows)
-            self._frontier_mem = (
-                new_rows.filter(F.col("status") == "QUEUED")
-                .localCheckpoint(eager=True)
-            )
-            new_rows.unpersist()
-            self._frontier_part = part
-            self.queued_remaining += stats["DOCUMENT_QUEUED"]
-            self._record_metrics(stats, part)
         elif strategy == "DELETE":
-            deletes = orphans.filter(F.col("checksum").isNotNull()).select(
-                F.col("url").alias("image_id"),
-                F.lit(None).cast("binary").alias("bytes"),
-                F.lit(None).cast("int").alias("w"),
-                F.lit(None).cast("int").alias("h"),
-                F.lit(None).cast("string").alias("fmt"),
-                F.lit(None).cast("string").alias("caption"),
-                F.lit(None).cast("long").alias("phash"),
-                F.lit(None).cast("string").alias("checksum"),
-                F.col("seq").cast("long").alias("seq"),
-                F.col("depth").cast("int").alias("depth"),
-                F.lit("delete").alias("op"),
-            )
-            self.documents.append(deletes, part)
-            n_del = deletes.count()
-            self._record_metrics({"DOCUMENT_COMMITTED_DELETE": n_del}, part)
-        # IGNORE: nothing to write; the frontier is already drained
+            # checkpointed: the write-behind commit must not read the
+            # orphan cache, which is released below
+            docs = _delete_ops(
+                orphans.filter(F.col("checksum").isNotNull())
+            ).localCheckpoint(eager=True)
+            stats["DOCUMENT_COMMITTED_DELETE"] = docs.count()
         orphans.unpersist()
-        self.superstep = sid
-        self._save_ckpt()
+        self._end_level(new_rows, self._cur_part, stats, docs=docs)
 
     def run(self, max_supersteps: int = 10_000) -> list[StepStats]:
         out = []

@@ -5,10 +5,13 @@ run, which itself matches the pure-Python oracle. Reference analog:
 requeue-on-resume (CrawlerEntryLedger.java:206-241,487-511) + the
 north rule's per-partition-lineage replay requirement."""
 
+import pytest
+from pyspark.sql import functions as F
+
 from crawlspark.config import CrawlConfig
 from crawlspark.oracle.simulator import CrawlSimulator
 from crawlspark.plans.superstep import CrawlEngine
-from crawlspark.sources.webgen import SiteParams, build_site
+from crawlspark.sources.webgen import SiteParams, build_site, make_fetcher
 
 
 def _site():
@@ -26,7 +29,7 @@ def _site():
     )
 
 
-def test_kill_after_k_steps_resume_replays_identically(spark, tmp_path):
+def _kill_after_k_steps_and_resume(spark, tmp_path, k):
     site = _site()
     cfg = CrawlConfig(max_depth=3, default_delay_ms=1000)
     seeds = [r["url"] for r in site.seeds.to_dict("records")]
@@ -39,12 +42,16 @@ def test_kill_after_k_steps_resume_replays_identically(spark, tmp_path):
     full.run()
     full_log = full.fetch_log().toPandas()
 
-    # interrupted run: 2 supersteps, then the engine object is dropped
-    # (the "kill") and a NEW engine resumes from the checkpoint
+    # interrupted run: K supersteps, then the engine object is dropped
+    # (the "kill") and a NEW engine resumes from the checkpoint. At
+    # K=0 the kill comes once bootstrap's write-behind commit is
+    # durable: before it there is no checkpoint to resume from.
     part = CrawlEngine(spark, str(tmp_path / "part"), cfg, pages, robots)
     part.bootstrap(seeds)
-    assert part.step() is not None
-    assert part.step() is not None
+    for _ in range(k):
+        assert part.step() is not None
+    if k == 0:
+        part.flush()
     del part
     resumed = CrawlEngine.resume(
         spark, str(tmp_path / "part"), cfg, pages, robots
@@ -68,3 +75,71 @@ def test_kill_after_k_steps_resume_replays_identically(spark, tmp_path):
         seeds
     )
     assert res_log["url"].tolist() == [r["url"] for r in sim.fetch_log]
+
+
+def test_kill_after_k_steps_resume_replays_identically(spark, tmp_path):
+    _kill_after_k_steps_and_resume(spark, tmp_path, 2)
+
+
+def test_kill_after_bootstrap_resume_replays_identically(spark, tmp_path):
+    _kill_after_k_steps_and_resume(spark, tmp_path, 0)
+
+
+def test_resume_forwards_headers_df(spark, tmp_path):
+    """A crawl whose metadata band reads a headers-only dim (the
+    real-socket HEAD form) and no pages table resumes with that dim."""
+    p = SiteParams(seed=5, n_hosts=2, depth=2, branching=3, n_seed_hosts=2)
+    site = build_site(p)
+    cfg = CrawlConfig(
+        max_depth=2,
+        default_delay_ms=1000,
+        metadata_checksummer="last_modified",
+    )
+    seeds = [r["url"] for r in site.seeds.to_dict("records")]
+    robots = spark.createDataFrame(site.robots)
+    headers = spark.createDataFrame(site.pages).select(
+        "url", F.col("status").alias("h_status"), "last_modified", "etag"
+    )
+
+    def engine(name):
+        return CrawlEngine(
+            spark, str(tmp_path / name), cfg, None, robots,
+            fetcher=make_fetcher(p), headers_df=headers,
+        )
+
+    full = engine("full")
+    full.bootstrap(seeds)
+    full.run()
+    full_log = full.fetch_log().toPandas()
+
+    part = engine("part")
+    part.bootstrap(seeds)
+    assert part.step() is not None
+    part.flush()
+    del part
+    resumed = CrawlEngine.resume(
+        spark, str(tmp_path / "part"), cfg, None, robots,
+        fetcher=make_fetcher(p), headers_df=headers,
+    )
+    resumed.run()
+    res_log = resumed.fetch_log().toPandas()
+    assert len(full_log) > len(seeds)
+    assert res_log.equals(full_log)
+
+
+@pytest.mark.parametrize("seeds", [[], ["mailto:x@y"]])
+def test_empty_seed_bootstrap_ends_an_empty_level(spark, tmp_path, seeds):
+    """No seed survives normalization: bootstrap still ends its level
+    through the write-behind commit, with nothing to crawl."""
+    cfg = CrawlConfig(max_depth=3, default_delay_ms=1000)
+    robots = spark.createDataFrame([], "host string, body string")
+    pages = spark.createDataFrame(
+        [], "url string, status int, html string, redirect_to string"
+    )
+    eng = CrawlEngine(spark, str(tmp_path / "w"), cfg, pages, robots)
+    eng.bootstrap(seeds)
+    assert eng.step() is None
+    assert eng.run() == []
+    eng.flush()
+    assert eng.levels.read().count() == 0
+    assert (tmp_path / "w" / "checkpoint.json").exists()
