@@ -24,30 +24,39 @@ survives a 10^10-URL frontier. A level part holds this superstep's
 On Iceberg these are plain appends to a table bucketed by ``seen_key``
 so the URL-seen anti-join prunes partitions.
 
-Superstep dataflow (all declarative; Catalyst/AQE plan it):
+Superstep dataflow (all declarative; Catalyst/AQE plan it). ``step()``
+is a short list of stage methods, each taking and returning frames:
 
-  batch   = previous level's QUEUED rows                (parquet scan)
-  sched   = per-host politeness recurrence   (host-sorted mapInPandas)
-  fetched = fetcher(sched)                              (the fetch slot*)
-  parsed  = canonical/robots-meta/links/md5/baseline    (Arrow UDFs)
-  outcome = CASE ladder + checksum first-wins window    (JVM)
-  docs    = NEW/MODIFIED rows + image payload           (Arrow UDF)
-  cands   = redirect ∪ canonical ∪ explode(links)
-  queue pipeline: normalize → first-wins → driver Bloom prefilter +
-                  exact anti-join vs ledger → depth/filters/robots →
-                  assign dense seq
-  commit  = ONE write-behind job per level (bootstrap, superstep and
-            orphan pass alike, see ``_end_level``): level part +
-            documents part + host-state snapshot + checkpoint manifest
-            (atomic swap last)
+  _split_premature  frontier -> not-yet-due PREMATURE rows (baseline
+                    join + recrawl resolver) | the batch to fetch
+  _schedule         per-host politeness recurrence (host-sorted
+                    mapInPandas) + the metadata/HEAD band
+  _fetch_parse      fetcher.batches ∘ parse as ONE mapInPandas (or the
+                    ``pages``-table join for fixtures) ∪ the rows that
+                    skip the fetch, then the link-scope filter
+  _outcomes         baseline delta, metadata + checksum first-wins
+                    windows, the CASE outcome ladder; ends in the parse
+                    checkpoint
+  _level_outputs    PROCESSED rows, document ops, next-level candidates
+                    (redirect/canonical targets ∪ explode(links)) and
+                    the redirect one-requeue rows
+  _queue_level      the queue pipeline (normalize → first-wins → driver
+                    Bloom prefilter + exact anti-join vs ledger →
+                    depth/filters/robots → dense seq) and ONE merged
+                    collect of its counts with the level's metrics
+  _end_level        ONE write-behind commit per level (bootstrap,
+                    superstep and orphan pass alike): level part +
+                    documents part + host-state snapshot + sitemap
+                    trigger hosts + checkpoint manifest (atomic swap
+                    last)
 
-*The fetch slot has two implementations: ``fetcher`` — a mapInPandas
-transform resolving each URL in the fetch task itself (zero shuffle;
-the real async-HTTP fetcher with per-fetcher retries,
+The fetch slot is a ``fetcher`` carrying ``.batches`` — a generator
+over pandas batches resolving each URL in the fetch task itself (zero
+shuffle; the real async-HTTP fetcher with per-fetcher retries,
 MultiFetcher.java:94-138, drops into exactly this shape — see
-``webgen.make_fetcher`` for the synthetic one) — or a LEFT JOIN
-against a materialized ``pages`` table (FIXTURES.md §1, the
-MockWebsite analog) for arbitrary test fixtures.
+``webgen.fetch_slot``) — or, without a fetcher, a LEFT JOIN against a
+materialized ``pages`` table (FIXTURES.md §1, the MockWebsite analog)
+for arbitrary test fixtures.
 
 Scale/efficiency notes:
 
@@ -84,9 +93,9 @@ Scale/efficiency notes:
 * Host-keyed and baseline dimension joins carry no hints: the
   session's ``spark.sql.autoBroadcastJoinThreshold`` alone picks
   broadcast or shuffle join.
-* Fetch and parse are FUSED into one ``mapInPandas`` pass when the
-  fetcher exposes its generator form: page bodies are parsed in the
-  Python worker that fetched them and never serialize to the JVM.
+* Fetch and parse are FUSED into one ``mapInPandas`` pass: page
+  bodies are parsed in the Python worker that fetched them and never
+  serialize to the JVM.
 * No collect() ever holds row data on the driver — only per-partition
   counts, metric dicts, and the Bloom bitmap. Run metrics live in the
   checkpoint manifest (driver json), not in Spark jobs.
@@ -98,7 +107,7 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -210,7 +219,7 @@ DOCS_SCHEMA = T.StructType(
     ]
 )
 
-CAND_COLS = ["raw_url", "depth", "avail_ms", "trail", "parent_seq", "out_pos"]
+_EVENT_SCHEMA = "url string, turn long, kind string, ev_outcome string"
 
 def _recrawlable_col(cfg: CrawlConfig):
     """GenericRecrawlableResolver.java:98-244 as one Column over a
@@ -282,18 +291,57 @@ def _recrawlable_col(cfg: CrawlConfig):
     return out.otherwise(F.lit(True))
 
 
-def _event_proj():
-    """Ledger row -> event row for the redirect one-requeue rule: an
+# -- a level's fragment rows ------------------------------------------------
+# One definition per in-memory fragment. The live path (_end_level)
+# applies them to the level's own frames, resume (_restore_parts) to
+# the committed level parts.
+
+
+def _key_rows(level: DataFrame) -> DataFrame:
+    """URL-seen keys (url, seen_key), unique per url: a PROCESSED row
+    is skipped, its QUEUED row already contributed the key."""
+    return level.filter(F.col("status") != "PROCESSED").select(
+        "url", "seen_key"
+    )
+
+
+def _registry_rows(level: DataFrame) -> DataFrame:
+    """Checksums of committed (NEW/MODIFIED) rows."""
+    return level.filter(F.col("outcome").isin("NEW", "MODIFIED")).select(
+        "checksum"
+    )
+
+
+def _meta_registry_rows(level: DataFrame) -> DataFrame:
+    """Meta checksums registered with the dedup service."""
+    return level.filter(F.col("meta_tracked")).select("meta_ck")
+
+
+def _event_rows(level: DataFrame) -> DataFrame:
+    """Ledger rows -> event rows for the redirect one-requeue rule: an
     enqueue event (QUEUED/REJECTED row) happened at its parent's
-    processing turn; a process event (PROCESSED row) at its own seq.
-    (A function: Columns can't build before a SparkContext exists.)"""
-    return (
+    processing turn; a process event (PROCESSED row) at its own seq."""
+    return level.select(
         F.col("url"),
         F.when(F.col("status") == "PROCESSED", F.col("seq"))
         .otherwise(F.col("parent_seq"))
         .alias("turn"),
         F.col("status").alias("kind"),
         F.col("outcome").alias("ev_outcome"),
+    )
+
+
+def _target_col(cfg: CrawlConfig):
+    """Rows whose redirect or canonical target is a next-level
+    candidate: a redirect under the trail limit, or a non-canonical
+    page whose canonical is not already in its trail."""
+    return (
+        (F.col("outcome") == "REDIRECT")
+        & (F.size("trail") < cfg.max_redirect_trail)
+        & F.col("redirect_to").isNotNull()
+    ) | (
+        (F.col("outcome") == "NONCANONICAL")
+        & ~F.array_contains(F.col("trail"), F.col("canonical"))
     )
 
 
@@ -318,6 +366,15 @@ def _skip_fetch_rows(src: DataFrame, cols: list, **given) -> DataFrame:
     }
     out.update(given)
     return src.select(*cols, *[c.alias(name) for name, c in out.items()])
+
+
+def _ledger_rows(df: DataFrame, **given) -> DataFrame:
+    """``df`` projected onto LEDGER_SCHEMA's columns, each taken from
+    ``given`` (name -> Column) or else from ``df``."""
+    return df.select(
+        *[given[f.name].alias(f.name) if f.name in given else f.name
+          for f in LEDGER_SCHEMA.fields]
+    )
 
 
 def _delete_ops(rows: DataFrame) -> DataFrame:
@@ -347,6 +404,19 @@ class StepStats:
     metrics: dict | None = None
 
 
+class _Queued(NamedTuple):
+    """The queue pipeline's result: the level's new ledger rows (an
+    eager localCheckpoint with LEDGER_SCHEMA's columns), their lazy
+    (status, outcome) -> count/min_depth aggregation, and the hosts
+    whose sitemap this level resolved (written by the level's commit)
+    with their metrics."""
+
+    rows: DataFrame
+    counts: DataFrame | None
+    sitemap_hosts: DataFrame | None
+    sitemap_stats: dict
+
+
 def _persistent_rdd_ids(spark: SparkSession) -> dict:
     """{rdd id: JVM RDD handle} for every currently-persisted RDD —
     the hook release() needs because localCheckpoint storage is only
@@ -368,7 +438,7 @@ class CrawlEngine:
         pages_df: DataFrame | None,
         robots_df: DataFrame,
         baseline_df: DataFrame | None = None,
-        fetcher: Callable[[DataFrame], DataFrame] | None = None,
+        fetcher: Callable | None = None,
         sitemaps_df: DataFrame | None = None,
         headers_df: DataFrame | None = None,
     ):
@@ -378,10 +448,12 @@ class CrawlEngine:
         ledger_b generation flip of CrawlerEntryLedger.java:619-658).
         Build it with ``load_baseline(spark, prev_workdir)``.
 
-        ``fetcher``: optional fetch transform (batch DF with ``url`` ->
-        same DF + http_status/html/redirect_to). When given, fetching
-        runs inside the batch's own tasks (the real-HTTP shape); when
-        None, ``pages_df`` is joined instead."""
+        ``fetcher``: optional fetch slot carrying ``.batches``, a
+        generator over pandas batches with ``url`` that adds
+        http_status/html/redirect_to (``webgen.fetch_slot`` builds
+        one). When given, fetching runs inside the batch's own tasks
+        (the real-HTTP shape); when None, ``pages_df`` is joined
+        instead."""
         self.spark = spark
         self.workdir = workdir
         self.cfg = cfg
@@ -390,18 +462,39 @@ class CrawlEngine:
         # the config names its own op list (GenericUrlNormalizer
         # analog — functions/urlnorm.py; oracle builds the identical
         # function from the same config)
+        norm_fn = None
         if cfg.url_normalizations is None:
             self._norm_udf = normalize_url_udf
         else:
-            from ..functions.urlnorm import custom_normalizer_udf
+            from ..functions.urlnorm import (
+                custom_normalizer_udf,
+                engine_normalizer,
+            )
 
-            self._norm_udf = custom_normalizer_udf(
+            norm_args = (
                 cfg.url_normalizations,
                 cfg.url_replacements,
                 cfg.url_ip_resolver,
             )
+            self._norm_udf = custom_normalizer_udf(*norm_args)
+            norm_fn = engine_normalizer(*norm_args)
+        # the fetch+parse pass's parse half; link targets go through
+        # the same normalizer as the queue pipeline
+        self._parse = make_parse_transformer(
+            cfg.max_depth,
+            cfg.document_filters,
+            post_import=cfg.post_import_links,
+            normalizer=norm_fn,
+        )
         self._orphans_done = baseline_df is None
         os.makedirs(workdir, exist_ok=True)
+        if fetcher is not None and not callable(
+            getattr(fetcher, "batches", None)
+        ):
+            raise ValueError(
+                "fetcher must carry .batches, the generator form of the "
+                "fetch slot (see webgen.fetch_slot)"
+            )
         self.fetcher = fetcher
         if fetcher is None:
             if pages_df is None:
@@ -429,7 +522,11 @@ class CrawlEngine:
         # table — no html column, so the parquet scan prunes the body
         # (the dataflow equivalent of an HTTP HEAD)
         self.headers = None
+        # HEAD mode: a meta-UNMODIFIED or meta-filtered row skips the
+        # body fetch (see _schedule)
+        self._head_mode = False
         if cfg.metadata_checksummer is not None or cfg.metadata_filters:
+            self._head_mode = bool(cfg.head_before_get)
             if headers_df is not None:
                 # headers-only dim supplied directly — e.g. the
                 # real-socket HEAD form (sources/httpfetch
@@ -466,13 +563,10 @@ class CrawlEngine:
             spark, os.path.join(workdir, "ledger_levels"), schema=LEDGER_SCHEMA
         )
         # durable sitemap resolved-state (trigger hosts), one tiny part
-        # per resolving superstep — see _sitemap_candidates
+        # per resolving level, written by the level's commit
         self.sitemap_hosts = AppendTable(
             spark, os.path.join(workdir, "sitemap_hosts"), schema="host string"
         )
-        # part name of the superstep currently being built (bootstrap /
-        # step / orphan pass set it before running the queue pipeline)
-        self._cur_part = "0-bootstrap"
         self.host_state = SnapshotTable(spark, os.path.join(workdir, "host_state"))
         self.documents = AppendTable(
             spark, os.path.join(workdir, "documents"), schema=DOCS_SCHEMA
@@ -526,10 +620,9 @@ class CrawlEngine:
         # hosts whose sitemap resolution already ran (== hosts ever
         # QUEUED), kept as dataflow fragments like _key_parts — never a
         # driver-side set, so 10^7+ hosts never ship through the driver.
-        # Durable through their own sidecar parts (see
-        # _sitemap_candidates), read back in resume().
+        # Durable through their own sidecar parts, written by the
+        # level's commit (_end_level) and read back in resume().
         self._sitemap_host_parts: list[DataFrame] = []
-        self._last_sitemap_stats: dict = {}
         # write-behind committer: one ordered background thread owns
         # durability (level/documents/host-state/manifest); the main
         # thread owns compute and hands the next superstep its inputs
@@ -610,29 +703,19 @@ class CrawlEngine:
         events = []
         for name in self.levels.parts():
             pdf = self.levels.read_part(name[len("part-"):])
-            self._key_parts.append(
-                pdf.filter(F.col("status") != "PROCESSED")
-                .select("url", "seen_key")
-                .cache()
-            )
-            self._registry_parts.append(
-                pdf.filter(F.col("outcome").isin("NEW", "MODIFIED"))
-                .select("checksum")
-                .cache()
-            )
+            self._key_parts.append(_key_rows(pdf).cache())
+            self._registry_parts.append(_registry_rows(pdf).cache())
             if self.cfg.metadata_dedup:
                 self._meta_registry_parts.append(
-                    pdf.filter(F.col("meta_tracked")).select("meta_ck").cache()
+                    _meta_registry_rows(pdf).cache()
                 )
             if self.cfg.redirect_requeue:
-                events.append(pdf.select(*_event_proj()))
+                events.append(_event_rows(pdf))
         if self.cfg.redirect_requeue:
             # one merge over all committed parts' events rebuilds the
             # compact bad-target state (same fold the live path runs
             # per level — resume replays identically)
-            ev = self._union(
-                events, "url string, turn long, kind string, ev_outcome string"
-            )
+            ev = self._union(events, _EVENT_SCHEMA)
             self._bad_event_state = self._merge_bad_events(
                 ev
             ).localCheckpoint(eager=True)
@@ -668,72 +751,6 @@ class CrawlEngine:
             return self._host_state_mem
         return self.host_state.read()
 
-    def _fetch_parse(self, sched: DataFrame) -> DataFrame:
-        """Fetch + parse the scheduled batch.
-
-        Preferred shape: the fetcher's generator form composed with the
-        parse transformer into ONE mapInPandas — bodies are fetched and
-        parsed in the same Python worker pass and only the distilled
-        parse fields (canonical/robots-meta/checksum/links) return to
-        the JVM. Fallbacks: a DataFrame-level fetcher, or the
-        ``pages``-table join (MockWebsite analog), each followed by the
-        parse transformer (html crosses once, then is dropped).
-        """
-        # a QUEUED ledger row carries a null http_status placeholder;
-        # the fetch slot produces the real one — drop the placeholder
-        # so the response column is unambiguous
-        if "http_status" in sched.columns:
-            sched = sched.drop("http_status")
-        norm_fn = None
-        if self.cfg.url_normalizations is not None:
-            from ..functions.urlnorm import engine_normalizer
-
-            norm_fn = engine_normalizer(
-                self.cfg.url_normalizations,
-                self.cfg.url_replacements,
-                self.cfg.url_ip_resolver,
-            )
-        parse = make_parse_transformer(
-            self.cfg.max_depth,
-            self.cfg.document_filters,
-            post_import=self.cfg.post_import_links,
-            normalizer=norm_fn,
-        )
-        parse_names = {f.name for f in PARSE_FIELDS.fields}
-        out_fields = [
-            f
-            for f in sched.schema.fields
-            if f.name
-            not in (
-                "html",
-                "http_status",
-                "redirect_to",
-                "link_header",
-                "x_robots",
-            )
-            and f.name not in parse_names
-        ]
-        out_schema = T.StructType(
-            out_fields
-            + [
-                T.StructField("http_status", T.IntegerType()),
-                T.StructField("redirect_to", T.StringType()),
-            ]
-            + list(PARSE_FIELDS.fields)
-        )
-        gen = getattr(self.fetcher, "batches", None)
-        if gen is not None:
-
-            def composed(batches):
-                return parse(gen(batches))
-
-            return sched.mapInPandas(composed, schema=out_schema)
-        if self.fetcher is not None:
-            fetched = self.fetcher(sched)
-        else:
-            fetched = sched.join(self.pages, "url", "left")
-        return fetched.mapInPandas(parse, schema=out_schema)
-
     def _checksum_registry(self) -> DataFrame:
         """(checksum, ck_seen) from committed ledger rows — unique per
         checksum by construction (a checksum commits at most once per
@@ -765,9 +782,7 @@ class CrawlEngine:
         rows; never O(ledger)."""
         self._resolve_bad_events()
         if self._bad_event_state is None:
-            return self.spark.createDataFrame(
-                [], "url string, turn long, kind string, ev_outcome string"
-            )
+            return self.spark.createDataFrame([], _EVENT_SCHEMA)
         return self._bad_event_state
 
     def _merge_bad_events(self, new_events: DataFrame) -> DataFrame:
@@ -941,40 +956,40 @@ class CrawlEngine:
     def bootstrap(self, seed_urls: list[str]) -> None:
         """Seed enqueue (QueueBootstrapper analog; skipped on resume —
         QueueBootstrapper.java:74-79)."""
+        tick = _Tick(self.superstep)
         rows = [(u, 0, 0, [], -1, i) for i, u in enumerate(seed_urls)]
         cand = self.spark.createDataFrame(
             rows,
             schema="raw_url string, depth int, avail_ms long, "
             "trail array<string>, parent_seq long, out_pos int",
         )
-        new_rows, stats = self._queue_pipeline(
-            cand, self._ledger_keys(), len(seed_urls)
-        )
+        q = self._queue_pipeline(cand, len(seed_urls))
+        stats = self._queue_stats(q, q.counts.collect(), len(seed_urls))
+        tick("queue")
         # "0-bootstrap" sorts before "000000" so resume truncation
         # (drop parts > last completed superstep) never removes it.
-        self._end_level(new_rows, "0-bootstrap", stats)
+        self._end_level(q, "0-bootstrap", stats)
+        tick("end_level")
 
     # -- queue pipeline (§2.2 stage order) ---------------------------------
     def _queue_pipeline(
         self,
         cand: DataFrame,
-        ledger: DataFrame,
         n_cand: int,
-        collect: bool = True,
         extra_evaluated: DataFrame | None = None,
-    ):
-        """Candidates -> new ledger rows (QUEUED or REJECTED_*), plus
-        metric counts. Stage order fixed at WebDocPipelines.java:58-65.
-        ``n_cand`` is precomputed by the caller (avoids re-running the
-        candidate lineage just for a count). With ``collect=False``
-        returns (new_rows, counts_df, cleanup) so the caller can fold
-        the counts into a single shared collect action."""
+    ) -> _Queued:
+        """Candidates -> new ledger rows (QUEUED or REJECTED_*) and their
+        lazy per-(status, outcome) counts. Stage order fixed at
+        WebDocPipelines.java:58-65. ``n_cand`` sizes the shuffles; it is
+        precomputed (or estimated) by the caller, so the candidate
+        lineage never runs just for a count. The caller collects
+        ``counts`` — alone, or folded into its own single action — and
+        passes the rows to ``_queue_stats``."""
         cfg = self.cfg
-        qtick = _Tick(self.superstep)
         self._set_shuffle(n_cand)
+        ledger = self._ledger_keys()
         caches: list[DataFrame] = []
         c = self._evaluate_candidates(cand, ledger, n_cand, caches)
-        qtick("qp:eval_built")
 
         # SitemapResolution (web/.../queue/stages/SitemapResolutionStage
         # .java:63-231): the first QUEUED candidate of a never-seen host
@@ -983,11 +998,13 @@ class CrawlEngine:
         # QueueReferenceStage), at depth 0, through the same evaluation.
         # Non-lenient parsing (SitemapParser.java:103) keeps locs on the
         # same host, bounding resolution to one round per superstep.
+        sm_hosts, sm_stats = None, {}
         if cfg.use_sitemaps and self.sitemaps is not None:
             c = c.cache()
             caches.append(c)
-            locs = self._sitemap_candidates(c, caches)
-            if locs is not None:
+            resolved = self._sitemap_candidates(c, caches)
+            if resolved is not None:
+                sm_hosts, locs, sm_stats = resolved
                 c = c.unionByName(
                     self._evaluate_candidates(locs, ledger, n_cand, caches)
                 )
@@ -1032,7 +1049,6 @@ class CrawlEngine:
         # released with the other caches; held here because the variants
         # join below replaces seq_df with a frame that lacks the handle
         caches.append(seq_df._assign_seq_cache)
-        qtick("qp:seq_assigned")
         if cfg.record_url_variants:
             # reference-trail variant marking (ProcessFinalize.java:
             # 205-219): raw spellings that normalized to this url —
@@ -1054,59 +1070,36 @@ class CrawlEngine:
             rv_col = F.col("raw_variants")
         else:
             rv_col = F.lit(None).cast("array<string>")
-        new_rows = seq_df.select(
-            "url",
-            "seen_key",
-            "host",
-            "depth",
-            "seq",
-            F.col("parent_seq").cast("long").alias("parent_seq"),
-            "avail_ms",
-            F.lit(None).cast("long").alias("sched_ms"),
-            "status",
-            "outcome",
-            F.lit(None).cast("int").alias("http_status"),
-            F.lit(None).cast("string").alias("checksum"),
-            F.lit(None).cast("string").alias("meta_ck"),
-            F.lit(False).alias("meta_tracked"),
-            "sm_lastmod",
-            "sm_changefreq",
-            "trail",
-            rv_col.alias("raw_variants"),
-            F.lit(self.superstep).cast("int").alias("superstep"),
+        new_rows = _ledger_rows(
+            seq_df,
+            parent_seq=F.col("parent_seq").cast("long"),
+            sched_ms=F.lit(None).cast("long"),
+            http_status=F.lit(None).cast("int"),
+            checksum=F.lit(None).cast("string"),
+            meta_ck=F.lit(None).cast("string"),
+            meta_tracked=F.lit(False),
+            raw_variants=rv_col,
+            superstep=F.lit(self.superstep).cast("int"),
         )
         # Materialize as a flat LogicalRDD, not .cache(): a cached
         # frame short-circuits re-EXECUTION but every downstream
         # action (the merged metrics collect, the key fragment, the
         # level parquet write, the frontier filter, the bad-event
-        # projection) still re-ANALYZES the full queue
-        # mega-plan — politeness recurrence, normalize UDF, robots
-        # join, two dedup windows, seq assignment — a ~1s driver cost
-        # per action that is pure per-superstep floor (measured on the
-        # scaling site; the same reason parse_ckpt exists). One
-        # compile + one execution here; every consumer then optimizes
-        # a one-node plan.
+        # projection) still re-ANALYZES the full queue mega-plan —
+        # normalize UDF, URL-seen anti-join, robots verdict, first-wins
+        # window, seq assignment — a ~1s driver cost per action that is
+        # pure per-superstep floor (measured on the scaling site; the
+        # same reason the parse checkpoint exists). One compile + one
+        # execution here; every consumer then optimizes a one-node plan.
         new_rows = new_rows.localCheckpoint(eager=True)
 
-        qtick("qp:plan_built")
-        counts_df = new_rows.groupBy("status", "outcome").agg(
+        # every cache above fed only this checkpoint
+        for df in caches:
+            df.unpersist()
+        counts = new_rows.groupBy("status", "outcome").agg(
             F.count("*").alias("count"), F.min("depth").alias("min_depth")
         )
-
-        def cleanup():
-            for df in caches:
-                df.unpersist()
-
-        if not collect:
-            # caller folds counts_df into its own single collect and
-            # calls _queue_stats + cleanup afterwards
-            return new_rows, counts_df, cleanup
-        counts = counts_df.collect()
-        by_status = {(r["status"], r["outcome"]): r["count"] for r in counts}
-        qtick("qp:materialize+count")
-        stats = self._queue_stats(by_status, n_cand, counts)
-        cleanup()
-        return new_rows, stats
+        return _Queued(new_rows, counts, sm_hosts, sm_stats)
 
     def _evaluate_candidates(
         self,
@@ -1149,15 +1142,10 @@ class CrawlEngine:
             not self._bloom_synced
             and self._ledger_rows >= cfg.bloom_prefilter_min_ledger
         ):
-            _t0 = time.time()
+            tick = _Tick(self.superstep)
             self.bloom.add_df(ledger_keys)
             self._bloom_synced = True
-            if _TIMING:
-                print(
-                    f"[timing] ss={self.superstep} bloom_sync: "
-                    f"{time.time() - _t0:.2f}s",
-                    flush=True,
-                )
+            tick("bloom_sync")
         # pin BOTH join sides' shuffle width explicitly (repartition-by-
         # num is AQE-coalesce-exempt and co-partitions the join, so no
         # extra exchange): the level's slim keys compress far below the
@@ -1264,8 +1252,10 @@ class CrawlEngine:
 
     def _sitemap_candidates(
         self, evaluated: DataFrame, caches: list
-    ) -> DataFrame | None:
-        """Sitemap locs for hosts first QUEUED this superstep.
+    ) -> tuple[DataFrame, DataFrame, dict] | None:
+        """Sitemap locs for hosts first QUEUED this level, as
+        (trigger hosts, loc candidates, sitemap metrics); None when no
+        host is new.
 
         Trigger per new host = its min-(parent_seq, out_pos) surviving
         candidate (the queue-pipeline stages up to SitemapResolution
@@ -1298,7 +1288,7 @@ class CrawlEngine:
         # O(hosts) ever ships through the driver — at 10^7+ hosts the
         # old createDataFrame(sorted(set)) re-ship was the bound. AQE
         # broadcasts the small side on its own. Durability rides the
-        # same write-behind commit as the level part (see step()).
+        # same write-behind commit as the level part (see _end_level).
         if self._sitemap_host_parts:
             known = self._union(self._sitemap_host_parts, "host string")
             triggers = triggers.join(known, "host", "left_anti")
@@ -1307,16 +1297,8 @@ class CrawlEngine:
         n_new = trg.count()
         if n_new == 0:
             return None
-        self._sitemap_host_parts.append(trg.select("host"))
-        # durable resolved-state: the trigger-host definition (a host's
-        # first candidate REACHING this stage marks it resolved, even
-        # if its rows all die at dedup afterwards — the oracle's and
-        # GenericSitemapResolver.java's semantics) is not recoverable
-        # from committed ledger rows, so it gets its own tiny sidecar
-        # part per resolving superstep (the reference likewise persists
-        # its resolvedSites cache in the store). Resume reads these
-        # parts back; truncation follows the level parts'.
-        self.sitemap_hosts.append(trg.select("host"), self._cur_part)
+        hosts = trg.select("host")
+        self._sitemap_host_parts.append(hosts)
         triggers = trg
         sm = self.sitemaps
         if "path" not in sm.columns:
@@ -1363,26 +1345,25 @@ class CrawlEngine:
             .cache()
         )
         caches.append(locs)
-        self._last_sitemap_stats = {
+        stats = {
             "SITEMAP_HOSTS_RESOLVED": n_new,
             "SITEMAP_URLS": locs.count(),
         }
-        return locs
+        return hosts, locs, stats
 
-    def _queue_stats(
-        self, by_status: dict, n_cand: int, count_rows: list
-    ) -> dict:
-        """Fold per-(status,outcome) counts into queue metrics and
-        advance the seq/ledger counters (exactly once per pipeline).
-        ``count_rows`` also carry each group's ``min_depth``: the QUEUED
-        rows become the next frontier."""
+    def _queue_stats(self, q: _Queued, count_rows: list, n_cand: int) -> dict:
+        """Fold the queue pipeline's collected counts into queue metrics
+        and advance the seq/ledger counters (exactly once per pipeline).
+        ``n_cand`` is the exact number of candidates fed in; the
+        sitemap locs the pipeline added are counted here. ``count_rows``
+        also carry each group's ``min_depth``: the QUEUED rows become
+        the next frontier."""
+        by_status = {(r["status"], r["outcome"]): r["count"] for r in count_rows}
         self._frontier_min_depth = next(
             (r["min_depth"] for r in count_rows if r["status"] == "QUEUED"),
             None,
         )
-        sm_stats = self._last_sitemap_stats
-        self._last_sitemap_stats = {}
-        n_cand += sm_stats.get("SITEMAP_URLS", 0)
+        n_cand += q.sitemap_stats.get("SITEMAP_URLS", 0)
         n_new = sum(by_status.values())
         stats = {
             "DOCUMENT_QUEUED": by_status.get(("QUEUED", None), 0),
@@ -1392,14 +1373,22 @@ class CrawlEngine:
             "CANDIDATES": n_cand,
             "DUPLICATE_OR_BAD_SKIPPED": n_cand - n_new,
         }
-        stats.update(sm_stats)
+        stats.update(q.sitemap_stats)
         self.max_seq += n_new
         self._ledger_rows += n_new
         return stats
 
     # -- one superstep ------------------------------------------------------
     def step(self) -> StepStats | None:
-        """Process the whole QUEUED level; None when the crawl is done."""
+        """Process the whole QUEUED level; None when the crawl is done.
+
+        A superstep is six stages, each a method taking and returning
+        frames (WebDocPipelines.java:58-124 builds a level from the same
+        ordered list of named stages): premature split, politeness plus
+        the HEAD band, fetch+parse, the outcome ladder (ending in the
+        parse checkpoint), the level's outputs and next-level
+        candidates, and the queue pipeline with the level's one merged
+        collect. ``_end_level`` then hands the next level over."""
         cfg = self.cfg
         if self.queued_remaining <= 0:
             return None
@@ -1414,7 +1403,6 @@ class CrawlEngine:
         ):
             return None
         tick = _Tick(self.superstep)
-        self._cur_part = f"{self.superstep:06d}"
         self._raise_failed()
         # land the previous superstep's deferred pool folds BEFORE any
         # session-conf mutation: the bad-event fold shuffles (its
@@ -1435,53 +1423,106 @@ class CrawlEngine:
             "sched_ms", "checksum", "meta_ck", "meta_tracked",
             "http_status",
         )
-        host_state = self._host_state_df()
-        # RecrawlableResolver (PREMATURE) runs before the delay
-        # resolver: not-yet-due URLs bypass politeness and fetch
-        # entirely (RecrawlableResolverStage.java:38-93)
-        prem = None
-        recrawl_active = self.baseline is not None and (
+        batch, prem = self._split_premature(batch)
+        tick("premature")
+        sched, head = self._schedule(batch)
+        tick("schedule")
+        parsed = self._fetch_parse(sched, head, prem)
+        tick("fetch_parse")
+        parsed = self._outcomes(parsed)
+        tick("outcomes")
+        processed, docs, cand, requeue = self._level_outputs(parsed)
+        tick("level_outputs")
+        q, stats = self._queue_level(parsed, cand, requeue)
+        tick("queue")
+        st = StepStats(
+            superstep=self.superstep,
+            fetched=stats["DOCUMENT_FETCHED"],
+            committed=stats["DOCUMENT_COMMITTED_UPSERT"],
+            queued_new=stats["DOCUMENT_QUEUED"],
+            metrics=stats,
+        )
+        self._end_level(
+            q, f"{st.superstep:06d}", stats, processed=processed, docs=docs
+        )
+        tick("end_level")
+        return st
+
+    # -- superstep stages ---------------------------------------------------
+    def _split_premature(
+        self, batch: DataFrame
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """Stage 1. RecrawlableResolver (PREMATURE) runs before the delay
+        resolver: not-yet-due URLs bypass politeness and fetch entirely
+        (RecrawlableResolverStage.java:38-93). Returns the batch to
+        schedule and the PREMATURE rows in the parse pass's shape (None
+        without a recrawl policy)."""
+        cfg = self.cfg
+        if self.baseline is None or not (
             cfg.min_recrawl_ms is not None
             or cfg.recrawl_min_frequencies
             or cfg.recrawl_sitemap_check
+        ):
+            return batch, None
+
+        def _bcol(name):
+            return (
+                F.col(name)
+                if name in self.baseline.columns
+                else F.lit(None).cast("string")
+            )
+
+        bsched = self.baseline.select(
+            "url",
+            F.col("sched_ms").alias("base_sched"),
+            F.col("checksum").alias("base_ck_prem"),
+            _bcol("meta_ck").alias("base_meta_prem"),
+            _bcol("sm_lastmod").alias("base_sm_lastmod"),
+            _bcol("sm_changefreq").alias("base_sm_changefreq"),
         )
-        if recrawl_active:
-            def _bcol(name):
-                return (
-                    F.col(name)
-                    if name in self.baseline.columns
-                    else F.lit(None).cast("string")
-                )
+        b2 = batch.join(bsched, "url", "left")
+        is_prem = F.col("base_sched").isNotNull() & ~_recrawlable_col(cfg)
+        batch = b2.filter(~is_prem).drop(*bsched.columns[1:])
+        # PREMATURE keeps the baseline's fetch time and checksum in
+        # its ledger row (GenericRecrawlableResolver preserves the
+        # prior fetch date + cached doc) so a 3rd-run chain still
+        # sees the original due-time and UNMODIFIED/MODIFIED delta.
+        # Sitemap directives: this run's enqueue-time values when
+        # present (fresh sitemap resolution), else the cached ones.
+        prem_cols = [
+            F.coalesce(F.col(c), F.col(f"base_{c}")).alias(c)
+            if c in ("sm_lastmod", "sm_changefreq")
+            else F.col(c)
+            for c in batch.columns
+        ]
+        prem = _skip_fetch_rows(
+            b2.filter(is_prem),
+            prem_cols,
+            sched_ms=F.col("base_sched"),
+            checksum=F.col("base_ck_prem"),
+            premature=F.lit(True),
+            meta_ck=F.col("base_meta_prem"),
+        )
+        return batch, prem
 
-            bsched = self.baseline.select(
-                "url",
-                F.col("sched_ms").alias("base_sched"),
-                F.col("checksum").alias("base_ck_prem"),
-                _bcol("meta_ck").alias("base_meta_prem"),
-                _bcol("sm_lastmod").alias("base_sm_lastmod"),
-                _bcol("sm_changefreq").alias("base_sm_changefreq"),
-            )
-            b2 = batch.join(bsched, "url", "left")
-            is_prem = F.col("base_sched").isNotNull() & ~_recrawlable_col(
-                cfg
-            )
-            # PREMATURE keeps the baseline's fetch time and checksum in
-            # its ledger row (GenericRecrawlableResolver preserves the
-            # prior fetch date + cached doc) so a 3rd-run chain still
-            # sees the original due-time and UNMODIFIED/MODIFIED delta.
-            prem = b2.filter(is_prem)
-            batch = b2.filter(~is_prem).drop(
-                "base_sched",
-                "base_ck_prem",
-                "base_meta_prem",
-                "base_sm_lastmod",
-                "base_sm_changefreq",
-            )
-
+    def _schedule(
+        self, batch: DataFrame
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """Stage 2: the per-host politeness schedule, then the metadata
+        checksum band (MetadataChecksumStage + the HEAD directive,
+        WebDocPipelines.java:89-99). The band joins the headers-only
+        projection (no html — the "HEAD") and computes meta_ck. In HEAD
+        mode a meta-UNMODIFIED or meta-filtered row skips the body
+        fetch+parse entirely (no link extraction); otherwise meta_ck
+        rides through the parse as a passthrough column and the
+        decision happens in the outcome ladder after noindex. Returns
+        the rows to fetch and the HEAD-skipped rows in the parse pass's
+        shape (None outside HEAD mode)."""
+        cfg = self.cfg
         sched = schedule_hosts(
             batch,
             self.delays,
-            host_state,
+            self._host_state_df(),
             cfg.default_delay_ms,
             schedules=cfg.delay_schedules,
             patterns=cfg.delay_patterns,
@@ -1494,128 +1535,139 @@ class CrawlEngine:
             # parse chain behind it
             n_part=self._n_part(self.queued_remaining),
         )
+        if self.headers is None:
+            return sched, None
+        from ..functions.checksums import meta_checksum_col
+        from ..functions.filters import filters_reject_col
 
-        # -- metadata checksum band (MetadataChecksumStage + the HEAD
-        # directive, WebDocPipelines.java:89-99): join the headers-only
-        # projection (no html — the "HEAD") and compute meta_ck. In
-        # head_before_get mode a meta-UNMODIFIED row skips the body
-        # fetch+parse entirely (no link extraction); otherwise meta_ck
-        # rides through the parse as a passthrough column and the
-        # decision happens in the outcome ladder after noindex.
-        head_rows_src = None
-        meta_band = cfg.metadata_checksummer is not None or bool(
-            cfg.metadata_filters
-        )
-        head_mode = bool(meta_band and cfg.head_before_get)
-        if meta_band:
-            from ..functions.checksums import meta_checksum_col
-            from ..functions.filters import filters_reject_col
-
-            hj = sched.join(self.headers, "url", "left").withColumn(
-                "meta_ck",
-                (
-                    meta_checksum_col(
-                        cfg.metadata_checksummer,
-                        cfg.metadata_checksum_fields,
-                    )
-                    if cfg.metadata_checksummer is not None
-                    else F.lit(None).cast("string")
-                ),
-            )
-            # MetadataFiltersStage (before the metadata checksum in
-            # stage order) over the header fields + reference
-            mf = (
-                filters_reject_col(cfg.metadata_filters)
-                if cfg.metadata_filters
-                else F.lit(False)
-            )
-            hj = hj.withColumn(
-                "meta_filtered", mf & (F.col("h_status") == 200)
-            ).drop("last_modified", "etag")
-            if head_mode:
-                if self.baseline is not None:
-                    base_meta = self.baseline.select(
-                        "url", F.col("meta_ck").alias("base_meta_head")
-                    )
-                    hj = hj.join(base_meta, "url", "left")
-                    unmod_cond = (
-                        F.col("base_meta_head").isNotNull()
-                        & (F.col("meta_ck") == F.col("base_meta_head"))
-                    )
-                else:
-                    hj = hj.withColumn(
-                        "base_meta_head", F.lit(None).cast("string")
-                    )
-                    unmod_cond = F.lit(False)
-                hj = hj.withColumn(
-                    "head_unmod",
-                    (F.col("h_status") == 200)
-                    & ~F.col("meta_filtered")
-                    & unmod_cond,
+        hj = sched.join(self.headers, "url", "left").withColumn(
+            "meta_ck",
+            (
+                meta_checksum_col(
+                    cfg.metadata_checksummer,
+                    cfg.metadata_checksum_fields,
                 )
-                head_skip = F.col("meta_filtered") | F.col("head_unmod")
-                head_rows_src = hj.filter(head_skip).drop("base_meta_head")
-                sched = hj.filter(~head_skip).drop(
-                    "base_meta_head", "h_status", "head_unmod"
-                )
-            else:
-                sched = hj.drop("h_status")
-
-        parsed = (
-            self._fetch_parse(sched)
-            .withColumn("premature", F.lit(False))
-            .withColumn("head_unmod", F.lit(False))
+                if cfg.metadata_checksummer is not None
+                else F.lit(None).cast("string")
+            ),
         )
-        if not meta_band:
+        # MetadataFiltersStage (before the metadata checksum in stage
+        # order) over the header fields + reference
+        mf = (
+            filters_reject_col(cfg.metadata_filters)
+            if cfg.metadata_filters
+            else F.lit(False)
+        )
+        hj = hj.withColumn(
+            "meta_filtered", mf & (F.col("h_status") == 200)
+        ).drop("last_modified", "etag")
+        if not self._head_mode:
+            return hj.drop("h_status"), None
+        if self.baseline is not None:
+            base_meta = self.baseline.select(
+                "url", F.col("meta_ck").alias("base_meta_head")
+            )
+            hj = hj.join(base_meta, "url", "left")
+            unmod_cond = F.col("base_meta_head").isNotNull() & (
+                F.col("meta_ck") == F.col("base_meta_head")
+            )
+        else:
+            hj = hj.withColumn("base_meta_head", F.lit(None).cast("string"))
+            unmod_cond = F.lit(False)
+        hj = hj.withColumn(
+            "head_unmod",
+            (F.col("h_status") == 200) & ~F.col("meta_filtered") & unmod_cond,
+        )
+        head_skip = F.col("meta_filtered") | F.col("head_unmod")
+        head = _skip_fetch_rows(
+            hj.filter(head_skip).drop("base_meta_head"),
+            batch.columns,
+            sched_ms=F.col("sched_ms"),
+            http_status=F.lit(200),
+            head_unmod=F.col("head_unmod"),
+            meta_ck=F.col("meta_ck"),
+            meta_filtered=F.col("meta_filtered"),
+        )
+        sched = hj.filter(~head_skip).drop(
+            "base_meta_head", "h_status", "head_unmod"
+        )
+        return sched, head
+
+    def _fetch_parse(
+        self,
+        sched: DataFrame,
+        head: DataFrame | None,
+        prem: DataFrame | None,
+    ) -> DataFrame:
+        """Stage 3: fetch + parse the scheduled rows, add the rows that
+        skip the fetch (HEAD-skipped and PREMATURE, already in this
+        pass's shape), and drop out-of-scope links.
+
+        With a fetcher, its generator form and the parse transformer run
+        as ONE mapInPandas: bodies are fetched and parsed in the same
+        Python worker pass and only the distilled parse fields
+        (canonical/robots-meta/checksum/links) return to the JVM.
+        Without one, the ``pages`` table (MockWebsite analog) is joined
+        and the parse pass follows (html crosses once, then is
+        dropped)."""
+        parse = self._parse
+        parse_names = {f.name for f in PARSE_FIELDS.fields}
+        fetch_cols = {"html", "http_status", "redirect_to", "link_header",
+                      "x_robots"}
+        out_schema = T.StructType(
+            [
+                f
+                for f in sched.schema.fields
+                if f.name not in fetch_cols and f.name not in parse_names
+            ]
+            + [
+                T.StructField("http_status", T.IntegerType()),
+                T.StructField("redirect_to", T.StringType()),
+            ]
+            + list(PARSE_FIELDS.fields)
+        )
+        if self.fetcher is None:
+            fetched = sched.join(self.pages, "url", "left")
+            parsed = fetched.mapInPandas(parse, schema=out_schema)
+        else:
+            fetch = self.fetcher.batches
+
+            def fetch_and_parse(batches):
+                return parse(fetch(batches))
+
+            parsed = sched.mapInPandas(fetch_and_parse, schema=out_schema)
+        parsed = parsed.withColumn("premature", F.lit(False)).withColumn(
+            "head_unmod", F.lit(False)
+        )
+        if self.headers is None:
             parsed = parsed.withColumn(
                 "meta_ck", F.lit(None).cast("string")
             ).withColumn("meta_filtered", F.lit(False))
-        if head_rows_src is not None:
-            parsed = parsed.unionByName(
-                _skip_fetch_rows(
-                    head_rows_src,
-                    batch.columns,
-                    sched_ms=F.col("sched_ms"),
-                    http_status=F.lit(200),
-                    head_unmod=F.col("head_unmod"),
-                    meta_ck=F.col("meta_ck"),
-                    meta_filtered=F.col("meta_filtered"),
-                )
-            )
-        if prem is not None:
-            base_meta_prem = (
-                F.col("base_meta_prem")
-                if "base_meta_prem" in prem.columns
-                else F.lit(None).cast("string")
-            )
-            # sitemap directives: this run's enqueue-time values when
-            # present (fresh sitemap resolution), else the cached ones
-            prem_cols = [
-                F.coalesce(F.col(c), F.col(f"base_{c}")).alias(c)
-                if c in ("sm_lastmod", "sm_changefreq")
-                else F.col(c)
-                for c in batch.columns
-            ]
-            parsed = parsed.unionByName(
-                _skip_fetch_rows(
-                    prem,
-                    prem_cols,
-                    sched_ms=F.col("base_sched"),
-                    checksum=F.col("base_ck_prem"),
-                    premature=F.lit(True),
-                    meta_ck=base_meta_prem,
-                )
-            )
+        for skipped in (head, prem):
+            if skipped is not None:
+                parsed = parsed.unionByName(skipped)
+        return self._scope_links(parsed)
 
-        # stay-on-domain/protocol vs the referring page: out-of-scope
-        # links are dropped at extraction, before the queue pipeline
-        # (LinkExtractorStage.java:118-123; GenericUrlScopeResolver)
+    def _scope_links(self, parsed: DataFrame) -> DataFrame:
+        """Stay-on-domain/protocol/port/sitemap vs the referring page:
+        out-of-scope links are dropped at extraction, before the queue
+        pipeline (LinkExtractorStage.java:118-123;
+        GenericUrlScopeResolver). ``links_all_n`` keeps the unfiltered
+        count for the URLS_EXTRACTED metric."""
+        cfg = self.cfg
         parsed = parsed.withColumn("links_all_n", F.size("links"))
         scope_sitemap = (
             cfg.stay_on_sitemap
             and cfg.use_sitemaps
             and self.sitemaps is not None
         )
+        if not (
+            cfg.stay_on_domain
+            or cfg.stay_on_protocol
+            or cfg.stay_on_port
+            or scope_sitemap
+        ):
+            return parsed
         if scope_sitemap:
             # sitemapPresence == PRESENT for the referring site
             # (GenericUrlScopeResolver.java:121-127, siteHasSitemap):
@@ -1625,60 +1677,57 @@ class CrawlEngine:
                 "__has_sm", F.lit(True)
             )
             parsed = parsed.join(presence, "host", "left")
-        if (
-            cfg.stay_on_domain
-            or cfg.stay_on_protocol
-            or cfg.stay_on_port
-            or scope_sitemap
-        ):
-            ref_host = F.col("host")
-            ref_proto = F.lower(F.parse_url(F.col("url"), F.lit("PROTOCOL")))
+        ref_host = F.col("host")
+        ref_proto = F.lower(F.parse_url(F.col("url"), F.lit("PROTOCOL")))
 
-            def _res_port(ucol, proto):
-                auth = F.parse_url(ucol, F.lit("AUTHORITY"))
-                port = F.regexp_extract(
-                    F.coalesce(auth, F.lit("")), r":(\d+)$", 1
-                )
-                return (
-                    F.when(port != "", port.cast("int"))
-                    .when(proto == "http", F.lit(80))
-                    .when(proto == "https", F.lit(443))
-                    .otherwise(F.lit(-1))
-                )
-
-            ref_port = _res_port(F.col("url"), ref_proto)
-
-            def _in_scope_url(ucol):
-                ok = F.lit(True)
-                lp = F.lower(F.parse_url(ucol, F.lit("PROTOCOL")))
-                if cfg.stay_on_protocol:
-                    ok = ok & (lp == ref_proto)
-                if cfg.stay_on_domain:
-                    lh = F.lower(F.parse_url(ucol, F.lit("HOST")))
-                    same = lh == ref_host
-                    if cfg.include_subdomains:
-                        same = same | lh.endswith(
-                            F.concat(F.lit("."), ref_host)
-                        )
-                    ok = ok & same
-                if cfg.stay_on_port:
-                    ok = ok & (_res_port(ucol, lp) == ref_port)
-                if scope_sitemap:
-                    # extracted links are never sitemap-listed records;
-                    # on a site with a present sitemap they all drop
-                    ok = ok & ~F.coalesce(F.col("__has_sm"), F.lit(False))
-                return ok
-
-            parsed = parsed.withColumn(
-                "links", F.filter("links", lambda l: _in_scope_url(l["url"]))
+        def _res_port(ucol, proto):
+            auth = F.parse_url(ucol, F.lit("AUTHORITY"))
+            port = F.regexp_extract(F.coalesce(auth, F.lit("")), r":(\d+)$", 1)
+            return (
+                F.when(port != "", port.cast("int"))
+                .when(proto == "http", F.lit(80))
+                .when(proto == "https", F.lit(443))
+                .otherwise(F.lit(-1))
             )
-            if cfg.post_import_links:
-                # same UrlScopeResolver pass per post-import URL
-                # (PostImportLinksStage.java:97-106)
-                parsed = parsed.withColumn(
-                    "post_links", F.filter("post_links", _in_scope_url)
-                )
 
+        ref_port = _res_port(F.col("url"), ref_proto)
+
+        def _in_scope_url(ucol):
+            ok = F.lit(True)
+            lp = F.lower(F.parse_url(ucol, F.lit("PROTOCOL")))
+            if cfg.stay_on_protocol:
+                ok = ok & (lp == ref_proto)
+            if cfg.stay_on_domain:
+                lh = F.lower(F.parse_url(ucol, F.lit("HOST")))
+                same = lh == ref_host
+                if cfg.include_subdomains:
+                    same = same | lh.endswith(F.concat(F.lit("."), ref_host))
+                ok = ok & same
+            if cfg.stay_on_port:
+                ok = ok & (_res_port(ucol, lp) == ref_port)
+            if scope_sitemap:
+                # extracted links are never sitemap-listed records;
+                # on a site with a present sitemap they all drop
+                ok = ok & ~F.coalesce(F.col("__has_sm"), F.lit(False))
+            return ok
+
+        parsed = parsed.withColumn(
+            "links", F.filter("links", lambda l: _in_scope_url(l["url"]))
+        )
+        if cfg.post_import_links:
+            # same UrlScopeResolver pass per post-import URL
+            # (PostImportLinksStage.java:97-106)
+            parsed = parsed.withColumn(
+                "post_links", F.filter("post_links", _in_scope_url)
+            )
+        return parsed
+
+    def _outcomes(self, parsed: DataFrame) -> DataFrame:
+        """Stage 4: the outcome ladder over the fetched and skipped rows
+        — baseline delta, metadata and content first-wins dedup,
+        spoiled strategy, then one CASE per row — materialized as the
+        parse checkpoint that every later stage and the commit read."""
+        cfg = self.cfg
         is200 = F.col("http_status") == 200
         noncanon = (
             is200
@@ -1721,7 +1770,7 @@ class CrawlEngine:
         # a meta-filtered row never reaches it.
         if cfg.metadata_checksummer is not None:
             meta_stage_ok = ~F.col("meta_filtered") & (
-                is200 if head_mode else (is200 & ~noncanon & ~noindex)
+                is200 if self._head_mode else committable
             )
         else:
             meta_stage_ok = F.lit(False)
@@ -1766,7 +1815,7 @@ class CrawlEngine:
         parsed = parsed.withColumn(
             "meta_tracked", meta_eligible & ~F.col("meta_dup")
         )
-        if head_mode:
+        if self._head_mode:
             # a meta-duplicate is rejected BEFORE the GET in HEAD mode:
             # its body is never fetched, so no links may spawn (the
             # fixture join did parse it — a real two-phase fetcher
@@ -1778,22 +1827,19 @@ class CrawlEngine:
                 )).otherwise(F.col("links")),
             )
 
-        unmod = (
-            F.col("base_ck").isNotNull()
-            & (F.col("base_ck") == F.col("checksum"))
-        ) | F.col("meta_unmod")
+        content_unmod = F.col("base_ck").isNotNull() & (
+            F.col("base_ck") == F.col("checksum")
+        )
+        unmod = content_unmod | F.col("meta_unmod")
 
         # importer-stage FILTERED verdicts: metadata filters (position
         # depends on the fetch directive), document filters (after the
         # meta stages, before the document checksum)
         meta_filtered_here = F.col("meta_filtered") & (
-            F.lit(True) if head_mode else (is200 & ~noncanon & ~noindex)
+            F.lit(True) if self._head_mode else committable
         )
         doc_filtered_here = (
-            F.coalesce(F.col("doc_filtered"), F.lit(False))
-            & is200
-            & ~noncanon
-            & ~noindex
+            F.coalesce(F.col("doc_filtered"), F.lit(False)) & committable
         )
 
         # first-reference-wins content dedup (DedupService.java:88-99):
@@ -1830,10 +1876,6 @@ class CrawlEngine:
             ).otherwise(F.lit(None)),
         )
         parsed = parsed.join(self._checksum_registry(), "checksum", "left")
-
-        content_unmod = F.col("base_ck").isNotNull() & (
-            F.col("base_ck") == F.col("checksum")
-        )
 
         # spoiled strategy (GenericSpoiledReferenceStrategizer.java:69):
         # DELETE drops the committed doc now; GRACE_ONCE only when the
@@ -1872,9 +1914,9 @@ class CrawlEngine:
             .when(F.col("http_status") >= 500, "BAD_STATUS")
             .when(is_redirect, "REDIRECT")
             # HEAD mode: the metadata stages precede the body stages
-            .when(F.lit(head_mode) & meta_filtered_here, "FILTERED")
-            .when(F.lit(head_mode) & F.col("meta_unmod"), "UNMODIFIED")
-            .when(F.lit(head_mode) & F.col("meta_dup"), "DUPLICATE")
+            .when(F.lit(self._head_mode) & meta_filtered_here, "FILTERED")
+            .when(F.lit(self._head_mode) & F.col("meta_unmod"), "UNMODIFIED")
+            .when(F.lit(self._head_mode) & F.col("meta_dup"), "DUPLICATE")
             .when(noncanon, "NONCANONICAL")
             .when(noindex, "NOINDEX")
             .when(meta_filtered_here, "FILTERED")
@@ -1934,30 +1976,21 @@ class CrawlEngine:
         # as the first cache-filling action did, but leaves ~10 later
         # actions optimizing a one-node plan. Same pattern the frontier
         # and ledger hand-offs already use.
-        parsed = parsed.localCheckpoint(eager=True)
-        tick("parse_ckpt")
+        return parsed.localCheckpoint(eager=True)
 
-        # ---- outputs of this level ----
-        processed = parsed.select(
-            "url",
-            "seen_key",
-            "host",
-            "depth",
-            "seq",
-            "parent_seq",
-            "avail_ms",
-            "sched_ms",
-            F.lit("PROCESSED").alias("status"),
-            "outcome",
-            F.col("http_status").cast("int").alias("http_status"),
-            "checksum",
-            "meta_ck",
-            "meta_tracked",
-            "sm_lastmod",
-            "sm_changefreq",
-            "trail",
-            "raw_variants",
-            F.lit(self.superstep).cast("int").alias("superstep"),
+    def _level_outputs(
+        self, parsed: DataFrame
+    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame | None]:
+        """Stage 5: from the parse checkpoint, the level's PROCESSED
+        ledger rows, its document ops, the next level's candidates, and
+        the redirect targets requeued past the queue pipeline (None
+        unless ``redirect_requeue``)."""
+        cfg = self.cfg
+        processed = _ledger_rows(
+            parsed,
+            status=F.lit("PROCESSED"),
+            http_status=F.col("http_status").cast("int"),
+            superstep=F.lit(self.superstep).cast("int"),
         )
 
         committed = parsed.filter(
@@ -1985,36 +2018,28 @@ class CrawlEngine:
                 _delete_ops(parsed.filter(F.col("spoiled_del")))
             )
 
-        # ---- next-level candidates ----
-        # the redirect/canonical/post branches carry a few % of the
-        # level's rows but, unioned, every downstream Arrow UDF node
-        # is pushed into each branch — coalesce them (narrow, no
+        # redirect/canonical targets and post-import links carry a few
+        # % of the level's rows but, unioned, every downstream Arrow UDF
+        # node is pushed into each branch — coalesce them (narrow, no
         # shuffle) so ~empty branches don't each spawn a full wave of
         # tasks paying the fixed per-task Python round-trip. Ordering
         # is unaffected: the queue pipeline sorts by explicit keys.
         n_slim = max(1, self._n_part(self.queued_remaining) // 16)
-        redirects = parsed.filter(
-            (F.col("outcome") == "REDIRECT")
-            & (F.size("trail") < cfg.max_redirect_trail)
-            & F.col("redirect_to").isNotNull()
-        ).coalesce(n_slim).select(
-            F.col("redirect_to").alias("raw_url"),
-            "depth",
-            F.col("sched_ms").alias("avail_ms"),
-            F.concat(F.col("trail"), F.array(F.col("url"))).alias("trail"),
-            F.col("seq").alias("parent_seq"),
-            F.lit(0).alias("out_pos"),
-        )
-        canonicals = parsed.filter(
-            (F.col("outcome") == "NONCANONICAL")
-            & ~F.array_contains(F.col("trail"), F.col("canonical"))
-        ).coalesce(n_slim).select(
-            F.col("canonical").alias("raw_url"),
-            "depth",
-            F.col("sched_ms").alias("avail_ms"),
-            F.concat(F.col("trail"), F.array(F.col("url"))).alias("trail"),
-            F.col("seq").alias("parent_seq"),
-            F.lit(0).alias("out_pos"),
+        redirect = F.col("outcome") == "REDIRECT"
+        targets = (
+            parsed.filter(_target_col(cfg))
+            .coalesce(n_slim)
+            .select(
+                F.when(redirect, F.col("redirect_to"))
+                .otherwise(F.col("canonical"))
+                .alias("raw_url"),
+                "depth",
+                F.col("sched_ms").alias("avail_ms"),
+                F.concat(F.col("trail"), F.array(F.col("url"))).alias("trail"),
+                F.col("seq").alias("parent_seq"),
+                F.lit(0).alias("out_pos"),
+                redirect.alias("__redirect"),
+            )
         )
         links = (
             parsed.filter(F.col("links").isNotNull())
@@ -2033,7 +2058,7 @@ class CrawlEngine:
                 F.col("l.pos").alias("out_pos"),
             )
         )
-        cand = redirects.unionByName(canonicals).unionByName(links)
+        cand = targets.drop("__redirect").unionByName(links)
         if cfg.post_import_links:
             # PostImportLinksStage: committer-phase queueing — only docs
             # that reached the committer spawn these; out_pos places
@@ -2061,84 +2086,93 @@ class CrawlEngine:
                 )
             )
             cand = cand.unionByName(post)
-
-        # redirect one-requeue rule (WebImporterPipelineUtil.java:
-        # 103-160): a redirect target already PROCESSED with a bad
-        # outcome and not in the current trail is queued once more via
-        # requeueEntry — BYPASSING the queue pipeline (so it skips the
-        # URL-seen anti-join and filters). The sequential ledger lookup
-        # is reproduced by the event stream: latest event before the
-        # redirecting source's own turn decides the target's state.
-        # _events() is the compact bad-target state (all historical
-        # turns < any live parent_seq by seq monotonicity), so only
-        # current-level PROCESSED events need the turn comparison.
-        requeue_eval = None
+        requeue = None
         if cfg.redirect_requeue:
-            from ..functions.checksums import GOOD_OUTCOMES
+            redirects = targets.filter(F.col("__redirect")).drop("__redirect")
+            requeue = self._requeue_redirects(parsed, redirects)
+        return processed, docs, cand, requeue
 
-            rq = redirects.withColumn(
-                "url", self._norm_udf(F.col("raw_url"))
-            ).filter(F.col("url").isNotNull())
-            cur_ev = parsed.select(
-                "url",
-                F.col("seq").alias("turn"),
-                F.lit("PROCESSED").alias("kind"),
-                F.col("outcome").alias("ev_outcome"),
-            )
-            ev = self._events().unionByName(cur_ev)
-            j = rq.join(ev, "url", "inner").filter(
-                F.col("turn") < F.col("parent_seq")
-            )
-            last = j.groupBy("url", "parent_seq").agg(
-                F.first("depth").alias("depth"),
-                F.first("avail_ms").alias("avail_ms"),
-                F.first("trail").alias("trail"),
-                F.first("out_pos").alias("out_pos"),
-                F.first("raw_url").alias("raw_url"),
-                F.max_by(
-                    F.struct(F.col("kind"), F.col("ev_outcome")),
-                    F.col("turn"),
-                ).alias("last"),
-            )
-            matched = last.filter(
-                (F.col("last.kind") == "PROCESSED")
-                & ~F.coalesce(
-                    F.col("last.ev_outcome").isin(*GOOD_OUTCOMES),
-                    F.lit(False),
-                )
-                & ~F.array_contains(F.col("trail"), F.col("url"))
-            )
-            requeue_eval = matched.select(
-                "url",
-                F.xxhash64(F.col("url")).alias("seen_key"),
-                url_host_col(F.col("url")).alias("host"),
-                "depth",
-                "avail_ms",
-                "trail",
-                "parent_seq",
-                "out_pos",
-                F.lit(0).alias("sub"),
-                F.lit(None).cast("string").alias("sm_lastmod"),
-                F.lit(None).cast("string").alias("sm_changefreq"),
-                F.lit("QUEUED").alias("status"),
-                F.lit(None).cast("string").alias("outcome"),
-                *(
-                    [F.col("raw_url")]
-                    if cfg.record_url_variants
-                    else []
-                ),
-            )
+    def _requeue_redirects(
+        self, parsed: DataFrame, redirects: DataFrame
+    ) -> DataFrame:
+        """The redirect one-requeue rule (WebImporterPipelineUtil.java:
+        103-160): a redirect target already PROCESSED with a bad outcome
+        and not in the current trail is queued once more via
+        requeueEntry — BYPASSING the queue pipeline (so it skips the
+        URL-seen anti-join and filters); the rows come out already
+        evaluated. The sequential ledger lookup is reproduced by the
+        event stream: the latest event before the redirecting source's
+        own turn decides the target's state. _events() is the compact
+        bad-target state (all historical turns < any live parent_seq by
+        seq monotonicity), so only current-level PROCESSED events need
+        the turn comparison."""
+        from ..functions.checksums import GOOD_OUTCOMES
 
-        # ---- queue pipeline FIRST: its count action materializes the
-        # whole superstep (politeness/fetch/parse cache + candidate
-        # lineage) as ONE job with no barrier between parse and queue
-        # stages. Partition sizing uses the previous superstep's
-        # branching ratio (an estimate is fine — it only shapes the
-        # physical plan); exact candidate counts come from the metrics
-        # aggregation right after, which now reads the warm cache. A
+        rq = redirects.withColumn(
+            "url", self._norm_udf(F.col("raw_url"))
+        ).filter(F.col("url").isNotNull())
+        cur_ev = parsed.select(
+            "url",
+            F.col("seq").alias("turn"),
+            F.lit("PROCESSED").alias("kind"),
+            F.col("outcome").alias("ev_outcome"),
+        )
+        ev = self._events().unionByName(cur_ev)
+        j = rq.join(ev, "url", "inner").filter(
+            F.col("turn") < F.col("parent_seq")
+        )
+        last = j.groupBy("url", "parent_seq").agg(
+            F.first("depth").alias("depth"),
+            F.first("avail_ms").alias("avail_ms"),
+            F.first("trail").alias("trail"),
+            F.first("out_pos").alias("out_pos"),
+            F.first("raw_url").alias("raw_url"),
+            F.max_by(
+                F.struct(F.col("kind"), F.col("ev_outcome")),
+                F.col("turn"),
+            ).alias("last"),
+        )
+        matched = last.filter(
+            (F.col("last.kind") == "PROCESSED")
+            & ~F.coalesce(
+                F.col("last.ev_outcome").isin(*GOOD_OUTCOMES),
+                F.lit(False),
+            )
+            & ~F.array_contains(F.col("trail"), F.col("url"))
+        )
+        return matched.select(
+            "url",
+            F.xxhash64(F.col("url")).alias("seen_key"),
+            url_host_col(F.col("url")).alias("host"),
+            "depth",
+            "avail_ms",
+            "trail",
+            "parent_seq",
+            "out_pos",
+            F.lit(0).alias("sub"),
+            F.lit(None).cast("string").alias("sm_lastmod"),
+            F.lit(None).cast("string").alias("sm_changefreq"),
+            F.lit("QUEUED").alias("status"),
+            F.lit(None).cast("string").alias("outcome"),
+            *([F.col("raw_url")] if self.cfg.record_url_variants else []),
+        )
+
+    def _queue_level(
+        self, parsed: DataFrame, cand: DataFrame, requeue: DataFrame | None
+    ) -> tuple[_Queued, dict]:
+        """Stage 6: the queue pipeline over the level's candidates, then
+        the level's ONE action — its queue-status counts and the parse
+        checkpoint's per-outcome metrics in a single merged collect.
+        Both inputs are checkpoints by then, so the collect runs two
+        one-node plans. Returns the queue result and the level's
+        metrics."""
+        cfg = self.cfg
+        # the pipeline's shuffles are sized from the previous level's
+        # branching ratio (an estimate only shapes the physical plan;
+        # the metrics use the exact count from the collect below). A
         # level at max_depth extracts no links (parse kernel), so its
         # candidates are only redirect/canonical/post-import targets —
-        # at most about one per row. ----
+        # at most about one per row.
         leaf = (
             self._frontier_min_depth is not None
             and self._frontier_min_depth >= cfg.max_depth >= 0
@@ -2147,102 +2181,41 @@ class CrawlEngine:
             1,
             int(self.queued_remaining * (1.0 if leaf else self._branch_est)),
         )
-        new_rows, counts_df, qp_cleanup = self._queue_pipeline(
-            cand,
-            self._ledger_keys(),
-            n_est,
-            collect=False,
-            extra_evaluated=requeue_eval,
-        )
-
-        # ---- ONE action materializes the whole superstep AND returns
-        # both metric aggregations: the queue-status counts and the
-        # per-outcome level metrics, unioned with a tag column ----
-        agg_df = (
-            parsed.groupBy("outcome")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.coalesce(F.size("links"), F.lit(0))).alias("n_links"),
-                F.sum(F.coalesce(F.col("links_all_n"), F.lit(0))).alias(
-                    "n_links_all"
-                ),
-                F.sum(
-                    F.when(
-                        F.size("trail") >= cfg.max_redirect_trail, 1
-                    ).otherwise(0)
-                ).alias("n_loops"),
-                F.sum(
-                    F.when(
-                        (F.size("trail") < cfg.max_redirect_trail)
-                        & F.col("redirect_to").isNotNull(),
-                        1,
-                    ).otherwise(0)
-                ).alias("n_redir_enq"),
-                F.sum(
-                    F.when(
-                        ~F.coalesce(
-                            F.array_contains(F.col("trail"), F.col("canonical")),
-                            F.lit(False),
-                        ),
-                        1,
-                    ).otherwise(0)
-                ).alias("n_canon_enq"),
-                F.sum(
-                    F.when(F.col("base_ck").isNotNull(), 1).otherwise(0)
-                ).alias("n_had_baseline"),
-                F.sum(
-                    F.when(F.col("spoiled_del"), 1).otherwise(0)
-                ).alias("n_spoiled_del"),
-                F.max("sched_ms").alias("max_sched"),
-                F.sum(
-                    F.coalesce(F.size("post_links"), F.lit(0))
-                ).alias("n_post"),
-            )
-        )
-        merged = agg_df.withColumn("__src", F.lit("agg")).unionByName(
-            counts_df.withColumnRenamed("count", "qp_count").withColumn(
-                "__src", F.lit("queue")
+        q = self._queue_pipeline(cand, n_est, extra_evaluated=requeue)
+        agg_df = parsed.groupBy("outcome").agg(
+            F.count("*").alias("n"),
+            F.sum(F.coalesce(F.size("links"), F.lit(0))).alias("n_links"),
+            F.sum(F.coalesce(F.col("links_all_n"), F.lit(0))).alias(
+                "n_links_all"
             ),
-            allowMissingColumns=True,
+            F.sum(
+                F.when(F.size("trail") >= cfg.max_redirect_trail, 1).otherwise(0)
+            ).alias("n_loops"),
+            F.sum(F.when(_target_col(cfg), 1).otherwise(0)).alias(
+                "n_targets"
+            ),
+            F.sum(F.when(F.col("spoiled_del"), 1).otherwise(0)).alias(
+                "n_spoiled_del"
+            ),
+            F.max("sched_ms").alias("max_sched"),
+            F.sum(F.coalesce(F.size("post_links"), F.lit(0))).alias("n_post"),
         )
-        rows = merged.collect()
-        agg_rows = [r for r in rows if r["__src"] == "agg"]
-        q_rows = [r for r in rows if r["__src"] == "queue"]
-        by_status = {
-            (r["status"], r["outcome"]): r["qp_count"] for r in q_rows
-        }
-        qstats = self._queue_stats(by_status, n_est, q_rows)
-        qp_cleanup()
-        tick("parse+agg+queue")
+        # the queue counts are the rows with a (never null) status
+        rows = agg_df.unionByName(q.counts, allowMissingColumns=True).collect()
+        agg_rows = [r for r in rows if r["status"] is None]
+        q_rows = [r for r in rows if r["status"] is not None]
         out_counts = {r["outcome"]: r["n"] for r in agg_rows}
-        n_links = sum(r["n_links"] for r in agg_rows)
-        n_links_all = sum(r["n_links_all"] for r in agg_rows)
-        redirect_loops = sum(
-            r["n_loops"] for r in agg_rows if r["outcome"] == "REDIRECT"
-        )
+        n_links = int(sum(r["n_links"] for r in agg_rows))
+        n_links_all = int(sum(r["n_links_all"] for r in agg_rows))
         n_post = sum(
             int(r["n_post"])
             for r in agg_rows
             if r["outcome"] in ("NEW", "MODIFIED")
         )
-        n_cand = int(n_links) + n_post
-        for r in agg_rows:
-            if r["outcome"] == "REDIRECT":
-                n_cand += int(r["n_redir_enq"])
-            elif r["outcome"] == "NONCANONICAL":
-                n_cand += int(r["n_canon_enq"])
-        # patch the estimate-based candidate stats with exact counts
-        n_new = (
-            qstats["DOCUMENT_QUEUED"]
-            + qstats["REJECTED_TOO_DEEP"]
-            + qstats["REJECTED_FILTER"]
-            + qstats["REJECTED_ROBOTS_TXT"]
-        )
-        n_cand += qstats.get("SITEMAP_URLS", 0)
-        qstats["CANDIDATES"] = n_cand
-        qstats["DUPLICATE_OR_BAD_SKIPPED"] = n_cand - n_new
-        fetched_n = sum(r["n"] for r in agg_rows)
-        self._branch_est = max(1.0, n_cand / max(1, fetched_n))
+        n_cand = n_links + n_post + sum(int(r["n_targets"]) for r in agg_rows)
+        stats = self._queue_stats(q, q_rows, n_cand)
+        fetched_n = sum(out_counts.values())
+        self._branch_est = max(1.0, stats["CANDIDATES"] / max(1, fetched_n))
         self._max_sched_seen = max(
             [self._max_sched_seen]
             + [
@@ -2251,22 +2224,19 @@ class CrawlEngine:
                 if r["outcome"] != "PREMATURE" and r["max_sched"] is not None
             ]
         )
-
-        spoiled_deletes = (
-            sum(r["n_spoiled_del"] for r in agg_rows)
-            if cfg.spoiled_delete
-            else 0
-        )
         n_prem = out_counts.get("PREMATURE", 0)
-        stats = dict(qstats)
         stats.update(
             {
                 "REJECTED_PREMATURE": n_prem,
-                "DOCUMENT_FETCHED": sum(out_counts.values()) - n_prem,
+                "DOCUMENT_FETCHED": fetched_n - n_prem,
                 "DOCUMENT_COMMITTED_UPSERT": out_counts.get("NEW", 0)
                 + out_counts.get("MODIFIED", 0),
                 "REJECTED_UNMODIFIED": out_counts.get("UNMODIFIED", 0),
-                "DOCUMENT_COMMITTED_DELETE": spoiled_deletes,
+                "DOCUMENT_COMMITTED_DELETE": (
+                    sum(r["n_spoiled_del"] for r in agg_rows)
+                    if cfg.spoiled_delete
+                    else 0
+                ),
                 "REJECTED_NOTFOUND": out_counts.get("NOT_FOUND", 0),
                 "REJECTED_BAD_STATUS": out_counts.get("BAD_STATUS", 0),
                 "DOCUMENT_REDIRECTED": out_counts.get("REDIRECT", 0),
@@ -2274,30 +2244,22 @@ class CrawlEngine:
                 "REJECTED_NOINDEX": out_counts.get("NOINDEX", 0),
                 "REJECTED_FILTER_IMPORT": out_counts.get("FILTERED", 0),
                 "REJECTED_DUPLICATE": out_counts.get("DUPLICATE", 0),
-                "REJECTED_REDIRECT_LOOP": redirect_loops,
-                "URLS_EXTRACTED": int(n_links_all or 0),
-                "URLS_OUT_OF_SCOPE": int((n_links_all or 0) - (n_links or 0)),
+                "REJECTED_REDIRECT_LOOP": sum(
+                    r["n_loops"]
+                    for r in agg_rows
+                    if r["outcome"] == "REDIRECT"
+                ),
+                "URLS_EXTRACTED": n_links_all,
+                "URLS_OUT_OF_SCOPE": n_links_all - n_links,
                 "URLS_POST_IMPORTED": n_post,
             }
         )
-
-        st = StepStats(
-            superstep=self.superstep,
-            fetched=stats["DOCUMENT_FETCHED"],
-            committed=stats["DOCUMENT_COMMITTED_UPSERT"],
-            queued_new=stats["DOCUMENT_QUEUED"],
-            metrics=stats,
-        )
-        self._end_level(
-            new_rows, self._cur_part, stats, processed=processed, docs=docs
-        )
-        tick("end_level")
-        return st
+        return q, stats
 
     # -- ending a level -------------------------------------------------------
     def _end_level(
         self,
-        new_rows: DataFrame,
+        q: _Queued | None,
         part: str,
         stats: dict,
         *,
@@ -2308,25 +2270,30 @@ class CrawlEngine:
         the next superstep its inputs in memory, advance the counters,
         and submit the level's durable writes as ONE write-behind commit.
 
-        ``new_rows`` is the queue pipeline's output, an eager
-        localCheckpoint with exactly LEDGER_SCHEMA's columns; the key
-        fragment and the next frontier are lazy projections of it.
-        ``processed`` (a superstep's PROCESSED rows, a projection of
-        its parse checkpoint) feeds the checksum registries and the
-        host-state fold; ``docs`` are the level's document ops.
+        ``q`` is the level's queue-pipeline result (None: the level
+        queued nothing); its rows are an eager localCheckpoint with
+        exactly LEDGER_SCHEMA's columns, and the key fragment and the
+        next frontier are lazy projections of them. ``processed`` (a
+        superstep's PROCESSED rows, a projection of its parse
+        checkpoint) feeds the checksum registries and the host-state
+        fold; ``docs`` are the level's document ops.
 
         The next superstep depends only on in-memory state (frontier,
         host-state checkpoint, key/registry fragments, Bloom bitmap,
         driver counters). The level part, documents part, host-state
-        snapshot and manifest go to a single ordered committer thread:
-        a crash before a manifest lands replays that level identically
-        from the previous manifest (a crash before bootstrap's manifest
-        leaves nothing to resume, as before any commit). The commit
-        reads only checkpointed rows, so the background writes can
-        never re-run a fetch, and they are shuffle-free: the main
-        thread's per-level shuffle-partition changes cannot reach
-        them."""
+        snapshot, sitemap trigger hosts and manifest go to a single
+        ordered committer thread: a crash before a manifest lands
+        replays that level identically from the previous manifest (a
+        crash before bootstrap's manifest leaves nothing to resume, as
+        before any commit). The commit reads only checkpointed rows, so
+        the background writes can never re-run a fetch, and they are
+        shuffle-free: the main thread's per-level shuffle-partition
+        changes cannot reach them."""
         cfg = self.cfg
+        if q is None:
+            empty = self.spark.createDataFrame([], LEDGER_SCHEMA)
+            q = _Queued(empty, None, None, {})
+        new_rows = q.rows
         # registry snapshots and the host-state fold are independent
         # reads of the parse checkpoint: concurrent jobs on the pool
         ckpts = {}
@@ -2354,19 +2321,15 @@ class CrawlEngine:
                     .agg(F.max("last_sched_ms").alias("last_sched_ms"))
                 )
             ckpts["host_state"] = state
-            ckpts["registry"] = processed.filter(
-                F.col("outcome").isin("NEW", "MODIFIED")
-            ).select("checksum")
+            ckpts["registry"] = _registry_rows(processed)
             if cfg.metadata_dedup:
-                ckpts["meta_registry"] = processed.filter(
-                    F.col("meta_tracked")
-                ).select("meta_ck")
+                ckpts["meta_registry"] = _meta_registry_rows(processed)
         futs = {
             k: self._ckpt_pool.submit(df.localCheckpoint, True)
             for k, df in ckpts.items()
         }
         self._pinned.append(new_rows)
-        frag = new_rows.select("url", "seen_key")
+        frag = _key_rows(new_rows)
         if self._bloom_synced:
             # the bitmap isn't consulted again until the NEXT level's
             # queue pipeline — fold the new keys in on the pool and
@@ -2382,7 +2345,7 @@ class CrawlEngine:
             # compact bad-target state — O(level + |bad|). The plan is
             # built here; its checkpoint runs on the pool and lands at
             # the next read (_events / _resolve_bad_events).
-            merged = self._merge_bad_events(level.select(*_event_proj()))
+            merged = self._merge_bad_events(_event_rows(level))
             self._bad_ev_fut = self._ckpt_pool.submit(
                 merged.localCheckpoint, True
             )
@@ -2437,6 +2400,18 @@ class CrawlEngine:
                 self.documents.append(docs, part)
             if host_state is not None:
                 self.host_state.write(host_state, sid)
+            if q.sitemap_hosts is not None:
+                # durable sitemap resolved-state: the trigger-host
+                # definition (a host's first candidate REACHING the
+                # stage marks it resolved, even if its rows all die at
+                # dedup afterwards — the oracle's and
+                # GenericSitemapResolver.java's semantics) is not
+                # recoverable from committed ledger rows, so it gets its
+                # own tiny sidecar part per resolving level (the
+                # reference likewise persists its resolvedSites cache in
+                # the store). Resume reads these parts back; truncation
+                # follows the level parts'.
+                self.sitemap_hosts.append(q.sitemap_hosts, part)
             # a level without a host-state fold keeps the last snapshot
             ckpt_state["host_state_snapshot"] = self.host_state.latest_id()
             self._write_ckpt(ckpt_state)
@@ -2453,13 +2428,13 @@ class CrawlEngine:
         # land the last level's pool folds before the queue pipeline
         # changes session settings
         self.flush()
+        tick = _Tick(self.superstep)
         orphans = self.baseline.join(
             self._ledger_keys().select("url"), "url", "left_anti"
         ).cache()
         self._pinned.append(orphans)
         strategy = self.cfg.orphan_strategy
-        self._cur_part = f"{self.superstep:06d}"
-        new_rows = self.spark.createDataFrame([], LEDGER_SCHEMA)
+        q = None
         stats = {}
         docs = None
         if strategy == "PROCESS":
@@ -2472,7 +2447,8 @@ class CrawlEngine:
                 F.lit(0).alias("out_pos"),
             )
             n = orphans.count()
-            new_rows, stats = self._queue_pipeline(cand, self._ledger_keys(), n)
+            q = self._queue_pipeline(cand, n)
+            stats = self._queue_stats(q, q.counts.collect(), n)
             stats["ORPHANS_REQUEUED"] = n
         elif strategy == "DELETE":
             # checkpointed: the write-behind commit must not read the
@@ -2482,7 +2458,9 @@ class CrawlEngine:
             ).localCheckpoint(eager=True)
             stats["DOCUMENT_COMMITTED_DELETE"] = docs.count()
         orphans.unpersist()
-        self._end_level(new_rows, self._cur_part, stats, docs=docs)
+        tick("orphans")
+        self._end_level(q, f"{self.superstep:06d}", stats, docs=docs)
+        tick("end_level")
 
     def run(self, max_supersteps: int = 10_000) -> list[StepStats]:
         out = []
@@ -2549,14 +2527,11 @@ class CrawlEngine:
         the report DataFrame ordered by fetch seq; when ``out_dir``
         is set also writes ``<prefix><last-part>`` CSV part files
         there (distributed write — no driver collect)."""
-        rows = (
-            self.levels.read()
-            .filter(
-                (F.col("status") == "PROCESSED")
-                & F.col("http_status").isNotNull()
-            )
-            .select("seq", "parent_seq", "url", "http_status")
-        )
+        self.flush()
+        ledger = self.levels.read()
+        rows = ledger.filter(
+            (F.col("status") == "PROCESSED") & F.col("http_status").isNotNull()
+        ).select("seq", "parent_seq", "url", "http_status")
         if status_codes:
             cond = None
             for tok in str(status_codes).split(","):
@@ -2578,14 +2553,9 @@ class CrawlEngine:
                 rows = rows.filter(cond)
         # a seq appears on both its QUEUED and PROCESSED ledger rows
         # with the same url — distinct() keeps the referrer join 1:1
-        parents = (
-            self.levels.read()
-            .select(
-                F.col("seq").alias("parent_seq"),
-                F.col("url").alias("referrer"),
-            )
-            .distinct()
-        )
+        parents = ledger.select(
+            F.col("seq").alias("parent_seq"), F.col("url").alias("referrer")
+        ).distinct()
         report = (
             rows.join(parents, "parent_seq", "left")
             .select(
@@ -2601,7 +2571,8 @@ class CrawlEngine:
                 "header", True
             ).csv(
                 os.path.join(
-                    out_dir, f"{file_name_prefix}{self._cur_part}"
+                    out_dir,
+                    f"{file_name_prefix}{self._frontier_part or '0-bootstrap'}",
                 )
             )
         return report

@@ -42,6 +42,8 @@ from typing import Callable, Optional
 
 import pandas as pd
 
+from .webgen import fetch_slot
+
 # (status, html, redirect_to) — the fetch-slot row contract shared with
 # webgen.fetch_batches and httpfetch.http_fetch_batches.
 FetchResult = tuple  # tuple[Optional[int], Optional[str], Optional[str]]
@@ -305,34 +307,13 @@ def browser_fetch_batches(
     return gen
 
 
-def _slot_from_batches(g):
-    """Wrap a fetch-batches generator as the engine's DataFrame-level
-    fetcher slot, carrying ``.batches`` for the fused path."""
-
-    def fetch(batch_df):
-        schema = (
-            batch_df.sparkSession.createDataFrame([], batch_df.schema)
-            .selectExpr(
-                "*",
-                "cast(null as int) http_status",
-                "cast(null as string) html",
-                "cast(null as string) redirect_to",
-            )
-            .schema
-        )
-        return batch_df.mapInPandas(g, schema=schema)
-
-    fetch.batches = g
-    return fetch
-
-
 def make_browser_fetcher(
     cfg: BrowserFetcherConfig | None = None,
     render_fn: Optional[RenderFn] = None,
 ):
     """Engine ``fetcher`` slot backed by a rendering browser (mirror of
     ``httpfetch.make_http_fetcher``)."""
-    return _slot_from_batches(browser_fetch_batches(cfg, render_fn))
+    return fetch_slot(browser_fetch_batches(cfg, render_fn))
 
 
 def chain_fetchers(fetchers: list) -> "Callable":
@@ -371,4 +352,4 @@ def chain_fetchers(fetchers: list) -> "Callable":
             out["redirect_to"] = [r[2] for r in res]
             yield out
 
-    return _slot_from_batches(gen)
+    return fetch_slot(gen)

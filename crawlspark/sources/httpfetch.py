@@ -38,7 +38,7 @@ from dataclasses import dataclass
 
 import pandas as pd
 
-from .webgen import TRANSIENT_STATUSES
+from .webgen import TRANSIENT_STATUSES, fetch_slot
 
 
 @dataclass(frozen=True)
@@ -240,26 +240,9 @@ def http_fetch_batches(cfg: HttpFetcherConfig | None = None):
 
 
 def make_http_fetcher(cfg: HttpFetcherConfig | None = None):
-    """Engine ``fetcher`` slot over real sockets (mirror of
-    ``webgen.make_fetcher``; carries ``.batches`` so the engine fuses
-    fetch+parse into a single mapInPandas pass)."""
-    g = http_fetch_batches(cfg)
-
-    def fetch(batch_df):
-        schema = (
-            batch_df.sparkSession.createDataFrame([], batch_df.schema)
-            .selectExpr(
-                "*",
-                "cast(null as int) http_status",
-                "cast(null as string) html",
-                "cast(null as string) redirect_to",
-            )
-            .schema
-        )
-        return batch_df.mapInPandas(g, schema=schema)
-
-    fetch.batches = g
-    return fetch
+    """Engine ``fetcher`` slot over real sockets (see
+    ``webgen.fetch_slot``)."""
+    return fetch_slot(http_fetch_batches(cfg))
 
 
 def fetch_robots_df(spark, roots_df, cfg: HttpFetcherConfig | None = None):

@@ -500,13 +500,13 @@ def fetch_batches(p: SiteParams, retries: int = 0):
     return gen
 
 
-def make_fetcher(p: SiteParams, retries: int = 0):
-    """Engine ``fetcher`` slot: batch DataFrame -> batch + response
-    columns via mapInPandas (one Arrow batch per politeness partition,
-    zero shuffle). Carries ``.batches`` — the generator form — which
-    the engine prefers so it can fuse fetch+parse into a single pass."""
-
-    g = fetch_batches(p, retries=retries)
+def fetch_slot(gen):
+    """Wrap a fetch-batches generator (pandas batches with ``url`` ->
+    the same batches + http_status/html/redirect_to) as the engine's
+    ``fetcher`` slot. The engine reads ``.batches`` and fuses it with
+    the parse pass into one mapInPandas; calling the slot on a batch
+    DataFrame runs the fetch alone (one Arrow batch per politeness
+    partition, zero shuffle)."""
 
     def fetch(batch_df):
         schema = (
@@ -519,10 +519,16 @@ def make_fetcher(p: SiteParams, retries: int = 0):
             )
             .schema
         )
-        return batch_df.mapInPandas(g, schema=schema)
+        return batch_df.mapInPandas(gen, schema=schema)
 
-    fetch.batches = g
+    fetch.batches = gen
     return fetch
+
+
+def make_fetcher(p: SiteParams, retries: int = 0):
+    """Engine ``fetcher`` slot over the synthetic site (see
+    ``fetch_slot``)."""
+    return fetch_slot(fetch_batches(p, retries=retries))
 
 
 # ---------------------------------------------------------------------------

@@ -255,3 +255,35 @@ def test_chain_routing_and_fallthrough():
 
     with pytest.raises(ValueError):
         chain_fetchers([])
+
+
+def test_engine_rejects_fetcher_without_batches(spark, tmp_path):
+    """The engine's fetch slot is the generator form: a DataFrame-only
+    transform is refused at construction, before any crawl work."""
+    from crawlspark.plans.superstep import CrawlEngine
+
+    robots = spark.createDataFrame([], "host string, body string")
+    with pytest.raises(ValueError, match="batches"):
+        CrawlEngine(
+            spark, str(tmp_path / "nobatches"), CrawlConfig(), None,
+            robots, fetcher=lambda df: df,
+        )
+
+
+def test_fetch_slot_dataframe_form_matches_batches(spark):
+    """``fetch_slot(gen)(df)`` runs the same generator as ``.batches``
+    (perfbench drives the DataFrame form directly)."""
+    import pandas as pd
+
+    chained = chain_fetchers(
+        [(lambda u: True, lambda u: (200, f"<p>{u}</p>", None))]
+    )
+    urls = ["http://x/a", "http://x/b"]
+    direct = list(chained.batches(iter([pd.DataFrame({"url": urls})])))[0]
+    via_df = (
+        chained(spark.createDataFrame([(u,) for u in urls], "url string"))
+        .orderBy("url")
+        .toPandas()
+    )
+    assert via_df["http_status"].tolist() == [200, 200]
+    assert via_df["html"].tolist() == direct["html"].tolist()

@@ -79,3 +79,28 @@ def test_status_code_range_filter_and_csv(crawled, tmp_path):
     assert list(csv.columns) == ["referrer", "url", "status"]
     with pytest.raises(ValueError, match="statusCodes"):
         eng.url_status_report(status_codes="abc")
+
+
+def test_report_sees_levels_whose_commit_is_still_pending(spark, tmp_path):
+    """The report flushes the write-behind committer first, like the
+    other ledger readers: right after bootstrap() and one step() on a
+    2-host site (no explicit flush) both fetched seeds are reported."""
+    site = build_site(
+        SiteParams(
+            seed=5, n_hosts=2, depth=2, branching=2,
+            error_pct=0.0, redirect_pct=0.0, n_seed_hosts=2,
+        )
+    )
+    eng = CrawlEngine(
+        spark,
+        str(tmp_path / "pending"),
+        CrawlConfig(max_depth=2, default_delay_ms=100),
+        spark.createDataFrame(site.pages),
+        spark.createDataFrame(site.robots),
+    )
+    seeds = [r["url"] for r in site.seeds.to_dict("records")]
+    assert len(seeds) == 2
+    eng.bootstrap(seeds)
+    assert eng.step().fetched == 2
+    assert eng.url_status_report().count() == 2
+    eng.flush()
