@@ -17,10 +17,11 @@ Canonical detection mirrors ``GenericCanonicalLinkDetector``
 mirrors ``StandardRobotsMetaProvider``
 (web/.../robot/impl/StandardRobotsMetaProvider.java:37-92).
 
-The extractor runs as an Arrow-batched pandas UDF over the ``html``
-column and returns ``array<struct<url,pos>>`` so the caller can
-``explode`` and keep discovery order (pos = in-document order, the
-FIFO tie-break for enqueued links).
+The extractors run inside the fused parse pass
+(``make_parse_transformer``) and return (url, pos) lists, read as
+``array<struct<url,pos>>`` so the caller can ``explode`` and keep
+discovery order (pos = in-document order, the FIFO tie-break for
+enqueued links).
 """
 
 from __future__ import annotations
@@ -243,34 +244,6 @@ LINKS_TYPE = T.ArrayType(
         ]
     )
 )
-
-
-@F.pandas_udf(LINKS_TYPE)
-def extract_links_udf(url: pd.Series, html: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_links(u, h) for u, h in zip(url, html)], dtype=object
-    )
-
-
-@F.pandas_udf(T.StringType())
-def extract_canonical_udf(url: pd.Series, html: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_canonical(u, h) for u, h in zip(url, html)], dtype=object
-    )
-
-
-_ROBOTS_META_TYPE = T.StructType(
-    [
-        T.StructField("noindex", T.BooleanType()),
-        T.StructField("nofollow", T.BooleanType()),
-    ]
-)
-
-
-@F.pandas_udf(_ROBOTS_META_TYPE)
-def robots_meta_udf(html: pd.Series) -> pd.DataFrame:
-    vals = [extract_robots_meta(h) for h in html]
-    return pd.DataFrame(vals, columns=["noindex", "nofollow"])
 
 
 PARSE_FIELDS = T.StructType(

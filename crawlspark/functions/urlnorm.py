@@ -30,10 +30,6 @@ from __future__ import annotations
 import re
 from typing import Callable, Iterable, Optional
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 from .urls import DEFAULT_PORTS, _pct_normalize, _SAFE_PATH, _SAFE_QUERY
 
 # scheme://authority | path | ?query | #fragment
@@ -531,25 +527,3 @@ def engine_normalizer(
         return v
 
     return normalize
-
-
-def custom_normalizer_udf(
-    normalizations: Iterable[str] = DEFAULT_NORMALIZATIONS,
-    replacements: Iterable[tuple] = (),
-    ip_resolver: Optional[Callable[[str], Optional[str]]] = None,
-):
-    """Arrow-vectorized UDF over the configured pipeline — the
-    UrlNormalizerStage slot when a config names its own op list.
-    (The unconfigured engine keeps functions/urls.py's fused default
-    pipeline with its fast-path regex.) ``ip_resolver`` must be
-    picklable — it ships to executors inside the UDF closure."""
-    fn = engine_normalizer(
-        tuple(normalizations), tuple(replacements), ip_resolver
-    )
-
-    @F.pandas_udf(T.StringType())
-    def udf(urls: pd.Series) -> pd.Series:
-        return urls.map(fn)
-
-    # same plan-shape marker as normalize_url_udf (see urls.py:225)
-    return udf.asNondeterministic()

@@ -246,15 +246,10 @@ def url_host_col(col):
     return F.nullif(h, F.lit(""))
 
 
-@F.pandas_udf(T.StringType())
-def url_root_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(url_root)
-
-
 def seen_key(col):
     """URL-seen key: xxhash64 of the canonical URL (JVM-side, no UDF).
 
-    The partitioned Bloom-filter prefilter and the exact anti-join both
+    The engine's driver Bloom prefilter and its exact anti-join both
     key on this (SURVEY.md §1.3; reference exact-key dedup at
     CrawlerEntryLedger.java:361).
     """

@@ -8,10 +8,11 @@ once, distributed, into a flat ``robots_rules`` dim table
 
 The per-host crawl delays are a dim derived from it (``host_delays``).
 Its (host, pattern, allow) rows are collected once per run and
-broadcast to ``make_robots_verdict_udf``, which filters candidates
-with the oracle's ``RobotsMatcher`` — longest match, where Disallow
-rejects unless a *strictly longer* Allow matches
-(RobotsTxtFiltersStage.java:88-103).
+broadcast to the per-URL judge (functions/judge.py), which rejects
+candidates with the oracle's ``RobotsMatcher`` inside the fetch+parse
+pass — longest match, where Disallow rejects unless a *strictly
+longer* Allow matches (RobotsTxtFiltersStage.java:88-103).
+``make_robots_verdict_udf`` is that verdict alone as a column UDF.
 """
 
 from __future__ import annotations
@@ -69,54 +70,30 @@ def host_delays(rules_df: DataFrame) -> DataFrame:
 
 
 def make_robots_verdict_udf(spark, rules_rows: list):
-    """Broadcast-dict longest-match verdict — a single projection,
-    zero shuffles, zero extra jobs per superstep.
+    """Broadcast-dict longest-match verdict as a pandas UDF over
+    (url, host) — the robots stage of the per-URL judge
+    (functions/judge.py) on its own, for measuring it apart.
 
     ``rules_rows``: collected (host, pattern, allow) triples from the
-    rules dim — collected ONCE per run; the per-host pattern lists are
-    broadcast and candidates match in a vectorized pandas UDF using
-    the *same* ``RobotsMatcher`` the pure-Python oracle uses (exact
-    parity by construction).
+    rules dim; the per-host rule lists are broadcast and each host's
+    ``RobotsMatcher`` is built through the judge's per-host helper.
+    A null host (or a host with no rules) is allowed.
     """
-    from ..functions.robots import RobotsMatcher, RobotsRules
+    from ..functions.judge import host_matchers, robots_target, rules_by_host
 
-    by_host: dict[str, list[tuple[str, bool]]] = {}
-    for host, pattern, allow in rules_rows:
-        if pattern is not None:
-            by_host.setdefault(host, []).append((pattern, bool(allow)))
-    b = spark.sparkContext.broadcast(by_host)
+    b = spark.sparkContext.broadcast(rules_by_host(rules_rows))
 
     @F.pandas_udf("boolean")
     def robots_ok(url: pd.Series, host: pd.Series) -> pd.Series:
-        """Vectorized by host group; null host (or a host with no
-        rules) short-circuits to True with zero per-row Python —
-        the caller masks out rows whose outcome is already decided
-        (TOO_DEEP/FILTERED precede robots in the stage ladder), so
-        only genuinely live candidates pay the pattern match."""
-        import numpy as np
-
-        rules_map = b.value
-        out = np.ones(len(url), dtype=bool)
-        if not len(url):
-            return pd.Series(out)
-        hs = host.to_numpy(dtype=object)
-        for h in pd.unique(host.dropna()):
-            rs = rules_map.get(h)
-            if not rs:
-                continue
-            m = RobotsMatcher(RobotsRules(rules=rs))
-            mask = hs == h
-            # canonical URLs: the match target (path[?query], no
-            # fragment) is everything after the authority; one
-            # C-speed regex strip instead of per-row urlsplit
-            targets = url[mask].str.replace(
-                r"^[a-z]+://[^/]*", "", n=1, regex=True
+        matcher = host_matchers(b.value)
+        out = []
+        for u, h in zip(url.tolist(), host.tolist()):
+            m = matcher(h) if isinstance(h, str) else None
+            out.append(
+                m is None
+                or m.allowed(robots_target(u) if isinstance(u, str) else "/")
             )
-            out[mask] = [
-                m.allowed(t if isinstance(t, str) and t else "/")
-                for t in targets
-            ]
-        return pd.Series(out)
+        return pd.Series(out, dtype=bool)
 
     # deterministic in fact; the marker keeps Catalyst from cloning
     # the Arrow node (fixed per-task Python round-trip) across

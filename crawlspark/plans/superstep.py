@@ -31,19 +31,24 @@ is a short list of stage methods, each taking and returning frames:
                     join + recrawl resolver) | the batch to fetch
   _schedule         per-host politeness recurrence (host-sorted
                     mapInPandas) + the metadata/HEAD band
-  _fetch_parse      fetcher.batches ∘ parse as ONE mapInPandas (or the
-                    ``pages``-table join for fixtures) ∪ the rows that
-                    skip the fetch, then the link-scope filter
+  _fetch_parse      judge ∘ parse ∘ fetcher.batches as ONE mapInPandas
+                    (or judge ∘ parse after the ``pages``-table join for
+                    fixtures) ∪ the rows that skip the fetch: links and
+                    redirect/canonical targets leave it scoped,
+                    normalized, host-keyed and judged (depth, filters,
+                    robots — functions/judge.py)
   _outcomes         baseline delta, metadata + checksum first-wins
                     windows, the CASE outcome ladder; ends in the parse
                     checkpoint
   _level_outputs    PROCESSED rows, document ops, next-level candidates
-                    (redirect/canonical targets ∪ explode(links)) and
-                    the redirect one-requeue rows
-  _queue_level      the queue pipeline (normalize → first-wins → driver
-                    Bloom prefilter + exact anti-join vs ledger →
-                    depth/filters/robots → dense seq) and ONE merged
-                    collect of its counts with the level's metrics
+                    (ONE explode of each row's judged redirect/canonical
+                    target, links and post-import links) and the
+                    redirect one-requeue rows
+  _queue_level      the queue pipeline (seeds/orphans/sitemap locs
+                    judged in one mapInPandas → driver Bloom prefilter +
+                    exact anti-join vs ledger → first-wins → dense seq)
+                    and ONE merged collect of its counts with the
+                    level's metrics
   _end_level        ONE write-behind commit per level (bootstrap,
                     superstep and orphan pass alike): level part +
                     documents part + host-state snapshot + sitemap
@@ -87,9 +92,10 @@ Scale/efficiency notes:
   clustering width: those shuffles carry highly-compressible slim rows
   that AQE would coalesce into one partition, serializing the Python
   stages downstream (politeness -> fetch -> parse).
-* Robots matching broadcasts the per-host rule lists once and applies
-  them in a zero-shuffle pandas UDF (same ``RobotsMatcher`` as the
-  oracle).
+* Robots matching broadcasts the per-host rule lists once; the judge
+  applies them inside the fetch+parse pass (same ``RobotsMatcher`` as
+  the oracle), so the queue pipeline of a step crosses into Python
+  only for the Bloom probe.
 * Host-keyed and baseline dimension joins carry no hints: the
   session's ``spark.sql.autoBroadcastJoinThreshold`` alone picks
   broadcast or shuffle join.
@@ -114,15 +120,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CrawlConfig
-from ..functions.links import PARSE_FIELDS, make_parse_transformer
-from ..functions.urls import normalize_url_udf, url_host_col
+from ..functions.judge import (
+    CANDIDATE,
+    JUDGED_FIELDS,
+    ROW_FIELDS,
+    UrlJudge,
+    rules_by_host,
+)
+from ..functions.links import make_parse_transformer
+from ..functions.urls import seen_key
 from ..operators.dedup import BloomPrefilter, assign_seq, first_wins
 from ..operators.politeness import schedule_hosts
-from ..operators.robots_filter import (
-    build_robots_rules,
-    host_delays,
-    make_robots_verdict_udf,
-)
+from ..operators.robots_filter import build_robots_rules, host_delays
 from ..sources.docgen import make_document_udf
 from .ledger import AppendTable, SnapshotTable
 
@@ -356,9 +365,11 @@ def _skip_fetch_rows(src: DataFrame, cols: list, **given) -> DataFrame:
         "noindex": F.lit(False),
         "nofollow": F.lit(False),
         "checksum": F.lit(None).cast("string"),
-        "links": F.lit(None).cast(PARSE_FIELDS["links"].dataType),
+        "links": F.lit(None).cast(JUDGED_FIELDS["links"].dataType),
         "doc_filtered": F.lit(False),
-        "post_links": F.lit(None).cast(PARSE_FIELDS["post_links"].dataType),
+        "post_links": F.lit(None).cast(JUDGED_FIELDS["post_links"].dataType),
+        "target": F.lit(None).cast(CANDIDATE),
+        "links_all_n": F.lit(None).cast("int"),
         "premature": F.lit(False),
         "head_unmod": F.lit(False),
         "meta_ck": F.lit(None).cast("string"),
@@ -458,34 +469,6 @@ class CrawlEngine:
         self.workdir = workdir
         self.cfg = cfg
         self.baseline = baseline_df.cache() if baseline_df is not None else None
-        # UrlNormalizerStage slot: the fused default pipeline unless
-        # the config names its own op list (GenericUrlNormalizer
-        # analog — functions/urlnorm.py; oracle builds the identical
-        # function from the same config)
-        norm_fn = None
-        if cfg.url_normalizations is None:
-            self._norm_udf = normalize_url_udf
-        else:
-            from ..functions.urlnorm import (
-                custom_normalizer_udf,
-                engine_normalizer,
-            )
-
-            norm_args = (
-                cfg.url_normalizations,
-                cfg.url_replacements,
-                cfg.url_ip_resolver,
-            )
-            self._norm_udf = custom_normalizer_udf(*norm_args)
-            norm_fn = engine_normalizer(*norm_args)
-        # the fetch+parse pass's parse half; link targets go through
-        # the same normalizer as the queue pipeline
-        self._parse = make_parse_transformer(
-            cfg.max_depth,
-            cfg.document_filters,
-            post_import=cfg.post_import_links,
-            normalizer=norm_fn,
-        )
         self._orphans_done = baseline_df is None
         os.makedirs(workdir, exist_ok=True)
         if fetcher is not None and not callable(
@@ -551,10 +534,10 @@ class CrawlEngine:
                 "etag",
             ).cache()
         self.rules = build_robots_rules(robots_df, cfg.user_agent).cache()
-        self._robots_udf = None
+        robots = None
         if cfg.honor_robots:
             rows = self.rules.select("host", "pattern", "allow").collect()
-            self._robots_udf = make_robots_verdict_udf(spark, rows)
+            robots = spark.sparkContext.broadcast(rules_by_host(rows))
         # cached after the collect has loaded the rules cache, so the
         # delay dim carries the rules' measured size and the politeness
         # join plans as a broadcast under the session threshold
@@ -580,7 +563,6 @@ class CrawlEngine:
         # — they carry the previous run's fetch time, not this clock's)
         self._max_sched_seen = 0
         self._frontier_part: str | None = None
-        self._ledger_rows = 0
         self.bloom = BloomPrefilter(cfg.bloom_bits)
         self._bloom_synced = False
         # links-per-fetched-doc ratio from the previous superstep; only
@@ -616,6 +598,20 @@ class CrawlEngine:
         # SitemapResolutionStage.java:94-110 compute-if-absent)
         self.sitemaps = (
             sitemaps_df.cache() if sitemaps_df is not None else None
+        )
+        # stay_on_sitemap: the dim lists exactly the hosts whose sitemap
+        # is present (GenericUrlScopeResolver.java:121-127)
+        sm_hosts = ()
+        if cfg.stay_on_sitemap and cfg.use_sitemaps and self.sitemaps is not None:
+            sm_hosts = [r[0] for r in self.sitemaps.select("host").distinct().collect()]
+        # parse normalizes canonical and post-import links through the
+        # judge's normalizer
+        self._judge = UrlJudge(cfg, robots, sm_hosts)
+        self._parse = make_parse_transformer(
+            cfg.max_depth,
+            cfg.document_filters,
+            post_import=cfg.post_import_links,
+            normalizer=self._judge.normalize,
         )
         # hosts whose sitemap resolution already ran (== hosts ever
         # QUEUED), kept as dataflow fragments like _key_parts — never a
@@ -926,7 +922,6 @@ class CrawlEngine:
         eng.queued_remaining = state["queued_remaining"]
         eng._orphans_done = state.get("orphans_done", eng.baseline is None)
         eng._frontier_part = state.get("frontier_part")
-        eng._ledger_rows = state.get("ledger_rows", 0)
         eng._branch_est = state.get("branch_est", 10.0)
         eng._frontier_min_depth = state.get("frontier_min_depth")
         eng._max_sched_seen = state.get("max_sched_seen", 0)
@@ -1086,8 +1081,8 @@ class CrawlEngine:
         # action (the merged metrics collect, the key fragment, the
         # level parquet write, the frontier filter, the bad-event
         # projection) still re-ANALYZES the full queue mega-plan —
-        # normalize UDF, URL-seen anti-join, robots verdict, first-wins
-        # window, seq assignment — a ~1s driver cost per action that is
+        # candidate explode, URL-seen anti-join, first-wins window, seq
+        # assignment — a ~1s driver cost per action that is
         # pure per-superstep floor (measured on the scaling site; the
         # same reason the parse checkpoint exists). One compile + one
         # execution here; every consumer then optimizes a one-node plan.
@@ -1108,30 +1103,27 @@ class CrawlEngine:
         n_cand: int,
         caches: list,
     ) -> DataFrame:
-        """Row-local queue-pipeline evaluation (stage order fixed at
-        WebDocPipelines.java:58-65): normalize → URL-seen anti-join →
-        depth/filters/robots → status/outcome columns. Ordering
-        (first-wins, seq) is the caller's job — all checks here are
-        order-independent, which is what lets sitemap locs evaluate
-        separately and merge by order key afterwards."""
+        """Judged candidates -> URL-seen anti-join -> status. Links and
+        redirect/canonical targets leave the fetch+parse pass judged;
+        the candidates with no parent page (seeds, orphans, sitemap
+        locs: ``raw_url`` but no ``url`` yet) are judged here, in one
+        mapInPandas. Ordering (first-wins, seq) is the caller's job —
+        all checks here are order-independent, which is what lets
+        sitemap locs evaluate separately and merge by order key
+        afterwards."""
         cfg = self.cfg
+        if "url" not in cand.columns:
+            cand = cand.mapInPandas(
+                self._judge.rows, T.StructType(cand.schema.fields + ROW_FIELDS)
+            )
         if "sub" not in cand.columns:
             cand = cand.withColumn("sub", F.lit(0))
         for c_ in ("sm_lastmod", "sm_changefreq"):
             if c_ not in cand.columns:
                 cand = cand.withColumn(c_, F.lit(None).cast("string"))
-        c = cand.withColumn("url", self._norm_udf(F.col("raw_url")))
-        if not cfg.record_url_variants:
-            c = c.drop("raw_url")  # else kept for the variants agg
-        c = c.filter(F.col("url").isNotNull())
-        c = c.withColumn("seen_key", F.xxhash64(F.col("url")))
-        # cache BEFORE the Bloom split: fresh ∪ maybe (and the
-        # robots-verdict join-back path) reference the candidate set
-        # twice — without this cache the normalize-UDF lineage
-        # re-executes up to 4x per superstep (seen in the event log as
-        # four identical wide stages).
-        c = c.cache()
-        caches.append(c)
+        c = cand.filter(F.col("url").isNotNull()).withColumn(
+            "seen_key", seen_key(F.col("url"))
+        )
 
         # URL-seen: Bloom prefilter (probable) + exact anti-join (exact).
         # The bitmap is synced from the full ledger once, at the
@@ -1140,25 +1132,28 @@ class CrawlEngine:
         self._resolve_bloom()
         if (
             not self._bloom_synced
-            and self._ledger_rows >= cfg.bloom_prefilter_min_ledger
+            and self.max_seq >= cfg.bloom_prefilter_min_ledger
         ):
             tick = _Tick(self.superstep)
             self.bloom.add_df(ledger_keys)
             self._bloom_synced = True
             tick("bloom_sync")
-        # pin BOTH join sides' shuffle width explicitly (repartition-by-
-        # num is AQE-coalesce-exempt and co-partitions the join, so no
-        # extra exchange): the level's slim keys compress far below the
-        # advisory partition size and AQE otherwise folds the anti-join
-        # — and every stage until the next explicit repartition — into
-        # one or two tasks.
-        n_aj = self._n_part(max(n_cand, self._ledger_rows))
         if self._bloom_synced:
+            # fresh ∪ maybe read the candidates twice
+            c = c.cache()
+            caches.append(c)
             maybe, fresh = self.bloom.filter_candidates(c)
-            # the ledger side is large here (that's why the Bloom is
-            # on): a shuffle-hash join keeps the build distributed
-            # instead of collecting ~all ledger keys to the driver for
-            # a broadcast every superstep
+            # pin BOTH join sides' shuffle width explicitly (repartition-
+            # by-num is AQE-coalesce-exempt and co-partitions the join,
+            # so no extra exchange): the level's slim keys compress far
+            # below the advisory partition size and AQE otherwise folds
+            # the anti-join — and every stage until the next explicit
+            # repartition — into one or two tasks. The ledger side is
+            # large here (that's why the Bloom is on): a shuffle-hash
+            # join keeps the build distributed instead of collecting
+            # ~all ledger keys to the driver for a broadcast every
+            # superstep.
+            n_aj = self._n_part(max(n_cand, self.max_seq))
             maybe_new = maybe.repartition(n_aj, F.col("url")).join(
                 ledger_keys.select("url")
                 .repartition(n_aj, F.col("url"))
@@ -1168,69 +1163,16 @@ class CrawlEngine:
             )
             c = fresh.unionByName(maybe_new)
         else:
-            # small-ledger regime: the ledger side fits the broadcast
-            # threshold, so the anti-join is exchange-free — do NOT pin
-            # widths here (a repartition would force two shuffles onto
-            # a join Catalyst turns into a broadcast)
+            # small-ledger regime: no hint and no pinned widths, so the
+            # session threshold picks the join. It does NOT pick a
+            # broadcast: each key fragment is a localCheckpoint that
+            # keeps the size estimate of the plan it came from, so the
+            # union estimates far above the threshold and this plans as
+            # a sort-merge join with a candidate-side exchange at every
+            # level (ROADMAP item 7).
             c = c.join(ledger_keys.select("url"), "url", "left_anti")
 
-        # url is canonical here -> JVM-side host extraction (no Python)
-        c = c.withColumn("host", url_host_col(F.col("url")))
-
-        too_deep = (
-            (F.lit(cfg.max_depth) >= 0) & (F.col("depth") > cfg.max_depth)
-            if cfg.max_depth >= 0
-            else F.lit(False)
-        )
-        filtered = F.lit(False)
-        for pat in cfg.exclude_patterns:
-            filtered = filtered | F.col("url").rlike(pat)
-        if cfg.include_patterns:
-            any_inc = F.lit(False)
-            for pat in cfg.include_patterns:
-                any_inc = any_inc | F.col("url").rlike(pat)
-            filtered = filtered | ~any_inc
-        if cfg.blocked_extensions or cfg.max_path_segments >= 0:
-            path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit(""))
-            if cfg.blocked_extensions:
-                # ExtensionReferenceFilter: extension = chars after the
-                # last '.' of the last path segment
-                ext = F.lower(F.regexp_extract(path, r"\.([^./]+)$", 1))
-                filtered = filtered | ext.isin(
-                    *[e.lower() for e in cfg.blocked_extensions]
-                )
-            if cfg.max_path_segments >= 0:
-                # SegmentCountUrlFilter: non-empty path segments
-                nseg = F.size(
-                    F.filter(F.split(path, "/"), lambda s: s != F.lit(""))
-                )
-                filtered = filtered | (nseg > cfg.max_path_segments)
-
-        # TOO_DEEP/FILTERED precede robots in the stage ladder, so rows
-        # they already rejected never need a pattern match — mask them
-        # out of the robots evaluation (a null host short-circuits the
-        # UDF to "allowed"). On a leaf level ~all candidates are
-        # TOO_DEEP: this turns the level's robots cost from
-        # O(candidates) to O(live).
-        live = ~too_deep & ~filtered
-        if cfg.honor_robots:
-            c = c.withColumn(
-                "robots_ok",
-                self._robots_udf(
-                    F.when(live, F.col("url")),
-                    F.when(live, F.col("host")),
-                ),
-            )
-        else:
-            c = c.withColumn("robots_ok", F.lit(True))
-
         return c.withColumn(
-            "outcome",
-            F.when(too_deep, "TOO_DEEP")
-            .when(filtered, "FILTERED")
-            .when(~F.col("robots_ok"), "ROBOTS_TXT")
-            .otherwise(F.lit(None).cast("string")),
-        ).withColumn(
             "status",
             F.when(F.col("outcome").isNull(), "QUEUED").otherwise("REJECTED"),
         ).select(
@@ -1375,7 +1317,6 @@ class CrawlEngine:
         }
         stats.update(q.sitemap_stats)
         self.max_seq += n_new
-        self._ledger_rows += n_new
         return stats
 
     # -- one superstep ------------------------------------------------------
@@ -1599,43 +1540,39 @@ class CrawlEngine:
         head: DataFrame | None,
         prem: DataFrame | None,
     ) -> DataFrame:
-        """Stage 3: fetch + parse the scheduled rows, add the rows that
-        skip the fetch (HEAD-skipped and PREMATURE, already in this
-        pass's shape), and drop out-of-scope links.
+        """Stage 3: fetch, parse and judge the scheduled rows, then add
+        the rows that skip the fetch (HEAD-skipped and PREMATURE,
+        already in this pass's shape).
 
-        With a fetcher, its generator form and the parse transformer run
-        as ONE mapInPandas: bodies are fetched and parsed in the same
-        Python worker pass and only the distilled parse fields
-        (canonical/robots-meta/checksum/links) return to the JVM.
-        Without one, the ``pages`` table (MockWebsite analog) is joined
-        and the parse pass follows (html crosses once, then is
-        dropped)."""
-        parse = self._parse
-        parse_names = {f.name for f in PARSE_FIELDS.fields}
-        fetch_cols = {"html", "http_status", "redirect_to", "link_header",
-                      "x_robots"}
+        With a fetcher, its generator form, the parse transformer and
+        the judge run as ONE mapInPandas, ``judge(parse(fetch(b)))``:
+        only the distilled parse fields return to the JVM, their links
+        already scoped, normalized, host-keyed and judged. Without
+        one, the ``pages`` table (MockWebsite analog) is joined first
+        (html crosses once, then is dropped)."""
+        parse, judge = self._parse, self._judge
+        replaced = {"html", "http_status", "redirect_to", "link_header",
+                    "x_robots", *JUDGED_FIELDS.names}
         out_schema = T.StructType(
-            [
-                f
-                for f in sched.schema.fields
-                if f.name not in fetch_cols and f.name not in parse_names
-            ]
+            [f for f in sched.schema.fields if f.name not in replaced]
             + [
                 T.StructField("http_status", T.IntegerType()),
                 T.StructField("redirect_to", T.StringType()),
             ]
-            + list(PARSE_FIELDS.fields)
+            + list(JUDGED_FIELDS.fields)
         )
         if self.fetcher is None:
-            fetched = sched.join(self.pages, "url", "left")
-            parsed = fetched.mapInPandas(parse, schema=out_schema)
+            src = sched.join(self.pages, "url", "left")
+
+            def kernel(batches):
+                return judge.pages(parse(batches))
         else:
-            fetch = self.fetcher.batches
+            src, fetch = sched, self.fetcher.batches
 
-            def fetch_and_parse(batches):
-                return parse(fetch(batches))
+            def kernel(batches):
+                return judge.pages(parse(fetch(batches)))
 
-            parsed = sched.mapInPandas(fetch_and_parse, schema=out_schema)
+        parsed = src.mapInPandas(kernel, schema=out_schema)
         parsed = parsed.withColumn("premature", F.lit(False)).withColumn(
             "head_unmod", F.lit(False)
         )
@@ -1646,80 +1583,6 @@ class CrawlEngine:
         for skipped in (head, prem):
             if skipped is not None:
                 parsed = parsed.unionByName(skipped)
-        return self._scope_links(parsed)
-
-    def _scope_links(self, parsed: DataFrame) -> DataFrame:
-        """Stay-on-domain/protocol/port/sitemap vs the referring page:
-        out-of-scope links are dropped at extraction, before the queue
-        pipeline (LinkExtractorStage.java:118-123;
-        GenericUrlScopeResolver). ``links_all_n`` keeps the unfiltered
-        count for the URLS_EXTRACTED metric."""
-        cfg = self.cfg
-        parsed = parsed.withColumn("links_all_n", F.size("links"))
-        scope_sitemap = (
-            cfg.stay_on_sitemap
-            and cfg.use_sitemaps
-            and self.sitemaps is not None
-        )
-        if not (
-            cfg.stay_on_domain
-            or cfg.stay_on_protocol
-            or cfg.stay_on_port
-            or scope_sitemap
-        ):
-            return parsed
-        if scope_sitemap:
-            # sitemapPresence == PRESENT for the referring site
-            # (GenericUrlScopeResolver.java:121-127, siteHasSitemap):
-            # the fixture dim lists exactly the hosts whose sitemap
-            # resolves, and resolution always precedes a host's fetches
-            presence = self.sitemaps.select("host").distinct().withColumn(
-                "__has_sm", F.lit(True)
-            )
-            parsed = parsed.join(presence, "host", "left")
-        ref_host = F.col("host")
-        ref_proto = F.lower(F.parse_url(F.col("url"), F.lit("PROTOCOL")))
-
-        def _res_port(ucol, proto):
-            auth = F.parse_url(ucol, F.lit("AUTHORITY"))
-            port = F.regexp_extract(F.coalesce(auth, F.lit("")), r":(\d+)$", 1)
-            return (
-                F.when(port != "", port.cast("int"))
-                .when(proto == "http", F.lit(80))
-                .when(proto == "https", F.lit(443))
-                .otherwise(F.lit(-1))
-            )
-
-        ref_port = _res_port(F.col("url"), ref_proto)
-
-        def _in_scope_url(ucol):
-            ok = F.lit(True)
-            lp = F.lower(F.parse_url(ucol, F.lit("PROTOCOL")))
-            if cfg.stay_on_protocol:
-                ok = ok & (lp == ref_proto)
-            if cfg.stay_on_domain:
-                lh = F.lower(F.parse_url(ucol, F.lit("HOST")))
-                same = lh == ref_host
-                if cfg.include_subdomains:
-                    same = same | lh.endswith(F.concat(F.lit("."), ref_host))
-                ok = ok & same
-            if cfg.stay_on_port:
-                ok = ok & (_res_port(ucol, lp) == ref_port)
-            if scope_sitemap:
-                # extracted links are never sitemap-listed records;
-                # on a site with a present sitemap they all drop
-                ok = ok & ~F.coalesce(F.col("__has_sm"), F.lit(False))
-            return ok
-
-        parsed = parsed.withColumn(
-            "links", F.filter("links", lambda l: _in_scope_url(l["url"]))
-        )
-        if cfg.post_import_links:
-            # same UrlScopeResolver pass per post-import URL
-            # (PostImportLinksStage.java:97-106)
-            parsed = parsed.withColumn(
-                "post_links", F.filter("post_links", _in_scope_url)
-            )
         return parsed
 
     def _outcomes(self, parsed: DataFrame) -> DataFrame:
@@ -1823,7 +1686,7 @@ class CrawlEngine:
             parsed = parsed.withColumn(
                 "links",
                 F.when(F.col("meta_dup"), F.lit(None).cast(
-                    PARSE_FIELDS["links"].dataType
+                    JUDGED_FIELDS["links"].dataType
                 )).otherwise(F.col("links")),
             )
 
@@ -1968,7 +1831,7 @@ class CrawlEngine:
         # checkpoints, the write-behind level/documents jobs) would
         # otherwise re-run Catalyst analysis+optimization over the full
         # superstep mega-plan (politeness, meta band, fetch+parse UDF,
-        # scope filters, two dedup windows, registry joins — hundreds
+        # two dedup windows, registry joins — hundreds
         # of expressions), a fixed multi-second driver cost PER ACTION
         # that dominates small levels and serializes the whole crawl
         # (measured: ~87 s serial floor at 6 supersteps, the scaling-
@@ -2018,77 +1881,62 @@ class CrawlEngine:
                 _delete_ops(parsed.filter(F.col("spoiled_del")))
             )
 
-        # redirect/canonical targets and post-import links carry a few
-        # % of the level's rows but, unioned, every downstream Arrow UDF
-        # node is pushed into each branch — coalesce them (narrow, no
-        # shuffle) so ~empty branches don't each spawn a full wave of
-        # tasks paying the fixed per-task Python round-trip. Ordering
-        # is unaffected: the queue pipeline sorts by explicit keys.
-        n_slim = max(1, self._n_part(self.queued_remaining) // 16)
-        redirect = F.col("outcome") == "REDIRECT"
-        targets = (
-            parsed.filter(_target_col(cfg))
-            .coalesce(n_slim)
-            .select(
-                F.when(redirect, F.col("redirect_to"))
-                .otherwise(F.col("canonical"))
-                .alias("raw_url"),
-                "depth",
+        # ONE explode of each row's judged candidates — its redirect or
+        # canonical target, its links and, for a committed doc, its
+        # post-import links (PostImportLinksStage: committer phase, after
+        # every regular link, whose positions HtmlLinkExtractor caps at
+        # 2048): no union branches for the anti-join to be pushed into.
+        def cands(arr, depth, trail, pos0=0):
+            return F.transform(
+                arr,
+                lambda c: F.struct(
+                    *[c[k].alias(k)
+                      for k in ("url", "raw_url", "host", "outcome")],
+                    depth.alias("depth"),
+                    trail.alias("trail"),
+                    (c["pos"] + pos0).alias("out_pos"),
+                ),
+            )
+
+        def explode(rows, arr):
+            return rows.select(
                 F.col("sched_ms").alias("avail_ms"),
-                F.concat(F.col("trail"), F.array(F.col("url"))).alias("trail"),
                 F.col("seq").alias("parent_seq"),
-                F.lit(0).alias("out_pos"),
-                redirect.alias("__redirect"),
-            )
+                F.explode(arr).alias("c"),
+            ).select("c.*", "avail_ms", "parent_seq")
+
+        no_trail = F.array().cast("array<string>")
+        target = cands(
+            F.array("target"),
+            F.col("depth"),
+            F.concat(F.col("trail"), F.array(F.col("url"))),
         )
-        links = (
-            parsed.filter(F.col("links").isNotNull())
-            .select(
-                "depth",
-                "sched_ms",
-                F.col("seq").alias("parent_seq"),
-                F.explode("links").alias("l"),
-            )
-            .select(
-                F.col("l.url").alias("raw_url"),
-                (F.col("depth") + 1).alias("depth"),
-                F.col("sched_ms").alias("avail_ms"),
-                F.array().cast("array<string>").alias("trail"),
-                "parent_seq",
-                F.col("l.pos").alias("out_pos"),
-            )
-        )
-        cand = targets.drop("__redirect").unionByName(links)
+        pieces = [
+            F.when(_target_col(cfg), target),
+            cands(F.col("links"), F.col("depth") + 1, no_trail),
+        ]
         if cfg.post_import_links:
-            # PostImportLinksStage: committer-phase queueing — only docs
-            # that reached the committer spawn these; out_pos places
-            # them after every regular link of the same parent (href
-            # positions are capped at 2048 by HtmlLinkExtractor)
-            post = (
-                parsed.filter(
-                    F.col("outcome").isin("NEW", "MODIFIED")
-                    & (F.size("post_links") > 0)
-                )
-                .coalesce(n_slim)
-                .select(
-                    "depth",
-                    "sched_ms",
-                    F.col("seq").alias("parent_seq"),
-                    F.posexplode("post_links").alias("pos", "raw_url"),
-                )
-                .select(
-                    "raw_url",
-                    (F.col("depth") + 1).alias("depth"),
-                    F.col("sched_ms").alias("avail_ms"),
-                    F.array().cast("array<string>").alias("trail"),
-                    "parent_seq",
-                    (F.lit(1_000_000) + F.col("pos")).alias("out_pos"),
+            pieces.append(
+                F.when(
+                    F.col("outcome").isin("NEW", "MODIFIED"),
+                    cands(F.col("post_links"), F.col("depth") + 1, no_trail,
+                          1_000_000),
                 )
             )
-            cand = cand.unionByName(post)
+        # the explodes read the parse checkpoint through a narrow
+        # coalesce to at most one partition per core. It keeps a
+        # one-partition checkpoint from reporting SinglePartition: the
+        # URL-seen and requeue joins would then have one-partition
+        # inputs on both sides, and with the checkpoints' inflated size
+        # estimates the planner shuffles both instead of one.
+        src = parsed.coalesce(self._parallelism)
+        cand = explode(
+            src, F.concat(*[F.coalesce(p, F.array()) for p in pieces])
+        )
         requeue = None
         if cfg.redirect_requeue:
-            redirects = targets.filter(F.col("__redirect")).drop("__redirect")
+            redirect = _target_col(cfg) & (F.col("outcome") == "REDIRECT")
+            redirects = explode(src.filter(redirect), target)
             requeue = self._requeue_redirects(parsed, redirects)
         return processed, docs, cand, requeue
 
@@ -2099,8 +1947,9 @@ class CrawlEngine:
         103-160): a redirect target already PROCESSED with a bad outcome
         and not in the current trail is queued once more via
         requeueEntry — BYPASSING the queue pipeline (so it skips the
-        URL-seen anti-join and filters); the rows come out already
-        evaluated. The sequential ledger lookup is reproduced by the
+        URL-seen anti-join and the judge's verdict); the rows come out
+        already evaluated, their target as the fetch+parse pass
+        normalized it. The sequential ledger lookup is reproduced by the
         event stream: the latest event before the redirecting source's
         own turn decides the target's state. _events() is the compact
         bad-target state (all historical turns < any live parent_seq by
@@ -2108,9 +1957,7 @@ class CrawlEngine:
         the turn comparison."""
         from ..functions.checksums import GOOD_OUTCOMES
 
-        rq = redirects.withColumn(
-            "url", self._norm_udf(F.col("raw_url"))
-        ).filter(F.col("url").isNotNull())
+        rq = redirects.filter(F.col("url").isNotNull())
         cur_ev = parsed.select(
             "url",
             F.col("seq").alias("turn"),
@@ -2127,6 +1974,7 @@ class CrawlEngine:
             F.first("trail").alias("trail"),
             F.first("out_pos").alias("out_pos"),
             F.first("raw_url").alias("raw_url"),
+            F.first("host").alias("host"),
             F.max_by(
                 F.struct(F.col("kind"), F.col("ev_outcome")),
                 F.col("turn"),
@@ -2142,8 +1990,8 @@ class CrawlEngine:
         )
         return matched.select(
             "url",
-            F.xxhash64(F.col("url")).alias("seen_key"),
-            url_host_col(F.col("url")).alias("host"),
+            seen_key(F.col("url")).alias("seen_key"),
+            "host",
             "depth",
             "avail_ms",
             "trail",
@@ -2377,7 +2225,6 @@ class CrawlEngine:
             "queued_remaining": self.queued_remaining,
             "orphans_done": self._orphans_done,
             "frontier_part": part,
-            "ledger_rows": self._ledger_rows,
             "branch_est": self._branch_est,
             "frontier_min_depth": self._frontier_min_depth,
             "max_sched_seen": self._max_sched_seen,

@@ -253,6 +253,53 @@ def test_engine_host_state_ratchet(spark, tmp_path):
     assert log_shuffled == log_default
 
 
+def test_step_queue_pipeline_has_no_python_udf(spark, tmp_path, monkeypatch):
+    """Every candidate of a step leaves the fetch+parse pass judged
+    (scoped, normalized, host-keyed, depth/filter/robots verdict), so
+    below the Bloom threshold a step's queue-pipeline checkpoint plan
+    holds no Arrow UDF node — on a crawl with robots rules, redirects
+    and cross-host links."""
+    import threading
+
+    from crawlspark.config import CrawlConfig
+    from crawlspark.plans.superstep import CrawlEngine
+    from crawlspark.sources.webgen import SiteParams, build_site
+
+    plans, caller = [], {}
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    qp, ckpt = CrawlEngine._queue_pipeline, frame.localCheckpoint
+
+    def traced_qp(self, *a, **k):
+        caller["tid"] = threading.get_ident()
+        try:
+            return qp(self, *a, **k)
+        finally:
+            caller.clear()
+
+    def traced_ckpt(self, *a, **k):
+        if caller.get("tid") == threading.get_ident():
+            plans.append(_plan(self))
+        return ckpt(self, *a, **k)
+
+    monkeypatch.setattr(CrawlEngine, "_queue_pipeline", traced_qp)
+    monkeypatch.setattr(frame, "localCheckpoint", traced_ckpt)
+    site = build_site(
+        SiteParams(seed=7, n_hosts=3, depth=2, branching=3, redirect_pct=0.2,
+                   cross_pct=0.4, n_seed_hosts=2)
+    )
+    eng = CrawlEngine(
+        spark, str(tmp_path / "w"), CrawlConfig(max_depth=2),
+        spark.createDataFrame(site.pages), spark.createDataFrame(site.robots),
+    )
+    eng.bootstrap([r["url"] for r in site.seeds.to_dict("records")])
+    plans.clear()  # bootstrap judges its seeds in the queue pipeline
+    stats = eng.run()
+    assert not eng._bloom_synced
+    assert len(plans) == len(stats) >= 2
+    for plan in plans:
+        assert "ArrowEvalPython" not in plan, plan
+
+
 def test_sampling_ops_are_shuffle_free_projections(spark):
     """stratified_sample / split_assign / scrub_pii claim
     "pure projection + filter, no shuffle" — pin it in the plan:

@@ -143,3 +143,34 @@ def test_empty_seed_bootstrap_ends_an_empty_level(spark, tmp_path, seeds):
     eng.flush()
     assert eng.levels.read().count() == 0
     assert (tmp_path / "w" / "checkpoint.json").exists()
+
+
+def test_manifest_with_retired_ledger_rows_key_resumes(spark, tmp_path):
+    """Manifests once carried a ``ledger_rows`` counter that always
+    equalled ``max_seq``. A manifest that still holds it resumes, and
+    the next manifest no longer writes it."""
+    import json
+
+    html = '<a href="http://h.x/a">a</a><a href="http://h.x/b">b</a>'
+    pages = spark.createDataFrame(
+        [
+            ("http://h.x/", 200, html, None),
+            ("http://h.x/a", 200, "<p/>", None),
+            ("http://h.x/b", 200, "<p/>", None),
+        ],
+        "url string, status int, html string, redirect_to string",
+    )
+    robots = spark.createDataFrame([("h.x", None)], "host string, body string")
+    cfg = CrawlConfig(max_depth=2, default_delay_ms=1000)
+    ckpt = tmp_path / "w" / "checkpoint.json"
+    eng = CrawlEngine(spark, str(tmp_path / "w"), cfg, pages, robots)
+    eng.bootstrap(["http://h.x/"])
+    eng.flush()
+    state = json.loads(ckpt.read_text())
+    ckpt.write_text(json.dumps({**state, "ledger_rows": state["max_seq"]}))
+    del eng
+    resumed = CrawlEngine.resume(spark, str(tmp_path / "w"), cfg, pages, robots)
+    resumed.run()
+    log = resumed.fetch_log().toPandas()
+    assert log["url"].tolist() == ["http://h.x/", "http://h.x/a", "http://h.x/b"]
+    assert "ledger_rows" not in json.loads(ckpt.read_text())

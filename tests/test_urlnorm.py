@@ -276,16 +276,18 @@ def test_default_pipeline_equivalence_property():
     check()
 
 
-def test_engine_ip_resolver_plumbing(spark):
+def test_engine_ip_resolver_plumbing(spark, tmp_path):
     """REPLACE_IP_WITH_DOMAIN_NAME on the engine surface: raises
     loudly without a resolver (never a silent no-op), and an injected
-    resolver flows through engine_normalizer AND the vectorized UDF
-    (the CrawlConfig.url_ip_resolver path)."""
-    import pytest
+    resolver reaches the executors inside the per-URL judge — for the
+    seed (judged when the queue pipeline starts) and for extracted
+    links (judged in the fetch+parse pass), whose robots verdict is
+    keyed by the resolved host. The crawl equals the oracle's (the
+    CrawlConfig.url_ip_resolver path)."""
+    from crawlspark.oracle.simulator import CrawlSimulator
+    from crawlspark.plans.superstep import CrawlEngine
 
-    from crawlspark.functions.urlnorm import custom_normalizer_udf
-
-    # local def: cloudpickle ships it by value inside the UDF closure
+    # local def: cloudpickle ships it by value inside the judge
     # (a test-module-level function would pickle by reference to a
     # module the executors cannot import)
     def _resolve_ip(host):
@@ -299,14 +301,37 @@ def test_engine_ip_resolver_plumbing(spark):
         fn("http://93.184.216.34/a") == "http://example.com/a"
     )
     assert fn("http://10.0.0.1/a") == "http://10.0.0.1/a"  # unresolved
-    from pyspark.sql import functions as F
 
-    udf = custom_normalizer_udf(ops, ip_resolver=_resolve_ip)
-    got = (
-        spark.createDataFrame(
-            [("http://93.184.216.34/a",)], "u string"
-        )
-        .select(udf(F.col("u")).alias("n"))
-        .collect()[0]["n"]
+    ip = "http://93.184.216.34"
+    html = f'<a href="{ip}/a">a</a> <a href="{ip}/private/b">b</a>'
+    pages = {
+        "http://example.com/": dict(status=200, html=html, redirect_to=None),
+        "http://example.com/a": dict(status=200, html="<p/>", redirect_to=None),
+    }
+    robots = {"example.com": "User-agent: *\nDisallow: /private"}
+    cfg = CrawlConfig(
+        max_depth=2,
+        default_delay_ms=100,
+        url_normalizations=DEFAULT_NORMALIZATIONS + ops,
+        url_ip_resolver=_resolve_ip,
     )
-    assert got == "http://example.com/a"
+    eng = CrawlEngine(
+        spark,
+        str(tmp_path / "w"),
+        cfg,
+        spark.createDataFrame(
+            [(u, p["status"], p["html"], None) for u, p in pages.items()],
+            "url string, status int, html string, redirect_to string",
+        ),
+        spark.createDataFrame(list(robots.items()), "host string, body string"),
+    )
+    eng.bootstrap([ip + "/"])
+    eng.run()
+    got = {r["url"]: r["outcome"] for r in eng.urlseen().collect()}
+    sim = CrawlSimulator(pages, robots, cfg).run([ip + "/"])
+    assert got == {r["url"]: r["outcome"] for r in sim.urlseen()}
+    assert got == {
+        "http://example.com/": "NEW",
+        "http://example.com/a": "NEW",
+        "http://example.com/private/b": "ROBOTS_TXT",
+    }
