@@ -192,7 +192,7 @@ def _read_seeds(args) -> list[str]:
 STORE_MEMBERS = (
     "ledger_levels",
     "documents",
-    "host_state",
+    "sitemap_hosts",
     "checkpoint.json",
 )
 

@@ -1,1 +1,2 @@
-"""Driver-side plans: the BFS superstep loop + snapshot table store."""
+"""Driver-side plans: the BFS superstep loop, its cross-level state
+and the append-only table store."""

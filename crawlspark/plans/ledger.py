@@ -1,82 +1,33 @@
-"""Snapshot-versioned parquet tables (Iceberg-style, zero-dependency).
+"""Append-only parquet tables (Iceberg-style, zero-dependency).
 
 The reference keeps crawl state in mutable KV stores (MVStore /
 Hazelcast CacheMaps, crawler/core/.../ledger/CrawlerEntryLedger.java).
-We invert that into immutable table *snapshots*: every superstep
-commits a new snapshot directory plus a JSON manifest, which gives us
+We invert that into immutable parts: every level appends one part per
+table (ledger level, documents, sitemap trigger hosts), and the
+engine's JSON manifest is swapped after them, which gives us
 
-* atomic per-superstep commits (write dir, then swap the manifest);
-* time travel (any prior superstep's state is still on disk) — the
-  ledger_a/ledger_b baseline flip of CrawlerEntryLedger.java:619-658
-  becomes "read last run's final snapshot";
-* exact resume: a killed run replays from the last manifest with
-  identical inputs (requeue semantics analog of
-  CrawlerEntryLedger.java:206-241,487-511).
+* atomic per-level commits (write the parts, then swap the manifest);
+* exact resume: a killed run drops the parts written after the last
+  manifest and replays from it with identical inputs (requeue
+  semantics analog of CrawlerEntryLedger.java:206-241,487-511);
+* the ledger_a/ledger_b baseline flip of CrawlerEntryLedger.java:
+  619-658 becomes "read last run's level parts" (``load_baseline``).
 
 On a cluster with a catalog this class is swapped for Iceberg
-(``df.writeTo(table)`` + snapshot ids); the engine only uses
-``write``/``read``/``latest_id``, which map 1:1.
+(``df.writeTo(table).append()``); the engine only uses
+``append``/``read``/``read_part``/``parts``/``truncate_after``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-class SnapshotTable:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    @property
-    def _manifest(self) -> str:
-        return os.path.join(self.path, "manifest.json")
-
-    def latest_id(self) -> int | None:
-        if not os.path.exists(self._manifest):
-            return None
-        with open(self._manifest) as f:
-            return json.load(f)["snapshot"]
-
-    def _snap_dir(self, sid: int) -> str:
-        return os.path.join(self.path, f"snap-{sid:06d}")
-
-    def write(self, df: DataFrame, snapshot_id: int) -> None:
-        """Commit a new snapshot: data first, manifest swap last."""
-        target = self._snap_dir(snapshot_id)
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        df.write.mode("overwrite").parquet(target)
-        tmp = self._manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"snapshot": snapshot_id}, f)
-        os.replace(tmp, self._manifest)  # atomic on POSIX
-
-    def read(self, snapshot_id: int | None = None) -> DataFrame | None:
-        sid = snapshot_id if snapshot_id is not None else self.latest_id()
-        if sid is None:
-            return None
-        return self.spark.read.parquet(self._snap_dir(sid))
-
-    def prune(self, keep_last: int = 3) -> None:
-        """Drop old snapshot dirs (keep the newest N for time travel)."""
-        sid = self.latest_id()
-        if sid is None:
-            return
-        for name in os.listdir(self.path):
-            if name.startswith("snap-"):
-                n = int(name.split("-")[1])
-                if n <= sid - keep_last:
-                    shutil.rmtree(os.path.join(self.path, name))
-
-
 class AppendTable:
-    """Append-only parquet table (ledger levels / documents / metrics).
+    """Append-only parquet table (ledger levels / documents / sitemap trigger hosts).
 
     An explicit ``schema`` makes empty parts and the no-parts case read
     back as an empty DataFrame instead of failing schema inference —

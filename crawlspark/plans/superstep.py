@@ -49,11 +49,11 @@ is a short list of stage methods, each taking and returning frames:
                     exact anti-join vs ledger → first-wins → dense seq)
                     and ONE merged collect of its counts with the
                     level's metrics
-  _end_level        ONE write-behind commit per level (bootstrap,
-                    superstep and orphan pass alike): level part +
-                    documents part + host-state snapshot + sitemap
-                    trigger hosts + checkpoint manifest (atomic swap
-                    last)
+  _end_level        folds the level into every cross-level state
+                    (plans/state.py), then ONE write-behind commit per
+                    level (bootstrap, superstep and orphan pass alike):
+                    level part + documents part + sitemap trigger hosts
+                    + checkpoint manifest (atomic swap last)
 
 The fetch slot is a ``fetcher`` carrying ``.batches`` — a generator
 over pandas batches resolving each URL in the fetch task itself (zero
@@ -80,14 +80,14 @@ Scale/efficiency notes:
 * ``seq`` assignment is one range-partition + per-partition offsets
   path (no global window); below ~150k candidates it runs with one
   partition, which skips the sampling and count jobs.
-* The URL-seen keys and the checksum registries are served from
-  in-memory fragments, one per level: the live key fragment is a lazy
-  projection of the level's checkpoint (the queue pipeline's output),
-  the registries are slim checkpoints of the level's committed rows.
-  Per-superstep broadcast builds never re-scan the ledger from disk;
-  columns like ``checksum`` ride in the ledger rows so no extra table
-  or write job exists for them. A resumed run rebuilds the fragments
-  from the level parts.
+* Every cross-level state (URL-seen keys, checksum registries, host
+  state, sitemap trigger hosts, redirect bad events) is a fold of
+  level rows (plans/state.py): the URL-seen keys and the registries
+  are lazy projections of the level's checkpoints, the host state and
+  the bad events one pool-checkpointed fold each. Per-superstep joins
+  never re-scan the ledger from disk; columns like ``checksum`` ride
+  in the ledger rows so no extra table or write job exists for them.
+  A resumed run rebuilds every state from the level parts.
 * Explicit ``repartition(n, key)`` pins the politeness and first-wins
   clustering width: those shuffles carry highly-compressible slim rows
   that AQE would coalesce into one partition, serializing the Python
@@ -133,7 +133,8 @@ from ..operators.dedup import BloomPrefilter, assign_seq, first_wins
 from ..operators.politeness import schedule_hosts
 from ..operators.robots_filter import build_robots_rules, host_delays
 from ..sources.docgen import make_document_udf
-from .ledger import AppendTable, SnapshotTable
+from .ledger import AppendTable
+from .state import engine_states, key_rows
 
 _TIMING = os.environ.get("CRAWLSPARK_TIMING", "") == "1"
 
@@ -228,7 +229,6 @@ DOCS_SCHEMA = T.StructType(
     ]
 )
 
-_EVENT_SCHEMA = "url string, turn long, kind string, ev_outcome string"
 
 def _recrawlable_col(cfg: CrawlConfig):
     """GenericRecrawlableResolver.java:98-244 as one Column over a
@@ -298,46 +298,6 @@ def _recrawlable_col(cfg: CrawlConfig):
     if cfg.recrawl_sitemap_check and cfg.recrawl_sitemap_support == "last":
         out = out.when(has_sm, sm_recrawl)
     return out.otherwise(F.lit(True))
-
-
-# -- a level's fragment rows ------------------------------------------------
-# One definition per in-memory fragment. The live path (_end_level)
-# applies them to the level's own frames, resume (_restore_parts) to
-# the committed level parts.
-
-
-def _key_rows(level: DataFrame) -> DataFrame:
-    """URL-seen keys (url, seen_key), unique per url: a PROCESSED row
-    is skipped, its QUEUED row already contributed the key."""
-    return level.filter(F.col("status") != "PROCESSED").select(
-        "url", "seen_key"
-    )
-
-
-def _registry_rows(level: DataFrame) -> DataFrame:
-    """Checksums of committed (NEW/MODIFIED) rows."""
-    return level.filter(F.col("outcome").isin("NEW", "MODIFIED")).select(
-        "checksum"
-    )
-
-
-def _meta_registry_rows(level: DataFrame) -> DataFrame:
-    """Meta checksums registered with the dedup service."""
-    return level.filter(F.col("meta_tracked")).select("meta_ck")
-
-
-def _event_rows(level: DataFrame) -> DataFrame:
-    """Ledger rows -> event rows for the redirect one-requeue rule: an
-    enqueue event (QUEUED/REJECTED row) happened at its parent's
-    processing turn; a process event (PROCESSED row) at its own seq."""
-    return level.select(
-        F.col("url"),
-        F.when(F.col("status") == "PROCESSED", F.col("seq"))
-        .otherwise(F.col("parent_seq"))
-        .alias("turn"),
-        F.col("status").alias("kind"),
-        F.col("outcome").alias("ev_outcome"),
-    )
 
 
 def _target_col(cfg: CrawlConfig):
@@ -550,7 +510,6 @@ class CrawlEngine:
         self.sitemap_hosts = AppendTable(
             spark, os.path.join(workdir, "sitemap_hosts"), schema="host string"
         )
-        self.host_state = SnapshotTable(spark, os.path.join(workdir, "host_state"))
         self.documents = AppendTable(
             spark, os.path.join(workdir, "documents"), schema=DOCS_SCHEMA
         )
@@ -572,27 +531,9 @@ class CrawlEngine:
         # from a manifest that predates it) — sizes a leaf level's
         # queue pipeline
         self._frontier_min_depth: int | None = None
-        self._key_parts: list[DataFrame] = []
-        self._registry_parts: list[DataFrame] = []
-        self._meta_registry_parts: list[DataFrame] = []
-        # Redirect one-requeue state: the COMPACT set of urls whose
-        # latest ledger event is a PROCESSED row with a bad outcome —
-        # the only urls the rule (WebImporterPipelineUtil.java:103-160)
-        # can fire on. Every historical event's turn is strictly below
-        # any live parent_seq (seqs are level-monotonic), so "latest
-        # event before the redirecting source's turn" needs only the
-        # per-url LATEST historical event; a url whose latest event is
-        # QUEUED/REJECTED or a good PROCESSED can never match, so it
-        # is dropped from the state. Folded incrementally per
-        # superstep (O(level + |bad|)); r2 instead unioned the FULL
-        # event history and scanned it every superstep — the measured
-        # crawl-loop regression.
-        self._bad_event_state: DataFrame | None = None
-        # deferred pool work from _end_level: the bitmap fold and the
-        # bad-event-state checkpoint both overlap the next superstep's
-        # parse and land at their first consumer
+        # deferred pool work from _end_level: the bitmap fold overlaps
+        # the level's commit and lands at its first consumer
         self._bloom_fut = None
-        self._bad_ev_fut = None
         # (host, [path,] xml) dim for SitemapResolution; hosts whose
         # sitemap has been resolved (once-per-host-ever,
         # SitemapResolutionStage.java:94-110 compute-if-absent)
@@ -613,14 +554,8 @@ class CrawlEngine:
             post_import=cfg.post_import_links,
             normalizer=self._judge.normalize,
         )
-        # hosts whose sitemap resolution already ran (== hosts ever
-        # QUEUED), kept as dataflow fragments like _key_parts — never a
-        # driver-side set, so 10^7+ hosts never ship through the driver.
-        # Durable through their own sidecar parts, written by the
-        # level's commit (_end_level) and read back in resume().
-        self._sitemap_host_parts: list[DataFrame] = []
         # write-behind committer: one ordered background thread owns
-        # durability (level/documents/host-state/manifest); the main
+        # durability (level/documents/sitemap hosts/manifest); the main
         # thread owns compute and hands the next superstep its inputs
         # in memory (localCheckpoints). FIFO single worker => manifests
         # land in superstep order.
@@ -634,9 +569,15 @@ class CrawlEngine:
         )
         self._pending = []
         self._frontier_mem: DataFrame | None = None
-        # every cross-superstep persisted frame (ledger checkpoints,
-        # host-state snapshots, sitemap triggers, orphan frames)
-        # registers here so release() can unpersist the lot
+        self._states = engine_states(
+            spark,
+            self._ckpt_pool,
+            cfg,
+            sitemaps=cfg.use_sitemaps and self.sitemaps is not None,
+        )
+        # every other cross-superstep persisted frame (queue and
+        # sitemap-trigger checkpoints, orphan frames) registers here
+        # so release() can unpersist the lot
         self._pinned: list[DataFrame] = []
         # persistent-RDD watermark: DataFrame.unpersist() is a NO-OP
         # for localCheckpoint storage (it only uncaches
@@ -647,7 +588,6 @@ class CrawlEngine:
         self._preexisting_rdd_ids = set(
             _persistent_rdd_ids(spark)
         )
-        self._host_state_mem: DataFrame | None = None
         self._metric_rows: list[tuple[str, str, int]] = []
         self._parallelism = spark.sparkContext.defaultParallelism
 
@@ -679,81 +619,37 @@ class CrawlEngine:
             "true" if rows > AQE_MIN_ROWS else "false",
         )
 
-    # -- in-memory ledger fragments ----------------------------------------
-    # The URL-seen anti-join and the checksum registry need the ledger
-    # every superstep; re-scanning all level parts from parquet makes
-    # each superstep O(ledger) in broadcast-build time. Instead each
-    # level contributes one slim in-memory fragment (url/seen_key;
-    # checksums of committed rows — see _end_level) and consumers union
-    # the fragment list — O(level) new work per superstep, no nested
-    # lineage. On a 10^10-URL cluster these fragments would not
-    # fit executor memory: there the anti-join runs against the Iceberg
-    # ledger bucketed by seen_key (bucket-pruned by the Bloom pass) —
-    # same dataflow, different storage tier.
+    # -- cross-level state ---------------------------------------------------
+    def _add_level(
+        self,
+        processed: DataFrame | None,
+        level: DataFrame,
+        sitemap_hosts: DataFrame | None,
+    ) -> None:
+        """Add one level to every cross-level state. Live (_end_level)
+        the frames are the level's checkpointed rows: its PROCESSED
+        rows (None when it fetched nothing), all its ledger rows and
+        its sitemap trigger hosts. On resume (resume()) they are one
+        read of the committed level parts and one of the sidecar
+        parts."""
+        frames = {
+            "processed": processed,
+            "level": level,
+            "sitemap_hosts": sitemap_hosts,
+        }
+        for st in self._states.values():
+            if frames[st.source] is not None:
+                st.add(frames[st.source])
 
-    def _restore_parts(self) -> None:
-        """Resume path: rebuild the fragments from the level parts'
-        parquet. (Sitemap resolved-state is NOT rebuilt from ledger
-        rows: the trigger-host set is persisted in its own sidecar
-        parts — see _sitemap_candidates — and restored in resume().)"""
-        events = []
-        for name in self.levels.parts():
-            pdf = self.levels.read_part(name[len("part-"):])
-            self._key_parts.append(_key_rows(pdf).cache())
-            self._registry_parts.append(_registry_rows(pdf).cache())
-            if self.cfg.metadata_dedup:
-                self._meta_registry_parts.append(
-                    _meta_registry_rows(pdf).cache()
-                )
-            if self.cfg.redirect_requeue:
-                events.append(_event_rows(pdf))
-        if self.cfg.redirect_requeue:
-            # one merge over all committed parts' events rebuilds the
-            # compact bad-target state (same fold the live path runs
-            # per level — resume replays identically)
-            ev = self._union(events, _EVENT_SCHEMA)
-            self._bad_event_state = self._merge_bad_events(
-                ev
-            ).localCheckpoint(eager=True)
-
-    def _union(self, frags: list[DataFrame], schema: str) -> DataFrame:
-        """Union of a fragment list; an empty ``schema`` frame when the
-        list is empty."""
-        if not frags:
-            return self.spark.createDataFrame([], schema)
-        out = frags[0]
-        for frag in frags[1:]:
-            out = out.unionByName(frag)
-        return out
-
-    def _ledger_keys(self) -> DataFrame:
-        """(url, seen_key) of every ledger row — union of the level
-        fragments (urls unique: PROCESSED rows are excluded, having
-        already contributed their QUEUED fragment)."""
-        return self._union(self._key_parts, "url string, seen_key long")
-
-    # The frontier and host state are handed over in memory by the
-    # previous level (_end_level); the parquet reads only serve a
-    # resumed run's first superstep.
+    # The frontier is handed over in memory by the previous level
+    # (_end_level); the parquet read only serves a resumed run's first
+    # superstep.
     def _frontier_df(self) -> DataFrame:
         if self._frontier_mem is not None:
             return self._frontier_mem
         return self.levels.read_part(self._frontier_part).filter(
             F.col("status") == "QUEUED"
         )
-
-    def _host_state_df(self) -> DataFrame | None:
-        if self._host_state_mem is not None:
-            return self._host_state_mem
-        return self.host_state.read()
-
-    def _checksum_registry(self) -> DataFrame:
-        """(checksum, ck_seen) from committed ledger rows — unique per
-        checksum by construction (a checksum commits at most once per
-        run; later hits become DUPLICATE). Served from the cached
-        fragments, independent of image payload size."""
-        base = self._union(self._registry_parts, "checksum string")
-        return base.select("checksum", F.lit(True).alias("ck_seen"))
 
     def _resolve_bloom(self) -> None:
         """Block on the deferred bitmap fold (submitted by _end_level)
@@ -762,61 +658,6 @@ class CrawlEngine:
         if fut is not None:
             self._bloom_fut = None
             fut.result()
-
-    def _resolve_bad_events(self) -> None:
-        """Land the deferred bad-event-state checkpoint (see
-        _end_level)."""
-        fut = self._bad_ev_fut
-        if fut is not None:
-            self._bad_ev_fut = None
-            self._bad_event_state = fut.result()
-
-    def _events(self) -> DataFrame:
-        """(url, turn, kind, ev_outcome) — the compact requeue state:
-        per url, the latest ledger event, kept only when it is a
-        bad-outcome PROCESSED (see __init__). Usually a handful of
-        rows; never O(ledger)."""
-        self._resolve_bad_events()
-        if self._bad_event_state is None:
-            return self.spark.createDataFrame([], _EVENT_SCHEMA)
-        return self._bad_event_state
-
-    def _merge_bad_events(self, new_events: DataFrame) -> DataFrame:
-        """Fold a batch of ledger events (url, turn, kind, ev_outcome)
-        into the compact redirect-requeue state: keep, per url, only
-        the latest event, and only when it is a PROCESSED with a bad
-        outcome. A later QUEUED event (a requeue) supersedes and drops
-        the url — reproducing the sequential ledger lookup's one-
-        requeue behavior with O(level + |bad|) work per superstep."""
-        from ..functions.checksums import GOOD_OUTCOMES
-
-        self._resolve_bad_events()
-        ev = new_events
-        if self._bad_event_state is not None:
-            ev = self._bad_event_state.unionByName(ev)
-        latest = ev.groupBy("url").agg(
-            F.max_by(
-                F.struct("turn", "kind", "ev_outcome"), F.col("turn")
-            ).alias("e")
-        )
-        return latest.filter(
-            (F.col("e.kind") == "PROCESSED")
-            & ~F.coalesce(
-                F.col("e.ev_outcome").isin(*GOOD_OUTCOMES), F.lit(False)
-            )
-        ).select(
-            "url",
-            F.col("e.turn").alias("turn"),
-            F.col("e.kind").alias("kind"),
-            F.col("e.ev_outcome").alias("ev_outcome"),
-        )
-
-    def _meta_registry(self) -> DataFrame:
-        """(meta_ck, mk_seen) of meta checksums tracked by the dedup
-        service in prior supersteps (MetadataDedupStage's
-        findOrTrackMetadata store, served like the content registry)."""
-        base = self._union(self._meta_registry_parts, "meta_ck string")
-        return base.select("meta_ck", F.lit(True).alias("mk_seen"))
 
     # -- checkpoint manifest (per-run lineage) -----------------------------
     @property
@@ -843,16 +684,16 @@ class CrawlEngine:
         fold mid-checkpoint logs spurious 'Block does not exist'
         storms and can fail a pool task)."""
         self._resolve_bloom()
-        self._resolve_bad_events()
+        for st in self._states.values():
+            st.land()
         for f in list(self._pending):
             f.result()
         self._pending.clear()
 
     def release(self) -> int:
-        """Unpersist every frame this engine pinned — localCheckpoint
-        fragments (URL-seen keys, registries, sitemap hosts, event
-        state, the in-memory frontier) — plus the textops operator
-        cache registry.
+        """Unpersist every frame this engine pinned — the cross-level
+        states, the queue and trigger checkpoints, the in-memory
+        frontier — plus the textops operator cache registry.
         Returns how many frames were released. For long-lived
         sessions / CLI teardown; the engine must not step() after.
         All released frames are performance pins, not data: the
@@ -860,18 +701,13 @@ class CrawlEngine:
         from ..operators.textops import release_caches
 
         self._resolve_bloom()
-        self._resolve_bad_events()
         n = release_caches()
-        frames: list = []
-        frames += self._pinned
-        frames += self._key_parts
-        frames += self._registry_parts
-        frames += self._meta_registry_parts
-        frames += self._sitemap_host_parts
+        frames = list(self._pinned)
+        for st in self._states.values():
+            frames += st.release()
         for dim in (
             self.baseline, self.pages, self.headers, self.rules,
-            self.delays, self.sitemaps, self._host_state_mem,
-            self._bad_event_state, self._frontier_mem,
+            self.delays, self.sitemaps, self._frontier_mem,
         ):
             if dim is not None:
                 frames.append(dim)
@@ -892,13 +728,7 @@ class CrawlEngine:
                 except Exception:
                     pass
         self._pinned = []
-        self._key_parts = []
-        self._registry_parts = []
-        self._meta_registry_parts = []
-        self._sitemap_host_parts = []
-        self._bad_event_state = None
         self._frontier_mem = None
-        self._host_state_mem = None
         return n
 
     @classmethod
@@ -935,16 +765,15 @@ class CrawlEngine:
         eng.documents.truncate_after(part)
         eng.levels.truncate_after(part)
         eng.sitemap_hosts.truncate_after(part)
-        eng._restore_parts()
-        if eng.sitemaps is not None and eng.sitemap_hosts.parts():
-            # restore the durable resolved-state exactly as recorded
-            eng._sitemap_host_parts = [eng.sitemap_hosts.read().cache()]
-        # pin the host-state snapshot the manifest recorded: a crash
-        # between the snapshot write and the manifest swap may have
-        # left a NEWER snapshot on disk that this run must not see
-        hs_id = state.get("host_state_snapshot")
-        if hs_id is not None:
-            eng._host_state_mem = eng.host_state.read(hs_id)
+        # every cross-level state is a fold of the committed parts:
+        # one checkpointed read of each rebuilds them all, through the
+        # same add as the live path (a manifest's retired
+        # host_state_snapshot key is ignored)
+        levels = eng.levels.read().localCheckpoint(eager=True)
+        hosts = None
+        if eng.sitemap_hosts.parts():
+            hosts = eng.sitemap_hosts.read().localCheckpoint(eager=True)
+        eng._add_level(levels, levels, hosts)
         return eng
 
     # -- bootstrap ---------------------------------------------------------
@@ -982,7 +811,7 @@ class CrawlEngine:
         passes the rows to ``_queue_stats``."""
         cfg = self.cfg
         self._set_shuffle(n_cand)
-        ledger = self._ledger_keys()
+        ledger = self._states["keys"].read()
         caches: list[DataFrame] = []
         c = self._evaluate_candidates(cand, ledger, n_cand, caches)
 
@@ -1224,23 +1053,17 @@ class CrawlEngine:
                 F.min("url").alias("rep_url"),
             )
         )
-        # resolved-hosts state is DATAFLOW, not a driver set: the
-        # anti-join runs against localCheckpointed host fragments (one
-        # per resolving superstep, the _key_parts pattern) so nothing
-        # O(hosts) ever ships through the driver — at 10^7+ hosts the
-        # old createDataFrame(sorted(set)) re-ship was the bound. AQE
-        # broadcasts the small side on its own. Durability rides the
-        # same write-behind commit as the level part (see _end_level).
-        if self._sitemap_host_parts:
-            known = self._union(self._sitemap_host_parts, "host string")
-            triggers = triggers.join(known, "host", "left_anti")
+        # resolved hosts: the sitemap_hosts state (see plans/state.py),
+        # which _end_level extends with this level's triggers
+        triggers = triggers.join(
+            self._states["sitemap_hosts"].read(), "host", "left_anti"
+        )
         trg = triggers.localCheckpoint(eager=True)
         self._pinned.append(trg)
         n_new = trg.count()
         if n_new == 0:
             return None
         hosts = trg.select("host")
-        self._sitemap_host_parts.append(hosts)
         triggers = trg
         sm = self.sitemaps
         if "path" not in sm.columns:
@@ -1345,15 +1168,17 @@ class CrawlEngine:
             return None
         tick = _Tick(self.superstep)
         self._raise_failed()
-        # land the previous superstep's deferred pool folds BEFORE any
-        # session-conf mutation: the bad-event fold shuffles (its
-        # first_wins Window reads spark.sql.* at execution), so letting
-        # _set_shuffle flip shuffle sizing / AQE mid-execution is a
-        # race. They were submitted when the previous level ended
-        # (_end_level), so they have already overlapped that level's
-        # background parquet writes — the win this deferral exists for.
+        # land the previous level's deferred pool folds BEFORE any
+        # session-conf mutation: the host-state and bad-event folds
+        # shuffle (their aggregations read spark.sql.* at execution),
+        # so letting _set_shuffle flip shuffle sizing / AQE
+        # mid-execution is a race. They were submitted when the
+        # previous level ended (_end_level), so they have already
+        # overlapped that level's background parquet writes — the win
+        # this deferral exists for.
         self._resolve_bloom()
-        self._resolve_bad_events()
+        for st in self._states.values():
+            st.land()
         self._set_shuffle(self.queued_remaining)
         # sched_ms/checksum are re-derived this superstep (QUEUED rows
         # carry nulls for both); http_status is the QUEUED placeholder
@@ -1463,7 +1288,7 @@ class CrawlEngine:
         sched = schedule_hosts(
             batch,
             self.delays,
-            self._host_state_df(),
+            self._states["host_state"].read(),
             cfg.default_delay_ms,
             schedules=cfg.delay_schedules,
             patterns=cfg.delay_patterns,
@@ -1664,7 +1489,7 @@ class CrawlEngine:
                     meta_eligible,
                     F.sum(F.when(meta_eligible, 1).otherwise(0)).over(wm),
                 ),
-            ).join(self._meta_registry(), "meta_ck", "left")
+            ).join(self._states["meta_registry"].read(), "meta_ck", "left")
             parsed = parsed.withColumn(
                 "meta_dup",
                 meta_eligible
@@ -1738,7 +1563,7 @@ class CrawlEngine:
                 registers, F.sum(F.when(registers, 1).otherwise(0)).over(w)
             ).otherwise(F.lit(None)),
         )
-        parsed = parsed.join(self._checksum_registry(), "checksum", "left")
+        parsed = parsed.join(self._states["registry"].read(), "checksum", "left")
 
         # spoiled strategy (GenericSpoiledReferenceStrategizer.java:69):
         # DELETE drops the committed doc now; GRACE_ONCE only when the
@@ -1951,10 +1776,10 @@ class CrawlEngine:
         already evaluated, their target as the fetch+parse pass
         normalized it. The sequential ledger lookup is reproduced by the
         event stream: the latest event before the redirecting source's
-        own turn decides the target's state. _events() is the compact
-        bad-target state (all historical turns < any live parent_seq by
-        seq monotonicity), so only current-level PROCESSED events need
-        the turn comparison."""
+        own turn decides the target's state. The bad_events state is
+        the compact bad-target state (all historical turns < any live
+        parent_seq by seq monotonicity), so only current-level
+        PROCESSED events need the turn comparison."""
         from ..functions.checksums import GOOD_OUTCOMES
 
         rq = redirects.filter(F.col("url").isNotNull())
@@ -1964,7 +1789,7 @@ class CrawlEngine:
             F.lit("PROCESSED").alias("kind"),
             F.col("outcome").alias("ev_outcome"),
         )
-        ev = self._events().unionByName(cur_ev)
+        ev = self._states["bad_events"].read().unionByName(cur_ev)
         j = rq.join(ev, "url", "inner").filter(
             F.col("turn") < F.col("parent_seq")
         )
@@ -2114,98 +1939,44 @@ class CrawlEngine:
         processed: DataFrame | None = None,
         docs: DataFrame | None = None,
     ) -> None:
-        """End a level — bootstrap, a superstep or the orphan pass: hand
-        the next superstep its inputs in memory, advance the counters,
-        and submit the level's durable writes as ONE write-behind commit.
+        """End a level — bootstrap, a superstep or the orphan pass: add
+        it to every cross-level state, hand the next superstep its
+        frontier in memory, advance the counters, and submit the
+        level's durable writes as ONE write-behind commit.
 
         ``q`` is the level's queue-pipeline result (None: the level
         queued nothing); its rows are an eager localCheckpoint with
-        exactly LEDGER_SCHEMA's columns, and the key fragment and the
-        next frontier are lazy projections of them. ``processed`` (a
-        superstep's PROCESSED rows, a projection of its parse
-        checkpoint) feeds the checksum registries and the host-state
-        fold; ``docs`` are the level's document ops.
+        exactly LEDGER_SCHEMA's columns, and the next frontier is a
+        lazy projection of them. ``processed`` is a superstep's
+        PROCESSED rows (a projection of its parse checkpoint); ``docs``
+        are the level's document ops.
 
         The next superstep depends only on in-memory state (frontier,
-        host-state checkpoint, key/registry fragments, Bloom bitmap,
-        driver counters). The level part, documents part, host-state
-        snapshot, sitemap trigger hosts and manifest go to a single
-        ordered committer thread: a crash before a manifest lands
-        replays that level identically from the previous manifest (a
-        crash before bootstrap's manifest leaves nothing to resume, as
-        before any commit). The commit reads only checkpointed rows, so
-        the background writes can never re-run a fetch, and they are
-        shuffle-free: the main thread's per-level shuffle-partition
-        changes cannot reach them."""
-        cfg = self.cfg
+        cross-level states, Bloom bitmap, driver counters). The level
+        part, documents part, sitemap trigger hosts and manifest go to
+        a single ordered committer thread: a crash before a manifest
+        lands replays that level identically from the previous
+        manifest (a crash before bootstrap's manifest leaves nothing to
+        resume, as before any commit). The commit reads only
+        checkpointed rows, so the background writes can never re-run a
+        fetch, and they are shuffle-free: the main thread's per-level
+        shuffle-partition changes cannot reach them."""
         if q is None:
             empty = self.spark.createDataFrame([], LEDGER_SCHEMA)
             q = _Queued(empty, None, None, {})
         new_rows = q.rows
-        # registry snapshots and the host-state fold are independent
-        # reads of the parse checkpoint: concurrent jobs on the pool
-        ckpts = {}
-        if processed is not None:
-            # premature rows never held a politeness slot — they must
-            # not advance the per-host clock. The fold keys by the
-            # politeness scope key (host for SITE; global/thread
-            # sentinel otherwise), stored in the table's `host` column.
-            from ..operators.politeness import scope_key_col
-
-            state = (
-                processed.filter(F.col("outcome") != "PREMATURE")
-                .groupBy(
-                    scope_key_col(
-                        cfg.delay_scope, cfg.delay_threads
-                    ).alias("host")
-                )
-                .agg(F.max("sched_ms").alias("last_sched_ms"))
-            )
-            prev_state = self._host_state_df()
-            if prev_state is not None:
-                state = (
-                    state.unionByName(prev_state)
-                    .groupBy("host")
-                    .agg(F.max("last_sched_ms").alias("last_sched_ms"))
-                )
-            ckpts["host_state"] = state
-            ckpts["registry"] = _registry_rows(processed)
-            if cfg.metadata_dedup:
-                ckpts["meta_registry"] = _meta_registry_rows(processed)
-        futs = {
-            k: self._ckpt_pool.submit(df.localCheckpoint, True)
-            for k, df in ckpts.items()
-        }
         self._pinned.append(new_rows)
-        frag = _key_rows(new_rows)
         if self._bloom_synced:
             # the bitmap isn't consulted again until the NEXT level's
             # queue pipeline — fold the new keys in on the pool and
             # only block there (_resolve_bloom)
-            self._bloom_fut = self._ckpt_pool.submit(self.bloom.add_df, frag)
-        self._key_parts.append(frag)
+            self._bloom_fut = self._ckpt_pool.submit(
+                self.bloom.add_df, key_rows(new_rows)
+            )
         level = new_rows
         if processed is not None:
             level = processed.unionByName(new_rows)
-        if cfg.redirect_requeue:
-            # fold this level's events (PROCESSED rows at their own seq;
-            # new QUEUED/REJECTED rows at their parent's turn) into the
-            # compact bad-target state — O(level + |bad|). The plan is
-            # built here; its checkpoint runs on the pool and lands at
-            # the next read (_events / _resolve_bad_events).
-            merged = self._merge_bad_events(_event_rows(level))
-            self._bad_ev_fut = self._ckpt_pool.submit(
-                merged.localCheckpoint, True
-            )
-        host_state = None
-        if processed is not None:
-            host_state = futs["host_state"].result()
-            self._host_state_mem = host_state
-            self._registry_parts.append(futs["registry"].result())
-            if cfg.metadata_dedup:
-                self._meta_registry_parts.append(
-                    futs["meta_registry"].result()
-                )
+        self._add_level(processed, level, q.sitemap_hosts)
         self._frontier_mem = new_rows.filter(F.col("status") == "QUEUED")
         self._frontier_part = part
         self._record_metrics(stats, part)
@@ -2217,9 +1988,8 @@ class CrawlEngine:
         )
         if part != "0-bootstrap":
             self.superstep += 1
-        sid = self.superstep
         ckpt_state = {
-            "superstep": sid,
+            "superstep": self.superstep,
             "max_seq": self.max_seq,
             "committed_total": self.committed_total,
             "queued_remaining": self.queued_remaining,
@@ -2245,22 +2015,11 @@ class CrawlEngine:
             self.levels.append(level, part)
             if docs is not None:
                 self.documents.append(docs, part)
-            if host_state is not None:
-                self.host_state.write(host_state, sid)
             if q.sitemap_hosts is not None:
-                # durable sitemap resolved-state: the trigger-host
-                # definition (a host's first candidate REACHING the
-                # stage marks it resolved, even if its rows all die at
-                # dedup afterwards — the oracle's and
-                # GenericSitemapResolver.java's semantics) is not
-                # recoverable from committed ledger rows, so it gets its
-                # own tiny sidecar part per resolving level (the
-                # reference likewise persists its resolvedSites cache in
-                # the store). Resume reads these parts back; truncation
-                # follows the level parts'.
+                # the sitemap_hosts state's durable form (see
+                # plans/state.py); truncation on resume follows the
+                # level parts'
                 self.sitemap_hosts.append(q.sitemap_hosts, part)
-            # a level without a host-state fold keeps the last snapshot
-            ckpt_state["host_state_snapshot"] = self.host_state.latest_id()
             self._write_ckpt(ckpt_state)
 
         self._raise_failed()
@@ -2277,7 +2036,7 @@ class CrawlEngine:
         self.flush()
         tick = _Tick(self.superstep)
         orphans = self.baseline.join(
-            self._ledger_keys().select("url"), "url", "left_anti"
+            self._states["keys"].read().select("url"), "url", "left_anti"
         ).cache()
         self._pinned.append(orphans)
         strategy = self.cfg.orphan_strategy

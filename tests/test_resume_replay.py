@@ -29,9 +29,9 @@ def _site():
     )
 
 
-def _kill_after_k_steps_and_resume(spark, tmp_path, k):
+def _kill_after_k_steps_and_resume(spark, tmp_path, k, **cfg_overrides):
     site = _site()
-    cfg = CrawlConfig(max_depth=3, default_delay_ms=1000)
+    cfg = CrawlConfig(max_depth=3, default_delay_ms=1000, **cfg_overrides)
     seeds = [r["url"] for r in site.seeds.to_dict("records")]
     pages = spark.createDataFrame(site.pages)
     robots = spark.createDataFrame(site.robots)
@@ -75,10 +75,20 @@ def _kill_after_k_steps_and_resume(spark, tmp_path, k):
         seeds
     )
     assert res_log["url"].tolist() == [r["url"] for r in sim.fetch_log]
+    assert res_log["scheduled_at_ms"].tolist() == [
+        r["scheduled_at_ms"] for r in sim.fetch_log
+    ]
 
 
 def test_kill_after_k_steps_resume_replays_identically(spark, tmp_path):
     _kill_after_k_steps_and_resume(spark, tmp_path, 2)
+
+
+def test_kill_after_k_steps_resume_under_thread_scope(spark, tmp_path):
+    """Resume rebuilds the politeness host state from the level parts
+    by scope key; under THREAD scope that key is the seq slot, not the
+    host."""
+    _kill_after_k_steps_and_resume(spark, tmp_path, 2, delay_scope="THREAD")
 
 
 def test_kill_after_bootstrap_resume_replays_identically(spark, tmp_path):
@@ -147,8 +157,9 @@ def test_empty_seed_bootstrap_ends_an_empty_level(spark, tmp_path, seeds):
 
 def test_manifest_with_retired_ledger_rows_key_resumes(spark, tmp_path):
     """Manifests once carried a ``ledger_rows`` counter that always
-    equalled ``max_seq``. A manifest that still holds it resumes, and
-    the next manifest no longer writes it."""
+    equalled ``max_seq``, and the id of a host-state snapshot that
+    resume read back. A manifest that still holds them resumes, equal
+    to the oracle, and the next manifest writes neither."""
     import json
 
     html = '<a href="http://h.x/a">a</a><a href="http://h.x/b">b</a>'
@@ -165,12 +176,26 @@ def test_manifest_with_retired_ledger_rows_key_resumes(spark, tmp_path):
     ckpt = tmp_path / "w" / "checkpoint.json"
     eng = CrawlEngine(spark, str(tmp_path / "w"), cfg, pages, robots)
     eng.bootstrap(["http://h.x/"])
+    assert eng.step() is not None
     eng.flush()
     state = json.loads(ckpt.read_text())
-    ckpt.write_text(json.dumps({**state, "ledger_rows": state["max_seq"]}))
+    ckpt.write_text(
+        json.dumps(
+            {**state, "ledger_rows": state["max_seq"], "host_state_snapshot": 1}
+        )
+    )
     del eng
     resumed = CrawlEngine.resume(spark, str(tmp_path / "w"), cfg, pages, robots)
     resumed.run()
     log = resumed.fetch_log().toPandas()
-    assert log["url"].tolist() == ["http://h.x/", "http://h.x/a", "http://h.x/b"]
-    assert "ledger_rows" not in json.loads(ckpt.read_text())
+    sim = CrawlSimulator(
+        {r["url"]: r.asDict() for r in pages.collect()}, {"h.x": None}, cfg
+    ).run(["http://h.x/"])
+    assert log["url"].tolist() == [r["url"] for r in sim.fetch_log]
+    assert log["scheduled_at_ms"].tolist() == [
+        r["scheduled_at_ms"] for r in sim.fetch_log
+    ]
+    assert len(log) == 3
+    manifest = json.loads(ckpt.read_text())
+    assert "ledger_rows" not in manifest
+    assert "host_state_snapshot" not in manifest

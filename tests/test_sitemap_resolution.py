@@ -209,3 +209,54 @@ def test_sitemap_resume_parity(spark, tmp_path):
     assert log["url"].tolist() == [r["url"] for r in sim.fetch_log]
     m = eng2.metrics_df().toPandas().groupby("event")["count"].sum().to_dict()
     assert m["SITEMAP_URLS"] == sim.metrics["SITEMAP_URLS"]
+
+
+def test_store_round_trip_keeps_sitemap_state(spark, tmp_path):
+    """The CLI's store members are exactly what a crawl leaves in its
+    workdir, so `clean` wipes it all and `storeexport`/`storeimport`
+    carry the sitemap trigger-host sidecar. A crawl stopped after one
+    step and round-tripped through the store resumes to the oracle's
+    fetch sequence and SITEMAP_URLS count."""
+    import os
+
+    from crawlspark.cli import STORE_MEMBERS, main
+
+    site = build_site(PARAMS)
+    seeds = [r["url"] for r in site.seeds.to_dict("records")]
+    sim = CrawlSimulator(
+        site.pages_dict(),
+        site.robots_dict(),
+        CFG,
+        sitemaps=site.sitemaps_dict(),
+    ).run(seeds)
+    wd = str(tmp_path / "crawl")
+
+    def engine(make):
+        return make(
+            spark,
+            wd,
+            CFG,
+            site.spark_pages_df(spark),
+            site.spark_robots_df(spark),
+            sitemaps_df=site.spark_sitemaps_df(spark),
+        )
+
+    eng = engine(CrawlEngine)
+    eng.bootstrap(seeds)
+    assert eng.step() is not None
+    eng.flush()
+    del eng
+    assert sorted(os.listdir(wd)) == sorted(STORE_MEMBERS)
+
+    arch = str(tmp_path / "arch")
+    assert main(["storeexport", "--workdir", wd, "--out", arch]) == 0
+    assert main(["clean", "--workdir", wd]) == 0
+    assert os.listdir(wd) == []
+    assert main(["storeimport", "--workdir", wd, "--from", arch]) == 0
+
+    eng2 = engine(CrawlEngine.resume)
+    eng2.run()
+    log = eng2.fetch_log().toPandas()
+    assert log["url"].tolist() == [r["url"] for r in sim.fetch_log]
+    m = eng2.metrics_df().toPandas().groupby("event")["count"].sum().to_dict()
+    assert m["SITEMAP_URLS"] == sim.metrics["SITEMAP_URLS"]
