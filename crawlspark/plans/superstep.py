@@ -110,6 +110,7 @@ Scale/efficiency notes:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass
@@ -136,6 +137,8 @@ from ..sources.docgen import make_document_udf
 from .ledger import AppendTable
 from .state import engine_states, key_rows
 
+log = logging.getLogger(__name__)
+
 _TIMING = os.environ.get("CRAWLSPARK_TIMING", "") == "1"
 
 # target rows per shuffle task when sizing a superstep's shuffles; the
@@ -152,21 +155,28 @@ SMALL_SEQ_ROWS = 150_000
 
 
 class _Tick:
-    """Opt-in per-phase wall timing (CRAWLSPARK_TIMING=1)."""
+    """Opt-in per-phase wall timing (CRAWLSPARK_TIMING=1). Each line
+    also counts the generated classes Spark compiled since the last
+    tick (its codegen cache misses), read with one py4j call."""
 
-    def __init__(self, superstep: int):
+    def __init__(self, spark: SparkSession, superstep: int):
         self.superstep = superstep
         self.t = time.time()
+        if _TIMING:
+            self._compiles = spark._jvm.org.apache.spark.metrics.source \
+                .CodegenMetrics.METRIC_COMPILATION_TIME()
+            self.compiled = self._compiles.getCount()
 
     def __call__(self, phase: str) -> None:
         if _TIMING:
             now = time.time()
+            compiled = self._compiles.getCount()
             print(
                 f"[timing] ss={self.superstep} {phase}: {now - self.t:.2f}s"
-                f" (abs={now:.2f})",
+                f" compiled={compiled - self.compiled} (abs={now:.2f})",
                 flush=True,
             )
-            self.t = now
+            self.t, self.compiled = now, compiled
 
 
 LEDGER_SCHEMA = T.StructType(
@@ -388,15 +398,14 @@ class _Queued(NamedTuple):
     sitemap_stats: dict
 
 
-def _persistent_rdd_ids(spark: SparkSession) -> dict:
-    """{rdd id: JVM RDD handle} for every currently-persisted RDD —
-    the hook release() needs because localCheckpoint storage is only
-    reachable through the RDD API, not DataFrame.unpersist()."""
-    out = {}
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
+    """Ids of every currently-persisted RDD — the hook release() needs
+    because localCheckpoint storage is only reachable through the RDD
+    API, not DataFrame.unpersist()."""
+    out = set()
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
     while it.hasNext():
-        e = it.next()
-        out[int(e._1())] = e._2()
+        out.add(int(it.next()))
     return out
 
 
@@ -582,12 +591,9 @@ class CrawlEngine:
         # persistent-RDD watermark: DataFrame.unpersist() is a NO-OP
         # for localCheckpoint storage (it only uncaches
         # InMemoryRelations), so release() additionally sweeps every
-        # persistent RDD created after this engine was built via the
-        # JVM RDD handle. Frames persisted BEFORE the engine are
-        # never touched.
-        self._preexisting_rdd_ids = set(
-            _persistent_rdd_ids(spark)
-        )
+        # persistent RDD created after this engine was built by its
+        # id. Frames persisted BEFORE the engine are never touched.
+        self._preexisting_rdd_ids = _persistent_rdd_ids(spark)
         self._metric_rows: list[tuple[str, str, int]] = []
         self._parallelism = spark.sparkContext.defaultParallelism
 
@@ -711,22 +717,31 @@ class CrawlEngine:
         ):
             if dim is not None:
                 frames.append(dim)
+        failed = 0
         for df in frames:
             try:
                 df.unpersist()
                 n += 1
             except Exception:
-                pass
+                failed += 1
         # sweep localCheckpoint storage (DataFrame.unpersist cannot
         # release it): every persistent RDD newer than the engine is
-        # engine-created checkpoint state
-        for rid, jrdd in _persistent_rdd_ids(self.spark).items():
-            if rid not in self._preexisting_rdd_ids:
-                try:
-                    jrdd.unpersist(False)
-                    n += 1
-                except Exception:
-                    pass
+        # engine-created checkpoint state. SparkContext.unpersistRDD
+        # frees the same blocks as RDD.unpersist without its
+        # per-RDD "was locally checkpointed" WARN.
+        sc = self.spark.sparkContext._jsc.sc()
+        rids = _persistent_rdd_ids(self.spark) - self._preexisting_rdd_ids
+        for rid in rids:
+            try:
+                sc.unpersistRDD(rid, False)
+                n += 1
+            except Exception:
+                failed += 1
+        if failed:
+            log.warning(
+                "release(): %d of %d frames and checkpoint RDDs failed "
+                "to unpersist", failed, len(frames) + len(rids),
+            )
         self._pinned = []
         self._frontier_mem = None
         return n
@@ -780,7 +795,7 @@ class CrawlEngine:
     def bootstrap(self, seed_urls: list[str]) -> None:
         """Seed enqueue (QueueBootstrapper analog; skipped on resume —
         QueueBootstrapper.java:74-79)."""
-        tick = _Tick(self.superstep)
+        tick = _Tick(self.spark, self.superstep)
         rows = [(u, 0, 0, [], -1, i) for i, u in enumerate(seed_urls)]
         cand = self.spark.createDataFrame(
             rows,
@@ -963,7 +978,7 @@ class CrawlEngine:
             not self._bloom_synced
             and self.max_seq >= cfg.bloom_prefilter_min_ledger
         ):
-            tick = _Tick(self.superstep)
+            tick = _Tick(self.spark, self.superstep)
             self.bloom.add_df(ledger_keys)
             self._bloom_synced = True
             tick("bloom_sync")
@@ -1166,7 +1181,7 @@ class CrawlEngine:
             and self._max_sched_seen >= cfg.max_crawl_duration_ms
         ):
             return None
-        tick = _Tick(self.superstep)
+        tick = _Tick(self.spark, self.superstep)
         self._raise_failed()
         # land the previous level's deferred pool folds BEFORE any
         # session-conf mutation: the host-state and bad-event folds
@@ -2034,7 +2049,7 @@ class CrawlEngine:
         # land the last level's pool folds before the queue pipeline
         # changes session settings
         self.flush()
-        tick = _Tick(self.superstep)
+        tick = _Tick(self.spark, self.superstep)
         orphans = self.baseline.join(
             self._states["keys"].read().select("url"), "url", "left_anti"
         ).cache()

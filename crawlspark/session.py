@@ -26,6 +26,23 @@ every DataFrame or Column API call walks the Python stack and makes
 such calls. The cost of turning it off: DataFrame error contexts lack
 the Python call site. Pass the key as ``"true"`` in ``extra_conf`` to
 get it back while debugging.
+
+Every generated Java class compiles once per session. Spark compiles
+its whole-stage and expression code with Janino (about 15 ms per class,
+plus the JIT work on each new class) and keeps the compiled classes in
+an LRU cache of ``spark.sql.codegen.cache.maxEntries`` entries, 100 by
+default. One crawl needs 134-138 distinct classes on the perfbench
+shapes and 185 on a 49-URL fixture crawl, so at 100 entries the LRU
+evicted each class before its next use and every superstep recompiled
+about 100 of them (387-419 compiles per ``crawl-deep`` crawl, repeat
+crawls of a session included). The cache holds 1000 entries, about 5x
+the measured working set. Whole-stage class names also embed the
+codegen stage id (``GeneratedIteratorForCodegenStageN``), so the same
+pipeline at a shifted position in a plan was a new source and missed
+the cache; ``spark.sql.codegen.useIdInClassName`` is off. With both, the
+first ``crawl-deep`` crawl of a session (seed 42, after perfbench's
+warm-up) compiles 147 classes and a repeat crawl 0, against 387, 419
+and 418 with the defaults.
 """
 
 from __future__ import annotations
@@ -151,6 +168,10 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         # no per-call origin capture (see the module docstring)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # compile each generated class once per session (see the
+        # module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # LOCAL MODE ONLY: put shuffle/spill scratch on tmpfs. Even with
     # the sort-based writer, shuffle index/data creates + renames on

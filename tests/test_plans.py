@@ -394,3 +394,37 @@ def test_default_driver_mem_fits_the_machine():
     gib = int(mem[:-1]) * 2**30
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert 2**30 <= gib <= min(phys, 48 * 2**30)
+
+
+def test_repeat_crawl_compiles_no_class(spark, tmp_path):
+    """Every generated class compiles once per session: a repeat of
+    the same crawl finds all of its whole-stage and expression classes
+    in Spark's codegen cache, so it makes no Janino compile. With the
+    default 100-entry cache (or stage ids in class names) every crawl
+    recompiles hundreds of classes."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.plans.superstep import CrawlEngine
+    from crawlspark.sources.webgen import SiteParams, build_site, make_fetcher
+
+    p = SiteParams(seed=7, n_hosts=4, n_seed_hosts=4, depth=2, branching=3)
+    site = build_site(p)
+    seeds = [r["url"] for r in site.seeds.to_dict("records")]
+    robots = spark.createDataFrame(site.robots)
+    compiles = spark._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def crawl(name):
+        eng = CrawlEngine(
+            spark, str(tmp_path / name), CrawlConfig(max_depth=2), None,
+            robots, fetcher=make_fetcher(p),
+        )
+        eng.bootstrap(seeds)
+        eng.run()
+        fetched = eng.fetch_log().count()
+        eng.release()
+        return fetched
+
+    first = crawl("first")
+    before = compiles.getCount()
+    assert crawl("repeat") == first > len(seeds)
+    assert compiles.getCount() - before == 0
